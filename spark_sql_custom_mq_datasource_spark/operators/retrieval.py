@@ -38,6 +38,7 @@ from pyspark.sql.window import Window
 
 from ..plans.registry import register
 from ..plans.util import session_key, tp, work_dir
+from ..sources.manifest import replace_dir
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -493,7 +494,7 @@ def append_bm25_index(docs_batch: DataFrame, path: str) -> None:
     # the last append is of unknown state; rebuild stats from the postings
     # (one aggregation) or re-run the append idempotently after pruning
     # the batch's files". On a real lake the swap is the catalog's atomic
-    # manifest commit; os.replace is the single-node stand-in.
+    # manifest commit; replace_dir is the single-node stand-in.
     rows = folded.collect()
     staged = os.path.join(path, "stats_staged")
     spark.createDataFrame(rows, "n_docs long, avgdl double, dlsum long").write.mode(
@@ -504,13 +505,7 @@ def append_bm25_index(docs_batch: DataFrame, path: str) -> None:
     ).write.mode("append").partitionBy("bkt").parquet(
         os.path.join(path, "postings")
     )
-    import shutil
-
-    retired = os.path.join(path, "stats_retired")
-    shutil.rmtree(retired, ignore_errors=True)
-    os.replace(os.path.join(path, "stats"), retired)
-    os.replace(staged, os.path.join(path, "stats"))
-    shutil.rmtree(retired, ignore_errors=True)
+    replace_dir(staged, os.path.join(path, "stats"))
 
 
 @register(

@@ -43,6 +43,7 @@ from pyspark.sql.window import Window
 
 from ..plans.registry import register
 from ..plans.util import materialize_small, session_key, t, tp, work_dir
+from ..sources.manifest import replace_dir
 
 TOPK = 5
 N_QUERIES = 5  # fixture queries: vec_id < 5
@@ -4076,11 +4077,7 @@ def pq_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     post_stats = stat_map(current)
     if post_stats != pre_stats:
         raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
+    replace_dir(staged, current)
 
     # probe the refreshed index; RAISE unless bit-identical to a full
     # re-encode against (cci_f, frozen codebooks)
@@ -4953,11 +4950,7 @@ def sq8_grid_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
 
     if stat_map(current) != pre_stats:
         raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
+    replace_dir(staged, current)
 
     # probe the refreshed index; RAISE unless bit-identical to a
     # from-scratch rebuild on the fresh grid
@@ -5552,11 +5545,7 @@ def sq8_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame
 
     if stat_map(current) != pre_stats:
         raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
+    replace_dir(staged, current)
 
     # probe the refreshed index; RAISE unless bit-identical to a full
     # re-encode against (fresh cells, frozen grid)
@@ -5894,11 +5883,7 @@ def sq8_residual_grid_refresh_readout(
 
     if stat_map(current) != pre_stats:
         raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
+    replace_dir(staged, current)
 
     # probe the refreshed index; RAISE unless bit-identical to a
     # from-scratch rebuild on the fresh grid
@@ -6211,12 +6196,7 @@ def sq8_dim_columnar_refresh_readout(
             .partitionBy("bucket")
             .parquet(staged_d)
         )
-        target = _os.path.join(root, f"d={d}")
-        retired = _os.path.join(state, f"retired_d{d}")
-        _shutil.rmtree(retired, ignore_errors=True)
-        _os.replace(target, retired)
-        _os.replace(staged_d, target)
-        _shutil.rmtree(retired, ignore_errors=True)
+        replace_dir(staged_d, _os.path.join(root, f"d={d}"))
 
     unmoved_post = {
         d: stat_map(_os.path.join(root, f"d={d}")) for d in unmoved_pre
@@ -6303,9 +6283,9 @@ def _sq8_tombstones(emb: DataFrame) -> DataFrame:
 
 def _sq8_delete_family(spark: SparkSession, sf_dir: str, residual: bool):
     """Closures for the delete pair over ONE persisted layout (raw or
-    residual — the _sq8_family pattern, so the MOR and APPLY bodies are
-    written once): (codes_path, encode survivors fn, serving-scan fn,
-    probed labels, queries)."""
+    residual — the index_lifecycle Layout pattern, so the MOR and APPLY
+    bodies are written once): (codes_path, encode survivors fn,
+    serving-scan fn, probed labels, queries)."""
     from types import SimpleNamespace
 
     if residual:
@@ -6442,11 +6422,7 @@ def _ann_delete_apply_body(
     )
     if stat_map(current) != pre_stats:
         raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
+    replace_dir(staged, current)
 
     rows_after = spark.read.parquet(current).count()
     if rows_before - rows_after != n_tombstoned_rows:
@@ -7510,11 +7486,7 @@ def q_bq_threshold_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     bq_pack(emb, t_f).write.mode("overwrite").parquet(staged)
     if stat_map(current) != pre_stats:
         raise AssertionError("live index files changed before the swap")
-    retired = current + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(current, retired)
-    _os.replace(staged, current)
-    _shutil.rmtree(retired, ignore_errors=True)
+    replace_dir(staged, current)
 
     probe = bq_serve(
         spark.read.parquet(current), bq_query_bits(spark, sf_dir, t_f)

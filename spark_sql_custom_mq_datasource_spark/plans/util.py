@@ -105,6 +105,16 @@ def _fixture_bytes(sf_dir: str, name: str) -> int:
     return total
 
 
+def _env_int(name: str, default: int | None = None) -> int | None:
+    """An integer probe knob from the environment; unset, empty or
+    malformed reads as ``default``, so a typo falls back instead of
+    failing every tp() query."""
+    try:
+        return int(os.environ[name])
+    except (KeyError, ValueError):
+        return default
+
+
 def tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Fixture table repartitioned for compute-heavy per-row work
     (shingling, hashing, vector math).
@@ -128,14 +138,13 @@ def tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     key = (session_key(spark), sf_dir, name, "tp")
     if key not in _cache:
         df = t(spark, sf_dir, name)
-        per_task = int(
-            os.environ.get("SPARK_GRAFT_TP_BYTES_PER_TASK", TP_BYTES_PER_TASK)
-        )
+        per_task = _env_int("SPARK_GRAFT_TP_BYTES_PER_TASK", TP_BYTES_PER_TASK)
         need = -(-_fixture_bytes(sf_dir, name) // max(per_task, 1))
         target = min(spark.sparkContext.defaultParallelism, max(1, need))
-        probe = os.environ.get("SPARK_GRAFT_TP_WIDTH")  # probe knob, see tools/probe_tp_width.py
-        if probe:
-            target = min(spark.sparkContext.defaultParallelism, max(1, int(probe)))
+        # probe knob, see tools/probe_tp_width.py
+        probe = _env_int("SPARK_GRAFT_TP_WIDTH")
+        if probe is not None:
+            target = min(spark.sparkContext.defaultParallelism, max(1, probe))
         if df.rdd.getNumPartitions() < target:
             df = df.repartition(target)
         _cache[key] = df

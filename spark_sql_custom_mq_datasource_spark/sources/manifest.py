@@ -42,6 +42,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -112,6 +113,37 @@ def _commit(table: str, manifest: dict, base_version: int | None) -> int:
         f.write(str(version))
     os.replace(tmp, vfile)  # the atomic commit point
     return version
+
+
+def replace_dir(staged: str, live: str) -> None:
+    """Swap the fully-written directory ``staged`` in at ``live`` — the
+    directory-level twin of the pointer commit above, shared by every
+    index compaction, refresh and delete-apply.
+
+    Two renames: ``live`` -> ``_<name>.retired`` beside it, then
+    ``staged`` -> ``live``. The leading underscore keeps the retired copy
+    out of Spark's partition discovery when ``live`` is itself a
+    partition directory (``d=N``). If the second rename fails, the
+    retired directory is renamed back, so ``live`` still holds the old
+    files. A crash between the renames leaves ``live`` missing and the
+    retired copy intact; the next swap at the same path restores it on
+    entry before doing anything else."""
+    live = os.path.normpath(live)
+    parent, name = os.path.split(live)
+    retired = os.path.join(parent, f"_{name}.retired")
+    if not os.path.exists(live) and os.path.exists(retired):
+        os.replace(retired, live)
+    shutil.rmtree(retired, ignore_errors=True)
+    had_live = os.path.exists(live)
+    if had_live:
+        os.replace(live, retired)
+    try:
+        os.replace(staged, live)
+    except BaseException:
+        if had_live:
+            os.replace(retired, live)
+        raise
+    shutil.rmtree(retired, ignore_errors=True)
 
 
 def write_snapshot(df: DataFrame, table: str, partition_col: str) -> int:

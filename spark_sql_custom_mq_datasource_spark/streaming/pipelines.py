@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from ..operators.index_lifecycle import committed_batch_dirs, compact_batch_root
 from ..plans.registry import register
 from ..plans.util import stream_inbox, t, work_dir
 
@@ -2116,6 +2117,7 @@ def _register_stream_gram_mv() -> None:
         )
 
         N_BUCKETS = 16
+        COUNTS_SCHEMA = "gram string, cnt bigint"  # the MV's bucket files
         gram = F.explode(
             F.expr(
                 "transform(sequence(0, size(split(trim(text), ' ')) - 2),"
@@ -2173,7 +2175,7 @@ def _register_stream_gram_mv() -> None:
                     if e["bkt"] in overlap
                 ]
                 existing = (
-                    spark.read.schema("gram string, cnt bigint")
+                    spark.read.schema(COUNTS_SCHEMA)
                     .parquet(*paths)
                     .withColumn("bkt", bkt_of)
                 )
@@ -2228,7 +2230,7 @@ def _register_stream_gram_mv() -> None:
         import os as _os
 
         mf = read_manifest(table)
-        counts = spark.read.schema("gram string, cnt bigint").parquet(
+        counts = spark.read.schema(COUNTS_SCHEMA).parquet(
             *[_os.path.join(table, e["path"]) for e in mf["files"]]
         )
         return (
@@ -2685,30 +2687,6 @@ def docs_quartile_inbox(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def committed_batch_dirs(root: str, below: int | None = None) -> list[str]:
-    """Batch-keyed subdirs (``bNNNNN``) of an incremental-dedup index root
-    that carry a _SUCCESS marker (optionally only those from batches
-    earlier than ``below``). Unmarked subdirs are half-written crashed
-    attempts and stray non-batch entries are skipped."""
-    import os as _os
-
-    if not _os.path.isdir(root):
-        return []
-    out = []
-    for d in sorted(_os.listdir(root)):
-        if not d.startswith("b"):
-            continue
-        try:
-            bid = int(d[1:])
-        except ValueError:
-            continue  # stray non-batch entry (e.g. a temp dir)
-        if below is not None and bid >= below:
-            continue
-        if _os.path.exists(_os.path.join(root, d, "_SUCCESS")):
-            out.append(_os.path.join(root, d))
-    return out
-
-
 def _dedup_index_dirs(state: str) -> tuple[str, str, str]:
     import os as _os
 
@@ -2801,56 +2779,24 @@ def compact_dedup_index(
     "what's missing" 3): every trigger appends one ``bNNNNN`` subdir per
     root (bands/sets/surv), so at daily-ingest cadence the index becomes
     the small-files problem the manifest world already solves with
-    compact_append_table. Compaction rewrites each root's committed
-    batch subdirs into ONE subdir carrying the MAX compacted batch id in
-    ``coalesce_to`` files, then swaps it in with the staged-rename
-    pattern of the incremental BM25 index (operators/retrieval.py
-    append_bm25_index): build under <root>_new/, retire the old root,
-    rename the new one in. The probe path is UNCHANGED:
-    committed_batch_dirs(root, below=b) sees the compacted dir exactly
-    when it saw any constituent (its id is the max compacted id, and
-    batch ids keep growing monotonically past it). Row content is
-    unchanged, so every future probe is bit-identical — pinned by
-    q_dedup_index_compact below. Runs in a maintenance window (no
-    concurrent fold), like compact_append_table; os.replace is the
-    single-node stand-in for a catalog's atomic manifest commit. At
-    scale, size ``coalesce_to`` by bytes (compact_append_table's
-    self-sizing rule), not a constant.
+    compact_append_table. Each root is compacted by compact_batch_root
+    (operators/index_lifecycle.py), the primitive every grown index
+    shares: committed subdirs rewritten into ONE subdir carrying the MAX
+    compacted batch id, swapped in with replace_dir. The probe path is
+    UNCHANGED: committed_batch_dirs(root, below=b) sees the compacted
+    dir exactly when it saw any constituent. Row content is unchanged,
+    so every future probe is bit-identical — pinned by
+    q_dedup_index_compact below.
 
     Returns {root_name: (parquet_files_before, parquet_files_after)}."""
     import os as _os
-    import shutil as _shutil
 
-    def _nfiles(dirs: list[str]) -> int:
-        return sum(
-            1 for d in dirs for f in _os.listdir(d) if f.endswith(".parquet")
+    return {
+        root_name: compact_batch_root(
+            spark, _os.path.join(state, root_name), coalesce_to=coalesce_to
         )
-
-    out: dict[str, tuple[int, int]] = {}
-    for root_name in ("bands", "sets", "surv"):
-        root = _os.path.join(state, root_name)
-        dirs = committed_batch_dirs(root)
-        if len(dirs) <= 1:
-            n = _nfiles(dirs)
-            out[root_name] = (n, n)
-            continue
-        files_before = _nfiles(dirs)
-        max_id = max(int(_os.path.basename(d)[1:]) for d in dirs)
-        new_root = root + "_new"
-        _shutil.rmtree(new_root, ignore_errors=True)
-        (
-            spark.read.parquet(*dirs)
-            .coalesce(coalesce_to)
-            .write.mode("overwrite")
-            .parquet(_os.path.join(new_root, f"b{max_id:05d}"))
-        )
-        retired = root + "_retired"
-        _shutil.rmtree(retired, ignore_errors=True)
-        _os.replace(root, retired)
-        _os.replace(new_root, root)
-        _shutil.rmtree(retired, ignore_errors=True)
-        out[root_name] = (files_before, _nfiles(committed_batch_dirs(root)))
-    return out
+        for root_name in ("bands", "sets", "surv")
+    }
 
 
 def _dedup_incremental_oracle() -> str:
@@ -3836,1992 +3782,9 @@ _register_stream_pq_encode()
 
 
 # --------------------------------------------------------------------------
-# PQ incremental index maintenance (round 13, VERDICT r12 missing 2 /
-# next-round item 4): the streaming encode above proves arriving vectors
-# CODE correctly; this query proves they LAND durably — each micro-batch's
-# (vec_id, m, code) rows are appended to the persisted code table as a
-# batch-keyed, label-partitioned subdir (the MinHash incremental-index
-# pattern: OVERWRITE into bNNNNN ⇒ foreachBatch redelivery replaces its
-# own prior output, never double-appends), and an ADC probe over the
-# GROWN index (base build ∪ streamed deltas) must equal the probe over
-# the one-shot batch-built index — the shared _PQ_PROBE_ORACLE.
-#
-# Scale: per trigger the fold is O(batch) — a stateless encode against
-# literal codebooks plus one partitioned parquet append; nothing rescans
-# the existing index. Probes read base + deltas (per-dir partition
-# pruning still applies — every subdir is label-partitioned); compaction
-# of accumulated deltas into the base is the same staged-rename machinery
-# the dedup index already runs (compact_dedup_index) and at daily-ingest
-# cadence it would run in the same maintenance window.
+# The persisted ANN indexes' grow -> compact -> monitor lifecycle (PQ,
+# residual PQ, SQ8, residual SQ8, BQ) lives in operators/index_lifecycle.py.
 # --------------------------------------------------------------------------
-
-
-def _grow_inbox(spark: SparkSession, sf_dir: str, n_slices: int = 3) -> str:
-    """The ONE deterministic grow-fold inbox every index-grow query
-    replays (PQ, residual PQ, SQ8, residual SQ8): the odd-vec_id
-    remainder of the embeddings fixture as ``n_slices`` one-file
-    micro-batches (slice i = vec_id % (2·n) == 2i+1). Hoisted from four
-    per-query builder closures sharing one cache key (ADVICE r15 item 4):
-    the spec string now pins the slicing rule AND the column set, so
-    editing the builder without bumping the spec cannot serve stale
-    fixture content to the other consumers."""
-    import os as _os
-    import shutil as _shutil
-
-    from ..plans.util import cached_fixture_dir
-
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    spec = (
-        f"pq-grow-v2 slices={n_slices} odd-ids cols={','.join(emb.columns)}"
-    )
-
-    def build(inbox: str) -> None:
-        scratch = _os.path.join(inbox, "_scratch")
-        for i in range(n_slices):
-            part = _os.path.join(scratch, f"slice{i}")
-            (
-                emb.where(F.col("vec_id") % (2 * n_slices) == 2 * i + 1)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part)
-            )
-            src = next(f for f in _os.listdir(part) if f.endswith(".parquet"))
-            _shutil.copyfile(
-                _os.path.join(part, src),
-                _os.path.join(inbox, f"{i:02d}.parquet"),
-            )
-        _shutil.rmtree(scratch, ignore_errors=True)
-
-    return cached_fixture_dir("pq_grow", sf_dir, spec, build)
-
-
-def _register_stream_pq_index_grow() -> None:
-    from ..operators.similarity import (
-        _PQ_PROBE_ORACLE,
-        PQ_QUERIES,
-        _pq_subvectors,
-        adc_probe_topk,
-        pq_assign,
-        pq_code_struct_array,
-        pq_index_path,
-    )
-
-    @register(
-        "q_stream_pq_index_grow",
-        _PQ_PROBE_ORACLE,
-        doc="STREAMING PQ index maintenance: a base index (even vec_ids, "
-        "batch-encoded) grows by foreachBatch appends of the streamed "
-        "remainder — frozen-codebook encode, batch-keyed OVERWRITE into "
-        "label-partitioned subdirs (redelivery-idempotent, exercised "
-        "inline), then an ADC probe over base ∪ deltas — which must "
-        "equal the probe over the one-shot batch-built index (shared "
-        "oracle with q_pq_persisted_probe).",
-    )
-    def q_stream_pq_index_grow(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-
-        cb_path, _, _ = pq_index_path(spark, sf_dir)
-        cdf = spark.read.parquet(cb_path)
-        cents = cdf.collect()  # bounded: M·K rows
-        by_m: dict[int, list] = {}
-        for r in cents:
-            by_m.setdefault(r["m"], []).append((r["code"], list(r["cu"])))
-        codes_expr = pq_code_struct_array(by_m)
-
-        emb = t(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding", "label"
-        )
-        state = work_dir("pq_grow_index")
-        codes_root = _os.path.join(state, "codes")
-
-        # base index: even vec_ids, encoded batch-side once (pq_assign —
-        # the same argmin the expression encoder mirrors)
-        base = emb.where(F.col("vec_id") % 2 == 0)
-        (
-            pq_assign(_pq_subvectors(base.select("vec_id", "embedding")), cdf)
-            .join(base.select("vec_id", "label"), "vec_id")
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(_os.path.join(codes_root, "b00000"))
-        )
-
-        # the remainder arrives as 3 deterministic id-sliced micro-batches
-        inbox = _grow_inbox(spark, sf_dir)
-
-        delivered: list[int] = []
-
-        def fold(bdf: DataFrame, batch_id: int) -> None:
-            delivered.append(int(batch_id))
-            (
-                bdf.select("vec_id", F.explode(codes_expr).alias("mc"), "label")
-                .select(
-                    "vec_id",
-                    F.col("mc.m").alias("m"),
-                    F.col("mc.code").alias("code"),
-                    "label",
-                )
-                .write.mode("overwrite")
-                .partitionBy("label")
-                .parquet(_os.path.join(codes_root, f"b{batch_id + 1:05d}"))
-            )
-
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>, label int")
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(inbox)
-        )
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", _ckpt("pq_grow"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("stream_pq_index_grow did not drain")
-        finally:
-            q.stop()
-
-        # Redelivery exercise (env-gated default ON, the incremental-dedup
-        # discipline): re-fold the LAST DELIVERED batch's content under its
-        # recorded batch_id (max(delivered), the dedup/phash folds'
-        # pattern — hardcoding n_slices-1 would fabricate a spurious batch
-        # if availableNow ever grouped files; ADVICE r13 item 2) —
-        # batch-keyed OVERWRITE must leave the probe unchanged.
-        if delivered and _os.environ.get("SPARK_GRAFT_REDELIVERY_EXERCISE") != "0":
-            last = max(delivered)
-            redelivered = spark.read.schema(
-                "vec_id long, embedding array<float>, label int"
-            ).parquet(_os.path.join(inbox, f"{last:02d}.parquet"))
-            fold(redelivered, last)
-
-        grown = _read_grown_codes(spark, codes_root)
-
-        anchor_ids = [
-            r["vec_id"]
-            for r in emb.select("vec_id")
-            .orderBy("vec_id")
-            .limit(PQ_QUERIES)
-            .collect()
-        ]
-        qsv = _pq_subvectors(
-            emb.where(F.col("vec_id").isin(anchor_ids)).select(
-                "vec_id", "embedding"
-            )
-        ).select(F.col("vec_id").alias("qid"), "m", F.col("sv").alias("qsv"))
-        return adc_probe_topk(qsv, cdf, grown)
-
-
-_register_stream_pq_index_grow()
-
-
-# --------------------------------------------------------------------------
-# PQ delta compaction (round 13): the maintenance story the grow query
-# above accumulates toward — at daily-ingest cadence the code table
-# becomes one bNNNNN subdir per trigger, the same small-files problem the
-# incremental dedup index solves with compact_dedup_index. Compaction
-# rewrites all committed batch subdirs into ONE subdir carrying the MAX
-# compacted batch id (still label-partitioned — per-cell partition
-# pruning is preserved through compaction), swaps it in with the
-# staged-rename pattern, and the query PROVES the probe is bit-identical
-# before and after while the parquet file count shrank. Read-out = the
-# ADC probe over the compacted index, value-checked by the shared
-# _PQ_PROBE_ORACLE — compaction is oracle-checked end-to-end, not just
-# asserted.
-# --------------------------------------------------------------------------
-
-
-def _build_grown_pq_layout(
-    spark: SparkSession, sf_dir: str, state_name: str
-) -> tuple[str, DataFrame, DataFrame]:
-    """The grown RAW-PQ index layout built batch-side — base b00000 (even
-    vec_ids, batch pq_assign) + 3 delta subdirs (odd-id thirds, the
-    frozen-codebook expression encoder: the grow fold's on-disk layout
-    without the stream). Shared by the compaction query and the index
-    health monitor; returns (codes_root, codebook DF, embeddings DF)."""
-    import os as _os
-
-    from ..operators.similarity import (
-        _pq_subvectors,
-        pq_assign,
-        pq_code_struct_array,
-        pq_index_path,
-    )
-
-    cb_path, _, _ = pq_index_path(spark, sf_dir)
-    cdf = spark.read.parquet(cb_path)
-    cents = cdf.collect()  # bounded: M·K rows
-    by_m: dict[int, list] = {}
-    for r in cents:
-        by_m.setdefault(r["m"], []).append((r["code"], list(r["cu"])))
-    codes_expr = pq_code_struct_array(by_m)
-
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    state = work_dir(state_name)
-    codes_root = _os.path.join(state, "codes")
-    base = emb.where(F.col("vec_id") % 2 == 0)
-    (
-        pq_assign(_pq_subvectors(base.select("vec_id", "embedding")), cdf)
-        .join(base.select("vec_id", "label"), "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(_os.path.join(codes_root, "b00000"))
-    )
-    # 3 deltas, encoded batch-side with the SAME expression encoder the
-    # streaming fold runs (grow's layout without the stream)
-    for i in range(3):
-        (
-            emb.where(F.col("vec_id") % 6 == 2 * i + 1)
-            .select("vec_id", F.explode(codes_expr).alias("mc"), "label")
-            .select(
-                "vec_id",
-                F.col("mc.m").alias("m"),
-                F.col("mc.code").alias("code"),
-                "label",
-            )
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(_os.path.join(codes_root, f"b{i + 1:05d}"))
-        )
-    return codes_root, cdf, emb
-
-
-def _register_pq_index_compact() -> None:
-    from ..operators.similarity import (
-        _PQ_PROBE_ORACLE,
-        PQ_QUERIES,
-        _pq_subvectors,
-        adc_probe_topk,
-    )
-
-    @register(
-        "q_pq_index_compact",
-        _PQ_PROBE_ORACLE,
-        doc="atomic small-file compaction of the incrementally-grown PQ "
-        "code table: base + 3 batch-keyed delta subdirs (the grow fold's "
-        "layout, built batch-side) are rewritten into ONE committed "
-        "label-partitioned subdir keeping the max batch id (staged-rename "
-        "swap, the dedup-index pattern); the query raises unless the ADC "
-        "probe is bit-identical across the swap and the parquet file "
-        "count shrank; the probe itself is value-checked by the oracle "
-        "shared with q_pq_persisted_probe.",
-    )
-    def q_pq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-
-        codes_root, cdf, emb = _build_grown_pq_layout(
-            spark, sf_dir, "pq_compact_index"
-        )
-
-        def read_grown() -> DataFrame:
-            dirs = committed_batch_dirs(codes_root)
-            out = None
-            for d in dirs:
-                part = spark.read.parquet(d)
-                out = part if out is None else out.unionByName(part)
-            return out
-
-        def nfiles() -> int:
-            return sum(
-                1
-                for root, _, files in _os.walk(codes_root)
-                for fn in files
-                if fn.endswith(".parquet")
-            )
-
-        anchor_ids = [
-            r["vec_id"]
-            for r in emb.select("vec_id")
-            .orderBy("vec_id")
-            .limit(PQ_QUERIES)
-            .collect()
-        ]
-        qsv = _pq_subvectors(
-            emb.where(F.col("vec_id").isin(anchor_ids)).select(
-                "vec_id", "embedding"
-            )
-        ).select(F.col("vec_id").alias("qid"), "m", F.col("sv").alias("qsv"))
-
-        # bounded snapshot (Q·topk rows) BEFORE the swap
-        pre = sorted(map(tuple, adc_probe_topk(qsv, cdf, read_grown()).collect()))
-        files_before = nfiles()
-
-        dirs = committed_batch_dirs(codes_root)
-        max_id = max(int(_os.path.basename(d)[1:]) for d in dirs)
-        new_root = codes_root + "_new"
-        _shutil.rmtree(new_root, ignore_errors=True)
-        (
-            read_grown()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(_os.path.join(new_root, f"b{max_id:05d}"))
-        )
-        retired = codes_root + "_retired"
-        _shutil.rmtree(retired, ignore_errors=True)
-        _os.replace(codes_root, retired)
-        _os.replace(new_root, codes_root)
-        _shutil.rmtree(retired, ignore_errors=True)
-
-        files_after = nfiles()
-        if files_after >= files_before:
-            raise AssertionError(
-                f"compaction did not shrink files: {files_before} -> {files_after}"
-            )
-        post_df = adc_probe_topk(qsv, cdf, read_grown())
-        post = sorted(map(tuple, post_df.collect()))
-        if post != pre:
-            raise AssertionError("probe changed across PQ index compaction")
-        return post_df
-
-
-_register_pq_index_compact()
-
-
-# --------------------------------------------------------------------------
-# PQ index health monitor (round 14, VERDICT r13 missing 1): the grown
-# index accumulates vectors against FROZEN codebooks and coarse centroids;
-# nothing so far measures when recall decays or cells go hot — the middle
-# leg of the grow → monitor → retrain loop. This query applies the
-# q_hard_negative_ann_sampled discipline to the grown PQ index: a FIXED-N
-# anchor sample (bottom-N by md5(vec_id) — a deterministic pseudo-random
-# draw both engines order identically, NOT the serving anchors) gets an
-# exact-top-k leg, the ADC probe over the grown index is scored against
-# it, and the per-cell occupancy skew is read straight off the code
-# table's m=0 rows. Output is one row: sampled recall hits, the hottest
-# cell and its corpus share, and the max-over-average cell occupancy —
-# the two numbers a production vector store alarms on (recall decay ⇒
-# codebooks stale; occupancy skew ⇒ coarse quantizer stale; the retrain
-# thresholds are documented in SCALING.md).
-#
-# Scale: the exact leg is O(N · corpus scan) with constant N; the ADC leg
-# is the standard bounded probe; occupancy is one |cells|-row aggregate
-# over the m=0 slice of the code table — the monitor never touches raw
-# embeddings except for the N sampled queries' subvectors.
-# --------------------------------------------------------------------------
-
-PQ_HEALTH_SAMPLE = 8
-
-
-def _register_pq_index_health() -> None:
-    from ..operators.similarity import (
-        _SQL_PQ_L2,
-        PQ_ITERS,
-        PQ_SUBDIM,
-        PQ_TOPK,
-        _pq_oracle_chain,
-        _sql_pq_msum,
-    )
-
-    hs = PQ_HEALTH_SAMPLE
-    msum = _sql_pq_msum()
-    oracle = (
-        _pq_oracle_chain()
-        + f""",
-    anch AS (SELECT vec_id FROM (SELECT DISTINCT vec_id FROM sv)
-             ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {hs}),
-    qd AS MATERIALIZED (
-      SELECT q.vec_id AS qid, c.m, c.code,
-             {_SQL_PQ_L2.format(a="q.sv", b="c.cu", n=PQ_SUBDIM)} AS dd
-      FROM sv q JOIN c{PQ_ITERS} c ON q.m = c.m
-      WHERE q.vec_id IN (SELECT vec_id FROM anch)
-    ),
-    adcd AS (
-      SELECT qd.qid, a.vec_id, qd.m AS m, qd.dd AS dd
-      FROM afinal a JOIN qd ON a.m = qd.m AND a.code = qd.code
-      WHERE a.vec_id <> qd.qid
-    ),
-    adc AS (SELECT qid, vec_id, {msum} AS dist FROM adcd GROUP BY qid, vec_id),
-    adct AS (SELECT qid, vec_id FROM (
-      SELECT qid, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist ASC, vec_id) AS rk
-      FROM adc) WHERE rk <= {PQ_TOPK}),
-    exd AS (
-      SELECT q.vec_id AS qid, v.vec_id, q.m AS m,
-             {_SQL_PQ_L2.format(a="q.sv", b="v.sv", n=PQ_SUBDIM)} AS dd
-      FROM sv q JOIN sv v ON q.m = v.m AND v.vec_id <> q.vec_id
-      WHERE q.vec_id IN (SELECT vec_id FROM anch)
-    ),
-    ex AS (SELECT qid, vec_id, {msum} AS dist FROM exd GROUP BY qid, vec_id),
-    ext AS (SELECT qid, vec_id FROM (
-      SELECT qid, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist ASC, vec_id) AS rk
-      FROM ex) WHERE rk <= {PQ_TOPK}),
-    rec AS (SELECT CAST(COUNT(*) AS BIGINT) AS recall_hits
-            FROM ext e JOIN adct a ON e.qid = a.qid AND e.vec_id = a.vec_id),
-    occ AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS n
-            FROM embeddings GROUP BY label),
-    occs AS (SELECT MAX(n) AS mx, CAST(SUM(n) AS BIGINT) AS tot,
-                    CAST(COUNT(*) AS BIGINT) AS ncells FROM occ),
-    hot AS (SELECT label AS hottest_cell FROM occ
-            ORDER BY n DESC, label LIMIT 1)
-    SELECT CAST({hs} AS INT) AS n_sampled,
-           r.recall_hits,
-           CAST({hs * PQ_TOPK} AS BIGINT) AS recall_possible,
-           CAST(h.hottest_cell AS INT) AS hottest_cell,
-           CAST(o.ncells AS INT) AS n_cells,
-           CAST(floor(o.mx * 1048576.0 / o.tot + 0.5) AS BIGINT)
-             AS hottest_share_q20,
-           CAST(floor(o.mx * o.ncells * 1048576.0 / o.tot + 0.5) AS BIGINT)
-             AS cell_max_over_avg_q20
-    FROM rec r, occs o, hot h
-    """
-    )
-
-    @register(
-        "q_pq_index_health",
-        oracle,
-        doc=f"PQ index HEALTH MONITOR over the grown index (base + delta "
-        "subdirs): sampled exact recall@k — a fixed-"
-        f"{PQ_HEALTH_SAMPLE} md5-ordered anchor draw (the "
-        "q_hard_negative_ann_sampled discipline) scored exact-vs-ADC — "
-        "plus per-cell occupancy skew off the code table's m=0 rows "
-        "(hottest-cell share and max-over-average, Q20); the middle leg "
-        "of the grow→monitor→retrain loop, with the retrain thresholds "
-        "documented in SCALING.md.",
-    )
-    def q_pq_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import math as _math
-
-        from pyspark.storagelevel import StorageLevel
-
-        from ..operators.similarity import (
-            PQ_TOPK as _topk,
-        )
-        from ..operators.similarity import (
-            _pq_fixed_order_dist,
-            _pq_l2,
-            _pq_subvectors,
-            adc_probe_topk,
-        )
-
-        codes_root, cdf, emb = _build_grown_pq_layout(
-            spark, sf_dir, "pq_health_index"
-        )
-        grown = _read_grown_codes(spark, codes_root)
-
-        # the monitored anchor sample: deterministic pseudo-random draw
-        anchor_ids = [
-            r["vec_id"]
-            for r in emb.select("vec_id")
-            .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-            .limit(PQ_HEALTH_SAMPLE)
-            .collect()
-        ]
-        sv = (
-            _pq_subvectors(emb.select("vec_id", "embedding"))
-            .repartition(spark.sparkContext.defaultParallelism)
-            .persist(StorageLevel.DISK_ONLY)
-        )
-        q = sv.where(F.col("vec_id").isin(anchor_ids)).select(
-            F.col("vec_id").alias("qid"), "m", F.col("sv").alias("qsv")
-        )
-        adct = adc_probe_topk(q, cdf, grown).select(
-            "qid", F.col("neighbor_id").alias("vec_id")
-        )
-        topw = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("vec_id"))
-        ext = (
-            F.broadcast(q)
-            .join(sv, "m")
-            .where(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid", "vec_id", "m", _pq_l2(F.col("qsv"), F.col("sv")).alias("dd")
-            )
-            .groupBy("qid", "vec_id")
-            .agg(_pq_fixed_order_dist())
-            .withColumn("rk", F.row_number().over(topw))
-            .where(F.col("rk") <= _topk)
-            .select("qid", "vec_id")
-        )
-        recall_hits = ext.join(adct, ["qid", "vec_id"]).count()
-        sv.unpersist()
-
-        # occupancy straight off the INDEX (one row per vector at m=0)
-        occ = (
-            grown.where(F.col("m") == 0)
-            .groupBy("label")
-            .agg(F.count("*").cast("bigint").alias("n"))
-        )
-        occ_rows = occ.collect()  # bounded: |cells| rows
-        mx = max(int(r["n"]) for r in occ_rows)
-        tot = sum(int(r["n"]) for r in occ_rows)
-        ncells = len(occ_rows)
-        hottest = min((-int(r["n"]), int(r["label"])) for r in occ_rows)[1]
-        row = (
-            PQ_HEALTH_SAMPLE,
-            int(recall_hits),
-            PQ_HEALTH_SAMPLE * _topk,
-            hottest,
-            ncells,
-            int(_math.floor(mx * 1048576.0 / tot + 0.5)),
-            int(_math.floor((mx * ncells) * 1048576.0 / tot + 0.5)),
-        )
-        return spark.createDataFrame(
-            [row],
-            "n_sampled int, recall_hits bigint, recall_possible bigint, "
-            "hottest_cell int, n_cells int, hottest_share_q20 bigint, "
-            "cell_max_over_avg_q20 bigint",
-        )
-
-
-_register_pq_index_health()
-
-
-# --------------------------------------------------------------------------
-# RESIDUAL PQ index maintenance twins (round 14, VERDICT r13 missing 2):
-# streaming growth and delta compaction existed only for the RAW-PQ index;
-# the residual index — the layout a production store actually ships — was
-# build-once. Same machinery, residual arithmetic: the ingest encode is
-# residualize-against-the-frozen-INT-cell-centroids then argmin on the
-# frozen residual codebooks (pq_residual_encode — bit-identical to the
-# one-shot build in pq_residual_index_path), the landing is batch-keyed
-# OVERWRITE into label-partitioned subdirs (redelivery-idempotent), and
-# the probe over base ∪ deltas must equal the persisted residual serving
-# probe — the shared residual serve oracle.
-# --------------------------------------------------------------------------
-
-
-def _register_stream_pq_residual_index_grow() -> None:
-    from ..operators.similarity import (
-        PQ_QUERIES,
-        _ivfpq_residual_serve_oracle,
-        _pq_subvectors,
-        pq_residual_encode,
-        pq_residual_index_path,
-        residual_probe_topk,
-    )
-
-    @register(
-        "q_stream_pq_residual_index_grow",
-        _ivfpq_residual_serve_oracle(),
-        doc="STREAMING growth of the RESIDUAL PQ index: a base index "
-        "(even vec_ids, batch residual-encode) grows by foreachBatch "
-        "appends of the streamed remainder — residualize against the "
-        "frozen INT cell centroids, argmin on the frozen residual "
-        "codebooks, batch-keyed OVERWRITE into label-partitioned subdirs "
-        "(redelivery-idempotent, exercised inline) — then the residual "
-        "ADC probe over base ∪ deltas must equal the persisted serving "
-        "probe (shared oracle with q_ann_ivf_pq_residual_persisted).",
-    )
-    def q_stream_pq_residual_index_grow(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import os as _os
-
-        cb_path, _, cells_path = pq_residual_index_path(spark, sf_dir)
-        rcdf = spark.read.parquet(cb_path)
-        cells = spark.read.parquet(cells_path)
-
-        emb = t(spark, sf_dir, "embeddings").select(
-            "vec_id", "embedding", "label"
-        )
-        state = work_dir("pq_res_grow_index")
-        codes_root = _os.path.join(state, "codes")
-
-        # base index: even vec_ids, residual-encoded batch-side once
-        (
-            pq_residual_encode(emb.where(F.col("vec_id") % 2 == 0), cells, rcdf)
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(_os.path.join(codes_root, "b00000"))
-        )
-
-        # the remainder arrives as the SAME deterministic 3-slice inbox
-        # the raw grow query replays (one cached fixture, two consumers)
-        inbox = _grow_inbox(spark, sf_dir)
-
-        delivered: list[int] = []
-
-        def fold(bdf: DataFrame, batch_id: int) -> None:
-            delivered.append(int(batch_id))
-            (
-                pq_residual_encode(bdf, cells, rcdf)
-                .write.mode("overwrite")
-                .partitionBy("label")
-                .parquet(_os.path.join(codes_root, f"b{batch_id + 1:05d}"))
-            )
-
-        stream = (
-            spark.readStream.schema("vec_id long, embedding array<float>, label int")
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(inbox)
-        )
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", _ckpt("pq_res_grow"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("stream_pq_residual_index_grow did not drain")
-        finally:
-            q.stop()
-
-        # Redelivery exercise (env-gated default ON): re-fold the last
-        # DELIVERED batch's content under max(delivered) — batch-keyed
-        # OVERWRITE must leave the probe unchanged.
-        if delivered and _os.environ.get("SPARK_GRAFT_REDELIVERY_EXERCISE") != "0":
-            last = max(delivered)
-            redelivered = spark.read.schema(
-                "vec_id long, embedding array<float>, label int"
-            ).parquet(_os.path.join(inbox, f"{last:02d}.parquet"))
-            fold(redelivered, last)
-
-        grown = _read_grown_codes(spark, codes_root)
-
-        anchor_ids = [
-            r["vec_id"]
-            for r in emb.select("vec_id")
-            .orderBy("vec_id")
-            .limit(PQ_QUERIES)
-            .collect()
-        ]
-        qsv = _pq_subvectors(
-            emb.where(F.col("vec_id").isin(anchor_ids)).select(
-                "vec_id", "embedding"
-            )
-        ).select(F.col("vec_id").alias("qid"), "m", F.col("sv").alias("qsv"))
-        return residual_probe_topk(qsv, rcdf, cells, grown)
-
-
-_register_stream_pq_residual_index_grow()
-
-
-def _build_grown_residual_layout(
-    spark: SparkSession, sf_dir: str, state_name: str
-) -> tuple[str, "DataFrame", "DataFrame", "DataFrame"]:
-    """The grown RESIDUAL-PQ index layout built batch-side — base b00000
-    (even vec_ids) + 3 delta subdirs (odd-id thirds), all through the
-    frozen-artifact residual encoder (the residual grow fold's on-disk
-    layout without the stream). Shared by the residual compaction query
-    and the residual index health monitor; returns (codes_root, residual
-    codebook DF, INT cell-centroid DF, embeddings DF)."""
-    import os as _os
-
-    from ..operators.similarity import (
-        pq_residual_encode,
-        pq_residual_index_path,
-    )
-
-    cb_path, _, cells_path = pq_residual_index_path(spark, sf_dir)
-    rcdf = spark.read.parquet(cb_path)
-    cells = spark.read.parquet(cells_path)
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    state = work_dir(state_name)
-    codes_root = _os.path.join(state, "codes")
-    (
-        pq_residual_encode(emb.where(F.col("vec_id") % 2 == 0), cells, rcdf)
-        .write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(_os.path.join(codes_root, "b00000"))
-    )
-    # 3 deltas, residual-encoded batch-side (the grow fold's encode)
-    for i in range(3):
-        (
-            pq_residual_encode(
-                emb.where(F.col("vec_id") % 6 == 2 * i + 1), cells, rcdf
-            )
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(_os.path.join(codes_root, f"b{i + 1:05d}"))
-        )
-    return codes_root, rcdf, cells, emb
-
-
-def _register_pq_residual_index_compact() -> None:
-    from ..operators.similarity import (
-        PQ_QUERIES,
-        _ivfpq_residual_serve_oracle,
-        _pq_subvectors,
-        residual_probe_topk,
-    )
-
-    @register(
-        "q_pq_residual_index_compact",
-        _ivfpq_residual_serve_oracle(),
-        doc="atomic small-file compaction of the incrementally-grown "
-        "RESIDUAL PQ code table: base + 3 batch-keyed delta subdirs "
-        "(the residual grow fold's layout, built batch-side) rewritten "
-        "into ONE committed label-partitioned subdir keeping the max "
-        "batch id (staged-rename swap); the query raises unless the "
-        "residual ADC probe is bit-identical across the swap and the "
-        "parquet file count shrank; the probe is value-checked by the "
-        "oracle shared with q_ann_ivf_pq_residual_persisted.",
-    )
-    def q_pq_residual_index_compact(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-
-        codes_root, rcdf, cells, emb = _build_grown_residual_layout(
-            spark, sf_dir, "pq_res_compact_index"
-        )
-
-        def read_grown() -> DataFrame:
-            dirs = committed_batch_dirs(codes_root)
-            out = None
-            for d in dirs:
-                part = spark.read.parquet(d)
-                out = part if out is None else out.unionByName(part)
-            return out
-
-        def nfiles() -> int:
-            return sum(
-                1
-                for root, _, files in _os.walk(codes_root)
-                for fn in files
-                if fn.endswith(".parquet")
-            )
-
-        anchor_ids = [
-            r["vec_id"]
-            for r in emb.select("vec_id")
-            .orderBy("vec_id")
-            .limit(PQ_QUERIES)
-            .collect()
-        ]
-        qsv = _pq_subvectors(
-            emb.where(F.col("vec_id").isin(anchor_ids)).select(
-                "vec_id", "embedding"
-            )
-        ).select(F.col("vec_id").alias("qid"), "m", F.col("sv").alias("qsv"))
-
-        # bounded snapshot (Q·topk rows) BEFORE the swap
-        pre = sorted(
-            map(tuple, residual_probe_topk(qsv, rcdf, cells, read_grown()).collect())
-        )
-        files_before = nfiles()
-
-        dirs = committed_batch_dirs(codes_root)
-        max_id = max(int(_os.path.basename(d)[1:]) for d in dirs)
-        new_root = codes_root + "_new"
-        _shutil.rmtree(new_root, ignore_errors=True)
-        (
-            read_grown()
-            .coalesce(1)
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(_os.path.join(new_root, f"b{max_id:05d}"))
-        )
-        retired = codes_root + "_retired"
-        _shutil.rmtree(retired, ignore_errors=True)
-        _os.replace(codes_root, retired)
-        _os.replace(new_root, codes_root)
-        _shutil.rmtree(retired, ignore_errors=True)
-
-        files_after = nfiles()
-        if files_after >= files_before:
-            raise AssertionError(
-                f"compaction did not shrink files: {files_before} -> {files_after}"
-            )
-        post_df = residual_probe_topk(qsv, rcdf, cells, read_grown())
-        post = sorted(map(tuple, post_df.collect()))
-        if post != pre:
-            raise AssertionError(
-                "probe changed across residual PQ index compaction"
-            )
-        return post_df
-
-
-_register_pq_residual_index_compact()
-
-
-# --------------------------------------------------------------------------
-# RESIDUAL PQ index health monitor (round 14): the q_pq_index_health
-# discipline applied to the residual index — the layout a production
-# store actually ships. The grown residual index accumulates vectors
-# against a FROZEN residual codebook AND frozen INT cell centroids, so
-# it decays on two axes: residual-codebook staleness (sampled serving
-# recall drops) and coarse-quantizer staleness (cell occupancy skews).
-# One row: sampled exact recall of the residual SERVING path (coarse
-# prune + residual ADC, nprobe as in serving) over the grown index, plus
-# the per-cell occupancy read straight off the code table's m=0 rows.
-# Together with q_pq_coarse_refresh (the APPLY step) this closes the
-# grow → monitor → retrain loop for the residual layout.
-#
-# Scale: the exact leg is O(N_sample · corpus scan) with constant N; the
-# serving leg is the standard bounded residual probe; occupancy is one
-# |cells|-row aggregate over the m=0 slice — raw embeddings are touched
-# only by the exact reference leg and the N sampled queries.
-# --------------------------------------------------------------------------
-
-
-def _register_pq_residual_index_health() -> None:
-    from ..operators.similarity import (
-        _SQL_PQ_L2,
-        IVFPQ_NPROBE,
-        PQ_ITERS,
-        PQ_SUBDIM,
-        PQ_TOPK,
-        _ivfpq_residual_base_ctes,
-        _ivfpq_residual_probe_ctes,
-        _pq_train_ctes,
-        _sql_pq_msum,
-    )
-
-    hs = PQ_HEALTH_SAMPLE
-    msum = _sql_pq_msum()
-    raw = _pq_train_ctes()
-    ctes = [raw[0], raw[1]]  # ev + sv (the Q20 subvector build)
-    ctes += _pq_train_ctes(pfx="r", base=_ivfpq_residual_base_ctes())
-    probe_ctes = _ivfpq_residual_probe_ctes()
-    # the monitor samples its anchors pseudo-randomly (md5 order), NOT by
-    # vec_id like the serving queries — swap the anch CTE, keep the rest
-    probe_ctes[0] = (
-        f"anch AS (SELECT vec_id FROM (SELECT DISTINCT vec_id FROM sv) "
-        f"ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {hs})"
-    )
-    ctes += probe_ctes
-    ctes += [
-        f"""radct AS (SELECT qid, vec_id FROM (
-      SELECT qid, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist ASC, vec_id) AS rk
-      FROM radc) WHERE rk <= {PQ_TOPK})""",
-        f"""exd AS (
-      SELECT q.vec_id AS qid, v.vec_id, q.m AS m,
-             {_SQL_PQ_L2.format(a="q.sv", b="v.sv", n=PQ_SUBDIM)} AS dd
-      FROM sv q JOIN sv v ON q.m = v.m AND v.vec_id <> q.vec_id
-      WHERE q.vec_id IN (SELECT vec_id FROM anch)
-    )""",
-        f"""ex AS (SELECT qid, vec_id, {msum} AS dist FROM exd GROUP BY qid, vec_id)""",
-        f"""ext AS (SELECT qid, vec_id FROM (
-      SELECT qid, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist ASC, vec_id) AS rk
-      FROM ex) WHERE rk <= {PQ_TOPK})""",
-        """rec AS (SELECT CAST(COUNT(*) AS BIGINT) AS recall_hits
-            FROM ext e JOIN radct a ON e.qid = a.qid AND e.vec_id = a.vec_id)""",
-        """occ AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS n
-            FROM embeddings GROUP BY label)""",
-        """occs AS (SELECT MAX(n) AS mx, CAST(SUM(n) AS BIGINT) AS tot,
-                    CAST(COUNT(*) AS BIGINT) AS ncells FROM occ)""",
-        """hot AS (SELECT label AS hottest_cell FROM occ
-            ORDER BY n DESC, label LIMIT 1)""",
-    ]
-    oracle = (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-    SELECT CAST({hs} AS INT) AS n_sampled,
-           r.recall_hits,
-           CAST({hs * PQ_TOPK} AS BIGINT) AS recall_possible,
-           CAST(h.hottest_cell AS INT) AS hottest_cell,
-           CAST(o.ncells AS INT) AS n_cells,
-           CAST(floor(o.mx * 1048576.0 / o.tot + 0.5) AS BIGINT)
-             AS hottest_share_q20,
-           CAST(floor(o.mx * o.ncells * 1048576.0 / o.tot + 0.5) AS BIGINT)
-             AS cell_max_over_avg_q20
-    FROM rec r, occs o, hot h
-    """
-    )
-
-    @register(
-        "q_pq_residual_index_health",
-        oracle,
-        doc=f"RESIDUAL PQ index HEALTH MONITOR over the grown residual "
-        "index (base + delta subdirs): sampled exact recall of the "
-        f"residual SERVING path (coarse prune nprobe={IVFPQ_NPROBE} + "
-        f"residual ADC) on a fixed-{PQ_HEALTH_SAMPLE} md5-ordered anchor "
-        "draw, plus per-cell occupancy skew off the code table's m=0 "
-        "rows — recall decay alarms the residual codebooks, occupancy "
-        "skew alarms the coarse quantizer (the retrain thresholds and "
-        "the q_pq_coarse_refresh APPLY step are documented in "
-        "SCALING.md).",
-    )
-    def q_pq_residual_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import math as _math
-
-        from pyspark.storagelevel import StorageLevel
-
-        from ..operators.similarity import (
-            PQ_TOPK as _topk,
-        )
-        from ..operators.similarity import (
-            _pq_fixed_order_dist,
-            _pq_l2,
-            _pq_subvectors,
-            residual_probe_topk,
-        )
-
-        codes_root, rcdf, cells, emb = _build_grown_residual_layout(
-            spark, sf_dir, "pq_res_health_index"
-        )
-        grown = _read_grown_codes(spark, codes_root)
-
-        anchor_ids = [
-            r["vec_id"]
-            for r in emb.select("vec_id")
-            .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-            .limit(PQ_HEALTH_SAMPLE)
-            .collect()
-        ]
-        sv = (
-            _pq_subvectors(emb.select("vec_id", "embedding"))
-            .repartition(spark.sparkContext.defaultParallelism)
-            .persist(StorageLevel.DISK_ONLY)
-        )
-        q = sv.where(F.col("vec_id").isin(anchor_ids)).select(
-            F.col("vec_id").alias("qid"), "m", F.col("sv").alias("qsv")
-        )
-        radct = residual_probe_topk(q, rcdf, cells, grown).select(
-            "qid", F.col("neighbor_id").alias("vec_id")
-        )
-        topw = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("vec_id"))
-        ext = (
-            F.broadcast(q)
-            .join(sv, "m")
-            .where(F.col("vec_id") != F.col("qid"))
-            .select(
-                "qid", "vec_id", "m", _pq_l2(F.col("qsv"), F.col("sv")).alias("dd")
-            )
-            .groupBy("qid", "vec_id")
-            .agg(_pq_fixed_order_dist())
-            .withColumn("rk", F.row_number().over(topw))
-            .where(F.col("rk") <= _topk)
-            .select("qid", "vec_id")
-        )
-        recall_hits = ext.join(radct, ["qid", "vec_id"]).count()
-        sv.unpersist()
-
-        occ_rows = (
-            grown.where(F.col("m") == 0)
-            .groupBy("label")
-            .agg(F.count("*").cast("bigint").alias("n"))
-            .collect()  # bounded: |cells| rows
-        )
-        mx = max(int(r["n"]) for r in occ_rows)
-        tot = sum(int(r["n"]) for r in occ_rows)
-        ncells = len(occ_rows)
-        hottest = min((-int(r["n"]), int(r["label"])) for r in occ_rows)[1]
-        row = (
-            PQ_HEALTH_SAMPLE,
-            int(recall_hits),
-            PQ_HEALTH_SAMPLE * _topk,
-            hottest,
-            ncells,
-            int(_math.floor(mx * 1048576.0 / tot + 0.5)),
-            int(_math.floor((mx * ncells) * 1048576.0 / tot + 0.5)),
-        )
-        return spark.createDataFrame(
-            [row],
-            "n_sampled int, recall_hits bigint, recall_possible bigint, "
-            "hottest_cell int, n_cells int, hottest_share_q20 bigint, "
-            "cell_max_over_avg_q20 bigint",
-        )
-
-
-_register_pq_residual_index_health()
-
-
-# --------------------------------------------------------------------------
-# SQ8 index maintenance lifecycle (round 15, VERDICT r14 missing 1 /
-# next-round item 2): the brand-new SQ8/IVF-SQ8 family shipped build-once;
-# a production store runs the SAME loop on every index family it serves —
-# streaming ingest against the frozen artifacts, delta compaction, health
-# monitoring. All three reuse the PQ twins' machinery verbatim: the frozen
-# artifacts here are the one-row [mn, rng] grid + the INT cell centroids
-# (sq8_index_path), the ingest encode is the stateless frozen-grid
-# sq8_encode (bit-identical to the one-shot build — same expression, same
-# grid literals), landing is batch-keyed OVERWRITE into label-partitioned
-# bNNNNN subdirs (redelivery-idempotent), compaction is the staged-rename
-# swap with a bit-identical-probe proof, and health is the fixed-N
-# md5-sampled exact-recall + occupancy read-out. The serving probe over
-# base ∪ deltas must equal the one-shot persisted serving — the shared
-# _SQL_IVF_SQ8 oracle (grown index == full corpus under the frozen grid).
-#
-# Scale: per trigger the fold is O(batch) — a stateless projection plus
-# one partitioned parquet append; probes partition-prune per subdir (every
-# subdir is label-partitioned); compaction runs at maintenance cadence;
-# the monitor's exact leg is O(N_sample · scan) with constant N and its
-# occupancy is one |cells|-row aggregate over the code table.
-# --------------------------------------------------------------------------
-
-
-def _sq8_load_artifacts(
-    spark: SparkSession, sf_dir: str
-) -> tuple[list[int], list[int], list[tuple[int, list[int]]]]:
-    """The frozen SQ8 serving artifacts: ([mn], [rng], [(label, cq)]) —
-    one grid row + |cells| centroid rows, both bounded collects."""
-    from ..operators.similarity import sq8_index_path
-
-    grid_path, _, cells_path = sq8_index_path(spark, sf_dir)
-    [grid] = spark.read.parquet(grid_path).collect()  # bounded: 1 row
-    cells = sorted(
-        (int(r["label"]), [int(v) for v in r["cq"]])
-        for r in spark.read.parquet(cells_path).collect()  # bounded: |cells|
-    )
-    return list(grid["mn"]), list(grid["rng"]), cells
-
-
-def _read_grown_codes(spark: SparkSession, codes_root: str) -> DataFrame:
-    """base ∪ deltas of a grown code table (committed subdirs only) —
-    shared by every index-grow family (PQ, residual PQ, SQ8, residual
-    SQ8) and their compaction/health twins."""
-    grown = None
-    for d in committed_batch_dirs(codes_root):
-        part = spark.read.parquet(d)
-        grown = part if grown is None else grown.unionByName(part)
-    if grown is None:
-        # a missing/failed base write otherwise surfaces as an opaque
-        # AttributeError on the caller's .where (ADVICE r15 item 1)
-        raise FileNotFoundError(
-            f"no committed batch subdirs under {codes_root}"
-        )
-    return grown
-
-
-def _sq8_serve_grown(
-    spark: SparkSession,
-    sf_dir: str,
-    grown: DataFrame,
-    mn: list[int],
-    rng: list[int],
-    cells: list[tuple[int, list[int]]],
-) -> DataFrame:
-    """The IVF-SQ8 serving probe (standard vec_id < N_QUERIES anchors)
-    over a grown code table — must equal the one-shot persisted serving
-    (the shared _SQL_IVF_SQ8 oracle)."""
-    from ..operators.similarity import (
-        N_QUERIES,
-        TOPK,
-        _collect_query_eq,
-        ivf_sq8_probes,
-        ivf_sq8_scan_topk,
-    )
-
-    queries = _collect_query_eq(
-        t(spark, sf_dir, "embeddings").where(F.col("vec_id") < N_QUERIES)
-    )
-    probed = ivf_sq8_probes(queries, cells)
-    all_probed = sorted({lb for labs in probed.values() for lb in labs})
-    pruned = grown.where(F.col("label").isin(all_probed))
-    return ivf_sq8_scan_topk(pruned, queries, probed, mn, rng, TOPK)
-
-
-def _sq8_res_load_artifacts(
-    spark: SparkSession, sf_dir: str
-) -> tuple[list[int], list[int], list[tuple[int, list[int]]], DataFrame]:
-    """The frozen residual-SQ8 serving artifacts: ([mn], [rng],
-    [(label, cq)], cells DF) — grid row + |cells| rows, bounded."""
-    from ..operators.similarity import sq8_residual_index_path
-
-    grid_path, _, cells_path = sq8_residual_index_path(spark, sf_dir)
-    [grid] = spark.read.parquet(grid_path).collect()  # bounded: 1 row
-    cells_df = spark.read.parquet(cells_path)
-    cells = sorted(
-        (int(r["label"]), [int(v) for v in r["cq"]])
-        for r in cells_df.collect()  # bounded: |cells|
-    )
-    return list(grid["mn"]), list(grid["rng"]), cells, cells_df
-
-
-def _sq8_res_encode(
-    bdf: DataFrame, cells_df: DataFrame, mn: list[int], rng: list[int]
-) -> DataFrame:
-    """Frozen-artifact residual encode of a (vec_id, embedding, label)
-    batch: residualize against the frozen INT cells, integer-encode on
-    the frozen residual grid — the one-shot build's exact expressions."""
-    from ..operators.similarity import _sq8_residuals, sq8_encode_ints
-
-    return sq8_encode_ints(_sq8_residuals(bdf, cells_df), "rv", mn, rng)
-
-
-def _sq8_res_serve_grown(
-    spark: SparkSession,
-    sf_dir: str,
-    grown: DataFrame,
-    mn: list[int],
-    rng: list[int],
-    cells: list[tuple[int, list[int]]],
-) -> DataFrame:
-    """The residual IVF-SQ8 serving probe (standard anchors) over a grown
-    code table — must equal the one-shot persisted serving."""
-    from ..operators.similarity import (
-        N_QUERIES,
-        TOPK,
-        _collect_query_eq,
-        ivf_sq8_probes,
-        ivf_sq8_residual_scan_topk,
-    )
-
-    queries = _collect_query_eq(
-        t(spark, sf_dir, "embeddings").where(F.col("vec_id") < N_QUERIES)
-    )
-    probed = ivf_sq8_probes(queries, cells)
-    all_probed = sorted({lb for labs in probed.values() for lb in labs})
-    pruned = grown.where(F.col("label").isin(all_probed))
-    return ivf_sq8_residual_scan_topk(pruned, queries, probed, mn, rng, cells, TOPK)
-
-
-# --------------------------------------------------------------------------
-# The SQ8 + RESIDUAL SQ8 lifecycles, ONE parameterized implementation
-# (rounds 15/16; dedup per ADVICE r15 item 5): both families — the raw
-# IVF-SQ8 index and the residual layout an SQ8 store actually ships
-# (FAISS's IVF-SQ default IS by_residual) — run the identical loop every
-# production store runs on every index family it serves: streaming ingest
-# against the frozen artifacts, delta compaction, health monitoring. The
-# two trios differed ONLY in (load_artifacts, encode, serving scan), so
-# they are closures of one `_sq8_family` spec and one grow/compact/health
-# body each; an oracle or layout edit now lands on both families by
-# construction instead of by copy-paste discipline.
-#
-# Mechanics (unchanged from the per-family versions): the frozen
-# artifacts are the one-row [mn, rng] grid + INT cell centroids
-# (sq8_index_path / sq8_residual_index_path); ingest encode is the
-# one-shot build's exact expressions (stateless, bit-identical); landing
-# is batch-keyed OVERWRITE into label-partitioned bNNNNN subdirs
-# (redelivery-idempotent, exercised inline); compaction is the
-# staged-rename swap with a bit-identical-probe proof; health is the
-# fixed-N md5-sampled exact-recall + occupancy read-out. Serving over
-# base ∪ deltas must equal the one-shot persisted serving — the shared
-# _SQL_IVF_SQ8 / _SQL_IVF_SQ8_RESIDUAL oracles.
-#
-# Scale: per trigger the fold is O(batch) — a stateless projection plus
-# one partitioned parquet append; probes partition-prune per subdir
-# (every subdir is label-partitioned, plan-pinned); compaction runs at
-# maintenance cadence; the monitor's exact leg is O(N_sample · scan) with
-# constant N and its occupancy is one |cells|-row aggregate.
-# --------------------------------------------------------------------------
-
-
-def _sq8_family(spark: SparkSession, sf_dir: str, residual: bool):
-    """Frozen-artifact closures for ONE SQ8 index family: ``encode`` (the
-    one-shot build's exact expressions), ``serve_std`` (the
-    standard-anchor serving probe over a grown code table), ``scan_topk``
-    (the serving scan for arbitrary query sets — the health monitor's
-    leg), and the bounded ``cells`` table."""
-    from types import SimpleNamespace
-
-    from ..operators.similarity import (
-        TOPK,
-        ivf_sq8_residual_scan_topk,
-        ivf_sq8_scan_topk,
-        sq8_encode,
-    )
-
-    if residual:
-        mn, rng, cells, cells_df = _sq8_res_load_artifacts(spark, sf_dir)
-
-        def encode(bdf: DataFrame) -> DataFrame:
-            return _sq8_res_encode(bdf, cells_df, mn, rng)
-
-        def serve_std(grown: DataFrame) -> DataFrame:
-            return _sq8_res_serve_grown(spark, sf_dir, grown, mn, rng, cells)
-
-        def scan_topk(pruned: DataFrame, queries, probed) -> DataFrame:
-            return ivf_sq8_residual_scan_topk(
-                pruned, queries, probed, mn, rng, cells, TOPK
-            )
-
-    else:
-        mn, rng, cells = _sq8_load_artifacts(spark, sf_dir)
-
-        def encode(bdf: DataFrame) -> DataFrame:
-            return sq8_encode(bdf, mn, rng)
-
-        def serve_std(grown: DataFrame) -> DataFrame:
-            return _sq8_serve_grown(spark, sf_dir, grown, mn, rng, cells)
-
-        def scan_topk(pruned: DataFrame, queries, probed) -> DataFrame:
-            return ivf_sq8_scan_topk(pruned, queries, probed, mn, rng, TOPK)
-
-    return SimpleNamespace(
-        encode=encode, serve_std=serve_std, scan_topk=scan_topk, cells=cells
-    )
-
-
-def _sq8_family_grow(
-    spark: SparkSession,
-    sf_dir: str,
-    residual: bool,
-    state_name: str,
-    ckpt_name: str,
-) -> DataFrame:
-    """The streaming-grow body shared by both families: base index (even
-    vec_ids, batch-encoded once against the frozen artifacts) + streamed
-    remainder folded as batch-keyed OVERWRITE appends, then the standard
-    serving probe over base ∪ deltas."""
-    import os as _os
-
-    fam = _sq8_family(spark, sf_dir, residual)
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    state = work_dir(state_name)
-    codes_root = _os.path.join(state, "codes")
-
-    # base index: even vec_ids, encoded batch-side once against the
-    # frozen artifacts (the identical stateless expressions the fold runs)
-    (
-        fam.encode(emb.where(F.col("vec_id") % 2 == 0))
-        .write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(_os.path.join(codes_root, "b00000"))
-    )
-
-    # the remainder arrives as the SAME deterministic 3-slice inbox
-    # every index-grow query replays (one cached fixture)
-    inbox = _grow_inbox(spark, sf_dir)
-
-    delivered: list[int] = []
-
-    def fold(bdf: DataFrame, batch_id: int) -> None:
-        delivered.append(int(batch_id))
-        (
-            fam.encode(bdf)
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(_os.path.join(codes_root, f"b{batch_id + 1:05d}"))
-        )
-
-    stream = (
-        spark.readStream.schema("vec_id long, embedding array<float>, label int")
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(inbox)
-    )
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", _ckpt(ckpt_name))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError(f"{state_name} did not drain")
-    finally:
-        q.stop()
-
-    # Redelivery exercise (env-gated default ON): re-fold the last
-    # DELIVERED batch's content under max(delivered) — batch-keyed
-    # OVERWRITE must leave the probe unchanged.
-    if delivered and _os.environ.get("SPARK_GRAFT_REDELIVERY_EXERCISE") != "0":
-        last = max(delivered)
-        redelivered = spark.read.schema(
-            "vec_id long, embedding array<float>, label int"
-        ).parquet(_os.path.join(inbox, f"{last:02d}.parquet"))
-        fold(redelivered, last)
-
-    return fam.serve_std(_read_grown_codes(spark, codes_root))
-
-
-def _build_grown_sq8_family_layout(
-    spark: SparkSession, sf_dir: str, state_name: str, residual: bool
-):
-    """The grown index layout built batch-side — base b00000 (even
-    vec_ids) + 3 delta subdirs (odd-id thirds), all through the frozen
-    artifacts (the grow fold's on-disk layout without the stream). Shared
-    by the compaction queries, the health monitors, and the plan pins;
-    returns (codes_root, family closures, embeddings DF)."""
-    import os as _os
-
-    fam = _sq8_family(spark, sf_dir, residual)
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    state = work_dir(state_name)
-    codes_root = _os.path.join(state, "codes")
-    (
-        fam.encode(emb.where(F.col("vec_id") % 2 == 0))
-        .write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(_os.path.join(codes_root, "b00000"))
-    )
-    for i in range(3):
-        (
-            fam.encode(emb.where(F.col("vec_id") % 6 == 2 * i + 1))
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(_os.path.join(codes_root, f"b{i + 1:05d}"))
-        )
-    return codes_root, fam, emb
-
-
-def _sq8_family_compact(
-    spark: SparkSession, sf_dir: str, state_name: str, residual: bool, tag: str
-) -> DataFrame:
-    """The compaction body shared by both families: base + 3 batch-keyed
-    delta subdirs rewritten into ONE committed label-partitioned subdir
-    keeping the max batch id (staged-rename swap); raises unless the
-    serving probe is bit-identical across the swap and the parquet file
-    count shrank."""
-    import os as _os
-    import shutil as _shutil
-
-    codes_root, fam, _ = _build_grown_sq8_family_layout(
-        spark, sf_dir, state_name, residual
-    )
-
-    def nfiles() -> int:
-        return sum(
-            1
-            for root, _, files in _os.walk(codes_root)
-            for fn in files
-            if fn.endswith(".parquet")
-        )
-
-    def probe() -> DataFrame:
-        return fam.serve_std(_read_grown_codes(spark, codes_root))
-
-    # bounded snapshot (Q·topk rows) BEFORE the swap
-    pre = sorted(map(tuple, probe().collect()))
-    files_before = nfiles()
-
-    dirs = committed_batch_dirs(codes_root)
-    max_id = max(int(_os.path.basename(d)[1:]) for d in dirs)
-    new_root = codes_root + "_new"
-    _shutil.rmtree(new_root, ignore_errors=True)
-    (
-        _read_grown_codes(spark, codes_root)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .partitionBy("label")
-        .parquet(_os.path.join(new_root, f"b{max_id:05d}"))
-    )
-    retired = codes_root + "_retired"
-    _shutil.rmtree(retired, ignore_errors=True)
-    _os.replace(codes_root, retired)
-    _os.replace(new_root, codes_root)
-    _shutil.rmtree(retired, ignore_errors=True)
-
-    files_after = nfiles()
-    if files_after >= files_before:
-        raise AssertionError(
-            f"compaction did not shrink files: {files_before} -> {files_after}"
-        )
-    post_df = probe()
-    post = sorted(map(tuple, post_df.collect()))
-    if post != pre:
-        raise AssertionError(f"probe changed across {tag} index compaction")
-    return post_df
-
-
-def _sq8_family_health_oracle(residual: bool) -> str:
-    """ONE health-oracle builder for both families: the shared head
-    (integer grid, cells) + the family's reconstruction CTE `rr` + the
-    shared serving/exact-recall/occupancy tail."""
-    from ..operators.similarity import (
-        IVF_NPROBE,
-        QUANT,
-        SQ8_DIM,
-        SQ8_LEVELS,
-        TOPK,
-    )
-
-    hs = PQ_HEALTH_SAMPLE
-    if residual:
-        recon = f"""
-    rv AS (SELECT e.vec_id, e.d, e.e - c.cq AS r, c.cq AS cq
-           FROM ev e JOIN lbl l ON e.vec_id = l.vec_id
-           JOIN cc c ON c.label = l.label AND c.d = e.d),
-    str AS (SELECT d, MIN(r) AS mn, GREATEST(MAX(r) - MIN(r), 1) AS rng
-            FROM rv GROUP BY d),
-    rr AS (SELECT v.vec_id, v.d,
-                  v.cq * {SQ8_LEVELS} + s.mn * {SQ8_LEVELS}
-                    + ((v.r - s.mn) * {SQ8_LEVELS}) // s.rng * s.rng AS ra
-           FROM rv v JOIN str s ON v.d = s.d)"""
-    else:
-        recon = f"""
-    st AS (SELECT d, MIN(e) AS mn, GREATEST(MAX(e) - MIN(e), 1) AS rng
-           FROM ev GROUP BY d),
-    rr AS (SELECT v.vec_id, v.d,
-                  s.mn * {SQ8_LEVELS}
-                    + ((v.e - s.mn) * {SQ8_LEVELS}) // s.rng * s.rng AS ra
-           FROM ev v JOIN st s ON v.d = s.d)"""
-    return f"""
-    WITH eq AS (SELECT vec_id,
-                  list_transform(embedding,
-                    x -> CAST(floor(CAST(x AS DOUBLE) * {QUANT} + 0.5) AS BIGINT)) AS eqv
-           FROM embeddings),
-    ev AS (SELECT vec_id, d, eqv[d] AS e
-           FROM eq, generate_series(1, {SQ8_DIM}) g(d)),
-    lbl AS (SELECT vec_id, label FROM embeddings),
-    cc AS (SELECT l.label, v.d,
-                  CAST(floor(CAST(SUM(v.e) AS DOUBLE) / COUNT(*) + 0.5) AS BIGINT) AS cq
-           FROM ev v JOIN lbl l ON v.vec_id = l.vec_id
-           GROUP BY l.label, v.d),{recon},
-    anch AS (SELECT vec_id FROM (SELECT DISTINCT vec_id FROM eq)
-             ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {hs}),
-    qv AS (SELECT vec_id AS qid, d, e FROM ev
-           WHERE vec_id IN (SELECT vec_id FROM anch)),
-    qc AS (SELECT q.qid, c.label, SUM((q.e - c.cq) * (q.e - c.cq)) AS cdist
-           FROM qv q JOIN cc c ON q.d = c.d GROUP BY q.qid, c.label),
-    probes AS (SELECT qid, label FROM (
-      SELECT qid, label,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY cdist ASC, label) AS prk
-      FROM qc) WHERE prk <= {IVF_NPROBE}),
-    cand AS (SELECT p.qid, r.vec_id, r.d, r.ra
-             FROM rr r JOIN lbl l ON r.vec_id = l.vec_id
-             JOIN probes p ON l.label = p.label
-             WHERE r.vec_id <> p.qid),
-    qs AS (SELECT qid, d, e * {SQ8_LEVELS} AS qs FROM qv),
-    dd AS (SELECT c.qid, c.vec_id, SUM((q.qs - c.ra) * (q.qs - c.ra)) AS dist
-           FROM cand c JOIN qs q ON q.qid = c.qid AND q.d = c.d
-           GROUP BY c.qid, c.vec_id),
-    srvt AS (SELECT qid, vec_id FROM (
-      SELECT qid, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist ASC, vec_id) AS rk
-      FROM dd) WHERE rk <= {TOPK}),
-    exd AS (SELECT q.qid, r.vec_id, SUM((q.e - r.e) * (q.e - r.e)) AS dist
-            FROM qv q JOIN ev r ON q.d = r.d AND r.vec_id <> q.qid
-            GROUP BY 1, 2),
-    ext AS (SELECT qid, vec_id FROM (
-      SELECT qid, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist ASC, vec_id) AS rk
-      FROM exd) WHERE rk <= {TOPK}),
-    rec AS (SELECT CAST(COUNT(*) AS BIGINT) AS recall_hits
-            FROM ext e JOIN srvt a ON e.qid = a.qid AND e.vec_id = a.vec_id),
-    occ AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS n
-            FROM embeddings GROUP BY label),
-    occs AS (SELECT MAX(n) AS mx, CAST(SUM(n) AS BIGINT) AS tot,
-                    CAST(COUNT(*) AS BIGINT) AS ncells FROM occ),
-    hot AS (SELECT label AS hottest_cell FROM occ
-            ORDER BY n DESC, label LIMIT 1)
-    SELECT CAST({hs} AS INT) AS n_sampled,
-           r.recall_hits,
-           CAST({hs * TOPK} AS BIGINT) AS recall_possible,
-           CAST(h.hottest_cell AS INT) AS hottest_cell,
-           CAST(o.ncells AS INT) AS n_cells,
-           CAST(floor(o.mx * 1048576.0 / o.tot + 0.5) AS BIGINT)
-             AS hottest_share_q20,
-           CAST(floor(o.mx * o.ncells * 1048576.0 / o.tot + 0.5) AS BIGINT)
-             AS cell_max_over_avg_q20
-    FROM rec r, occs o, hot h
-    """
-
-
-def _sq8_family_health(
-    spark: SparkSession, sf_dir: str, state_name: str, residual: bool
-) -> DataFrame:
-    """The health-monitor body shared by both families: sampled exact
-    recall of the family's serving path over the grown index on a
-    fixed-N md5-ordered anchor draw, plus per-cell occupancy skew."""
-    import math as _math
-
-    from ..operators.similarity import (
-        TOPK,
-        _collect_query_eq,
-        ivf_sq8_probes,
-        sq8_encode,
-        sq8_stats,
-        sq8_topk,
-    )
-
-    codes_root, fam, emb = _build_grown_sq8_family_layout(
-        spark, sf_dir, state_name, residual
-    )
-    grown = _read_grown_codes(spark, codes_root)
-
-    # the monitored anchor sample: deterministic pseudo-random draw
-    anchor_ids = [
-        r["vec_id"]
-        for r in emb.select("vec_id")
-        .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-        .limit(PQ_HEALTH_SAMPLE)
-        .collect()
-    ]
-    queries = _collect_query_eq(emb.where(F.col("vec_id").isin(anchor_ids)))
-
-    # serving leg: the family's probe over the GROWN index
-    probed = ivf_sq8_probes(queries, fam.cells)
-    all_probed = sorted({lb for labs in probed.values() for lb in labs})
-    srvt = fam.scan_topk(
-        grown.where(F.col("label").isin(all_probed)), queries, probed
-    ).select("qid", "neighbor_id")
-
-    # exact reference leg on the raw integer grid (the q_ann_sq8_recall
-    # identity-grid trick: levels=1, rng=1 — quantizer-independent, so
-    # ONE leg serves both families)
-    abs_mn, _ = sq8_stats(emb.select("vec_id", "embedding"))
-    ones = [1] * len(abs_mn)
-    exact_coded = sq8_encode(
-        emb.select("vec_id", "embedding"), abs_mn, ones, levels=1
-    )
-    ext = sq8_topk(exact_coded, queries, abs_mn, ones, TOPK, levels=1).select(
-        "qid", "neighbor_id"
-    )
-    recall_hits = ext.join(srvt, ["qid", "neighbor_id"]).count()
-
-    # occupancy straight off the INDEX (one row per vector)
-    occ_rows = (
-        grown.groupBy("label")
-        .agg(F.count("*").cast("bigint").alias("n"))
-        .collect()  # bounded: |cells| rows
-    )
-    mx = max(int(r["n"]) for r in occ_rows)
-    tot = sum(int(r["n"]) for r in occ_rows)
-    ncells = len(occ_rows)
-    hottest = min((-int(r["n"]), int(r["label"])) for r in occ_rows)[1]
-    row = (
-        PQ_HEALTH_SAMPLE,
-        int(recall_hits),
-        PQ_HEALTH_SAMPLE * TOPK,
-        hottest,
-        ncells,
-        int(_math.floor(mx * 1048576.0 / tot + 0.5)),
-        int(_math.floor((mx * ncells) * 1048576.0 / tot + 0.5)),
-    )
-    return spark.createDataFrame(
-        [row],
-        "n_sampled int, recall_hits bigint, recall_possible bigint, "
-        "hottest_cell int, n_cells int, hottest_share_q20 bigint, "
-        "cell_max_over_avg_q20 bigint",
-    )
-
-
-def _register_sq8_lifecycles() -> None:
-    from ..operators.similarity import (
-        _SQL_IVF_SQ8,
-        _SQL_IVF_SQ8_RESIDUAL,
-        IVF_NPROBE,
-    )
-
-    @register(
-        "q_stream_sq8_index_grow",
-        _SQL_IVF_SQ8,
-        doc="STREAMING growth of the SQ8 index: a base index (even "
-        "vec_ids, batch-encoded on the frozen [mn,rng] grid) grows by "
-        "foreachBatch appends of the streamed remainder — frozen-grid "
-        "sq8_encode, batch-keyed OVERWRITE into label-partitioned subdirs "
-        "(redelivery-idempotent, exercised inline) — then the IVF-SQ8 "
-        "serving probe over base ∪ deltas must equal the one-shot "
-        "persisted serving (shared oracle with q_ann_sq8_persisted).",
-    )
-    def q_stream_sq8_index_grow(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _sq8_family_grow(
-            spark, sf_dir, False, "sq8_grow_index", "sq8_grow"
-        )
-
-    @register(
-        "q_stream_sq8_residual_index_grow",
-        _SQL_IVF_SQ8_RESIDUAL,
-        doc="STREAMING growth of the RESIDUAL SQ8 index: a base index "
-        "(even vec_ids, batch residual-encoded) grows by foreachBatch "
-        "appends of the streamed remainder — residualize against the "
-        "frozen INT cells, integer-encode on the frozen residual grid, "
-        "batch-keyed OVERWRITE into label-partitioned subdirs "
-        "(redelivery-idempotent, exercised inline) — then the residual "
-        "IVF-SQ8 serving probe over base ∪ deltas must equal the "
-        "one-shot persisted serving (shared oracle with "
-        "q_ann_sq8_residual_persisted).",
-    )
-    def q_stream_sq8_residual_index_grow(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        return _sq8_family_grow(
-            spark, sf_dir, True, "sq8_res_grow_index", "sq8_res_grow"
-        )
-
-    @register(
-        "q_sq8_index_compact",
-        _SQL_IVF_SQ8,
-        doc="atomic small-file compaction of the incrementally-grown SQ8 "
-        "code table: base + 3 batch-keyed delta subdirs (the grow fold's "
-        "layout, built batch-side) rewritten into ONE committed "
-        "label-partitioned subdir keeping the max batch id (staged-rename "
-        "swap, the dedup-index pattern); the query raises unless the "
-        "IVF-SQ8 serving probe is bit-identical across the swap and the "
-        "parquet file count shrank; the probe is value-checked by the "
-        "oracle shared with q_ann_sq8_persisted.",
-    )
-    def q_sq8_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _sq8_family_compact(
-            spark, sf_dir, "sq8_compact_index", False, "SQ8"
-        )
-
-    @register(
-        "q_sq8_residual_index_compact",
-        _SQL_IVF_SQ8_RESIDUAL,
-        doc="atomic small-file compaction of the incrementally-grown "
-        "RESIDUAL SQ8 code table: base + 3 batch-keyed delta subdirs "
-        "rewritten into ONE committed label-partitioned subdir keeping "
-        "the max batch id (staged-rename swap); the query raises unless "
-        "the residual serving probe is bit-identical across the swap and "
-        "the parquet file count shrank; the probe is value-checked by "
-        "the oracle shared with q_ann_sq8_residual_persisted.",
-    )
-    def q_sq8_residual_index_compact(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        return _sq8_family_compact(
-            spark, sf_dir, "sq8_res_compact_index", True, "residual SQ8"
-        )
-
-    @register(
-        "q_sq8_index_health",
-        _sq8_family_health_oracle(False),
-        doc=f"SQ8 index HEALTH MONITOR over the grown index (base + delta "
-        "subdirs): sampled exact recall of the IVF-SQ8 SERVING path "
-        f"(coarse prune nprobe={IVF_NPROBE} + SQ8 asymmetric distance) on "
-        f"a fixed-{PQ_HEALTH_SAMPLE} md5-ordered anchor draw against the "
-        "exact integer-grid top-k, plus per-cell occupancy skew off the "
-        "code table — recall decay alarms the [mn,rng] grid (the "
-        "q_sq8_grid_refresh APPLY step), occupancy skew alarms the coarse "
-        "quantizer; thresholds in SCALING.md. All-integer, full value "
-        "oracle.",
-    )
-    def q_sq8_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _sq8_family_health(spark, sf_dir, "sq8_health_index", False)
-
-    @register(
-        "q_sq8_residual_index_health",
-        _sq8_family_health_oracle(True),
-        doc=f"RESIDUAL SQ8 index HEALTH MONITOR over the grown residual "
-        "index (base + delta subdirs): sampled exact recall of the "
-        f"residual serving path (coarse prune nprobe={IVF_NPROBE} + "
-        "absolute-space SQ8 distance) on a fixed-"
-        f"{PQ_HEALTH_SAMPLE} md5-ordered anchor draw against the exact "
-        "integer-grid top-k, plus per-cell occupancy skew off the code "
-        "table — recall decay alarms the residual grid (the "
-        "q_sq8_residual_grid_refresh APPLY step), occupancy skew alarms "
-        "the coarse quantizer (the q_sq8_coarse_refresh APPLY step); the "
-        "loop-closer for the layout an SQ8 store actually ships. "
-        "All-integer, full value oracle.",
-    )
-    def q_sq8_residual_index_health(
-        spark: SparkSession, sf_dir: str
-    ) -> DataFrame:
-        return _sq8_family_health(spark, sf_dir, "sq8_res_health_index", True)
-
-
-_register_sq8_lifecycles()
-
-
-# --------------------------------------------------------------------------
-# BQ index lifecycle (round 17, VERDICT r16 missing 2, second half): the
-# persisted binary-quantized index gets the same lifecycle verbs as the
-# SQ8/PQ families — STREAMING grow against the FROZEN thresholds (the
-# entire trained state is one 64-integer row, so "frozen artifacts" is a
-# 1-row load), atomic small-file compaction, and a health monitor with
-# sampled exact recall plus the bit-balance stat that alarms threshold
-# drift (a healthy sign threshold keeps mean popcount near dim/2; a
-# drifting corpus pushes it toward 0 or 64, collapsing Hamming contrast
-# — the BQ analogue of the SQ8 grid-drift monitor). The grown layout is
-# FLAT (no label subdirs): BQ has no coarse quantizer, the 32× scan is
-# the prune.
-# --------------------------------------------------------------------------
-
-
-def _bq_load_thresholds(spark: SparkSession, sf_dir: str) -> list[int]:
-    """The frozen per-dim sign cutoffs off the persisted index (1 row)."""
-    from ..operators.similarity import bq_index_path
-
-    th_path, _ = bq_index_path(spark, sf_dir)
-    [row] = spark.read.parquet(th_path).collect()  # bounded: 1 row
-    return [int(v) for v in row["t"]]
-
-
-def _bq_grown_serve(
-    spark: SparkSession, sf_dir: str, codes_root: str, t_: list[int]
-) -> DataFrame:
-    """Standard-anchor BQ serving over a grown (base ∪ deltas) layout."""
-    from ..operators.similarity import bq_query_bits, bq_serve
-
-    return bq_serve(
-        _read_grown_codes(spark, codes_root), bq_query_bits(spark, sf_dir, t_)
-    )
-
-
-def _build_grown_bq_layout(
-    spark: SparkSession, sf_dir: str, state_name: str
-) -> tuple[str, list[int]]:
-    """The grown BQ layout built batch-side — base b00000 (even vec_ids)
-    + 3 delta subdirs (odd-id thirds), all packed against the frozen
-    thresholds. Shared by the compaction query, the health monitor, and
-    the plan pins; returns (codes_root, thresholds)."""
-    import os as _os
-
-    from ..operators.similarity import bq_pack
-
-    t_ = _bq_load_thresholds(spark, sf_dir)
-    emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    state = work_dir(state_name)
-    codes_root = _os.path.join(state, "codes")
-    (
-        bq_pack(emb.where(F.col("vec_id") % 2 == 0), t_)
-        .write.mode("overwrite")
-        .parquet(_os.path.join(codes_root, "b00000"))
-    )
-    for i in range(3):
-        (
-            bq_pack(emb.where(F.col("vec_id") % 6 == 2 * i + 1), t_)
-            .write.mode("overwrite")
-            .parquet(_os.path.join(codes_root, f"b{i + 1:05d}"))
-        )
-    return codes_root, t_
-
-
-def _bq_health_oracle() -> str:
-    """Sampled exact recall + bit balance over the trained state; the
-    grown index covers the whole corpus, so the oracle ranks off the
-    embeddings table directly (the _sq8_family_health_oracle shape)."""
-    from ..operators.similarity import _SQL_BQ_BASE_CTES, TOPK
-
-    hs = PQ_HEALTH_SAMPLE
-    return f"""
-    WITH {_SQL_BQ_BASE_CTES},
-    anch AS (SELECT vec_id FROM (SELECT DISTINCT vec_id FROM eq)
-             ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {hs}),
-    qb AS (SELECT vec_id AS qid, d, b FROM bv
-           WHERE vec_id IN (SELECT vec_id FROM anch)),
-    hd AS (SELECT q.qid, r.vec_id,
-                  CAST(SUM(CASE WHEN q.b <> r.b THEN 1 ELSE 0 END) AS BIGINT)
-                    AS hamming
-           FROM qb q JOIN bv r ON q.d = r.d AND r.vec_id <> q.qid
-           GROUP BY 1, 2),
-    bqt AS (SELECT qid, vec_id FROM (
-      SELECT qid, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY hamming ASC, vec_id) AS rk
-      FROM hd) WHERE rk <= {TOPK}),
-    qv AS (SELECT vec_id AS qid, d, e FROM ev
-           WHERE vec_id IN (SELECT vec_id FROM anch)),
-    exd AS (SELECT q.qid, r.vec_id, SUM((q.e - r.e) * (q.e - r.e)) AS dist
-            FROM qv q JOIN ev r ON q.d = r.d AND r.vec_id <> q.qid
-            GROUP BY 1, 2),
-    ext AS (SELECT qid, vec_id FROM (
-      SELECT qid, vec_id,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY dist ASC, vec_id) AS rk
-      FROM exd) WHERE rk <= {TOPK}),
-    rec AS (SELECT CAST(COUNT(*) AS BIGINT) AS recall_hits
-            FROM ext e JOIN bqt a ON e.qid = a.qid AND e.vec_id = a.vec_id),
-    pop AS (SELECT CAST(SUM(b) AS BIGINT) AS sb,
-                   CAST(COUNT(DISTINCT vec_id) AS BIGINT) AS n FROM bv)
-    SELECT CAST({hs} AS INT) AS n_sampled,
-           r.recall_hits,
-           CAST({hs * TOPK} AS BIGINT) AS recall_possible,
-           CAST(floor(p.sb * 1048576.0 / p.n + 0.5) AS BIGINT)
-             AS mean_popcount_q20
-    FROM rec r, pop p
-    """
-
-
-def _register_bq_lifecycles() -> None:
-    from ..operators.similarity import _SQL_BQ_TOPK
-
-    @register(
-        "q_stream_bq_index_grow",
-        _SQL_BQ_TOPK,
-        doc="STREAMING growth of the persisted BQ index: a base index "
-        "(even vec_ids, packed batch-side against the FROZEN 1-row "
-        "thresholds) grows by foreachBatch appends of the streamed "
-        "remainder — the same frozen-threshold bq_pack projection, "
-        "batch-keyed OVERWRITE into flat subdirs (redelivery-idempotent, "
-        "exercised inline) — then the Hamming serving probe over base ∪ "
-        "deltas must equal the one-shot persisted serving (shared "
-        "oracle with q_ann_bq_persisted).",
-    )
-    def q_stream_bq_index_grow(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-
-        from ..operators.similarity import bq_pack
-
-        t_ = _bq_load_thresholds(spark, sf_dir)
-        emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        state = work_dir("bq_grow_index")
-        codes_root = _os.path.join(state, "codes")
-        (
-            bq_pack(emb.where(F.col("vec_id") % 2 == 0), t_)
-            .write.mode("overwrite")
-            .parquet(_os.path.join(codes_root, "b00000"))
-        )
-        inbox = _grow_inbox(spark, sf_dir)
-        delivered: list[int] = []
-
-        def fold(bdf: DataFrame, batch_id: int) -> None:
-            delivered.append(int(batch_id))
-            (
-                bq_pack(bdf.select("vec_id", "embedding"), t_)
-                .write.mode("overwrite")
-                .parquet(_os.path.join(codes_root, f"b{batch_id + 1:05d}"))
-            )
-
-        stream = (
-            spark.readStream.schema(
-                "vec_id long, embedding array<float>, label int"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(inbox)
-        )
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", _ckpt("bq_grow"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("bq_grow_index did not drain")
-        finally:
-            q.stop()
-
-        if delivered and _os.environ.get("SPARK_GRAFT_REDELIVERY_EXERCISE") != "0":
-            last = max(delivered)
-            redelivered = spark.read.schema(
-                "vec_id long, embedding array<float>, label int"
-            ).parquet(_os.path.join(inbox, f"{last:02d}.parquet"))
-            fold(redelivered, last)
-
-        return _bq_grown_serve(spark, sf_dir, codes_root, t_)
-
-    @register(
-        "q_bq_index_compact",
-        _SQL_BQ_TOPK,
-        doc="atomic small-file compaction of the incrementally-grown BQ "
-        "code table: base + 3 batch-keyed delta subdirs (the grow fold's "
-        "flat layout, built batch-side) rewritten into ONE committed "
-        "subdir keeping the max batch id (staged-rename swap, the "
-        "dedup-index pattern); the query raises unless the Hamming "
-        "serving probe is bit-identical across the swap and the parquet "
-        "file count shrank; the probe is value-checked by the oracle "
-        "shared with q_ann_bq_persisted.",
-    )
-    def q_bq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-
-        codes_root, t_ = _build_grown_bq_layout(
-            spark, sf_dir, "bq_compact_index"
-        )
-
-        def nfiles() -> int:
-            return sum(
-                1
-                for root, _, files in _os.walk(codes_root)
-                for fn in files
-                if fn.endswith(".parquet")
-            )
-
-        pre = sorted(
-            map(
-                tuple,
-                _bq_grown_serve(spark, sf_dir, codes_root, t_).collect(),
-            )
-        )
-        files_before = nfiles()
-
-        dirs = committed_batch_dirs(codes_root)
-        max_id = max(int(_os.path.basename(d)[1:]) for d in dirs)
-        new_root = codes_root + "_new"
-        _shutil.rmtree(new_root, ignore_errors=True)
-        (
-            _read_grown_codes(spark, codes_root)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(_os.path.join(new_root, f"b{max_id:05d}"))
-        )
-        retired = codes_root + "_retired"
-        _shutil.rmtree(retired, ignore_errors=True)
-        _os.replace(codes_root, retired)
-        _os.replace(new_root, codes_root)
-        _shutil.rmtree(retired, ignore_errors=True)
-
-        files_after = nfiles()
-        if files_after >= files_before:
-            raise AssertionError(
-                f"BQ compaction did not shrink files: "
-                f"{files_before} -> {files_after}"
-            )
-        post_df = _bq_grown_serve(spark, sf_dir, codes_root, t_)
-        post = sorted(map(tuple, post_df.collect()))
-        if post != pre:
-            raise AssertionError("probe changed across BQ index compaction")
-        return post_df
-
-    @register(
-        "q_bq_index_health",
-        _bq_health_oracle(),
-        doc=f"BQ index HEALTH MONITOR over the grown index (base + delta "
-        "subdirs): sampled exact recall of the Hamming serving path on a "
-        f"fixed-{PQ_HEALTH_SAMPLE} md5-ordered anchor draw against the "
-        "exact integer-grid top-k, plus the mean per-vector popcount "
-        "(Q20) straight off the packed codes — recall decay or popcount "
-        "drifting away from dim/2 alarms the sign thresholds (stale "
-        "cutoffs collapse Hamming contrast; the refresh is a re-run of "
-        "the 1-row threshold train + re-pack). All-integer, full value "
-        "oracle.",
-    )
-    def q_bq_index_health(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import math as _math
-
-        from ..operators.similarity import (
-            TOPK,
-            _collect_query_eq,
-            bq_pack,
-            bq_hamming_topk,
-            sq8_encode,
-            sq8_stats,
-            sq8_topk,
-        )
-
-        codes_root, t_ = _build_grown_bq_layout(
-            spark, sf_dir, "bq_health_index"
-        )
-        emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        grown = _read_grown_codes(spark, codes_root)
-
-        anchor_ids = [
-            r["vec_id"]
-            for r in emb.select("vec_id")
-            .orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
-            .limit(PQ_HEALTH_SAMPLE)
-            .collect()
-        ]
-        anchors = emb.where(F.col("vec_id").isin(anchor_ids))
-        qdf = bq_pack(anchors, t_).select(
-            F.col("vec_id").alias("qid"),
-            F.col("b0").alias("qb0"),
-            F.col("b1").alias("qb1"),
-        )
-        bqt = bq_hamming_topk(grown, qdf, TOPK).select("qid", "neighbor_id")
-
-        # exact reference leg on the raw integer grid (identity-grid
-        # trick — quantizer-independent, shared with the SQ8 monitors)
-        abs_mn, _ = sq8_stats(emb)
-        ones = [1] * len(abs_mn)
-        queries = _collect_query_eq(anchors)
-        ext = sq8_topk(
-            sq8_encode(emb, abs_mn, ones, levels=1),
-            queries,
-            abs_mn,
-            ones,
-            TOPK,
-            levels=1,
-        ).select("qid", "neighbor_id")
-        recall_hits = ext.join(bqt, ["qid", "neighbor_id"]).count()
-
-        # bit balance straight off the packed index (1-row agg)
-        [pop] = (
-            grown.agg(
-                F.sum(
-                    F.bit_count("b0") + F.bit_count("b1")
-                ).alias("sb"),
-                F.count("*").alias("n"),
-            ).collect()
-        )
-        row = (
-            PQ_HEALTH_SAMPLE,
-            int(recall_hits),
-            PQ_HEALTH_SAMPLE * TOPK,
-            int(_math.floor(int(pop["sb"]) * 1048576.0 / int(pop["n"]) + 0.5)),
-        )
-        return spark.createDataFrame(
-            [row],
-            "n_sampled int, recall_hits bigint, recall_possible bigint, "
-            "mean_popcount_q20 bigint",
-        )
-
-
-_register_bq_lifecycles()
 
 
 # --------------------------------------------------------------------------
@@ -6382,7 +4345,6 @@ def _register_sessions_overlap_index_compact() -> None:
         spark: SparkSession, sf_dir: str
     ) -> DataFrame:
         import os as _os
-        import shutil as _shutil
 
         from ..plans.analytics import (
             OVERLAP_BIN_S,
@@ -6424,34 +4386,8 @@ def _register_sessions_overlap_index_compact() -> None:
                 )
             )
 
-        def nfiles() -> int:
-            return sum(
-                1
-                for root, _, files in _os.walk(bins_root)
-                for fn in files
-                if fn.endswith(".parquet")
-            )
-
         pre = probe()
-        files_before = nfiles()
-
-        dirs = committed_batch_dirs(bins_root)
-        max_id = max(int(_os.path.basename(d)[1:]) for d in dirs)
-        new_root = bins_root + "_new"
-        _shutil.rmtree(new_root, ignore_errors=True)
-        (
-            spark.read.parquet(*dirs)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(_os.path.join(new_root, f"b{max_id:05d}"))
-        )
-        retired = bins_root + "_retired"
-        _shutil.rmtree(retired, ignore_errors=True)
-        _os.replace(bins_root, retired)
-        _os.replace(new_root, bins_root)
-        _shutil.rmtree(retired, ignore_errors=True)
-
-        files_after = nfiles()
+        files_before, files_after = compact_batch_root(spark, bins_root)
         if files_after >= files_before:
             raise AssertionError(
                 f"compaction did not shrink files: {files_before} -> {files_after}"

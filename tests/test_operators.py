@@ -3382,14 +3382,14 @@ class TestBpeOovPersisted:
 
 class TestPqIndexHealth:
     """Round-14: the PQ index health monitor
-    (streaming/pipelines.py:q_pq_index_health, VERDICT r13 missing 1)."""
+    (operators/index_lifecycle.py:q_pq_index_health, VERDICT r13 missing 1)."""
 
     def test_health_row_bounds_and_occupancy(self, spark, sf_dir):
         from spark_sql_custom_mq_datasource_spark.plans.registry import (
             get_queries,
         )
         from spark_sql_custom_mq_datasource_spark.plans.util import t as _t
-        from spark_sql_custom_mq_datasource_spark.streaming.pipelines import (
+        from spark_sql_custom_mq_datasource_spark.operators.index_lifecycle import (
             PQ_HEALTH_SAMPLE,
         )
 
@@ -3646,14 +3646,14 @@ class TestBloomDecontaminate:
 
 class TestPqResidualIndexHealth:
     """Round-14: the residual-index health monitor twin
-    (streaming/pipelines.py:q_pq_residual_index_health)."""
+    (operators/index_lifecycle.py:q_pq_residual_index_health)."""
 
     def test_health_row_bounds_and_occupancy(self, spark, sf_dir):
         from spark_sql_custom_mq_datasource_spark.plans.registry import (
             get_queries,
         )
         from spark_sql_custom_mq_datasource_spark.plans.util import t as _t
-        from spark_sql_custom_mq_datasource_spark.streaming.pipelines import (
+        from spark_sql_custom_mq_datasource_spark.operators.index_lifecycle import (
             PQ_HEALTH_SAMPLE,
         )
 
@@ -4176,7 +4176,7 @@ class TestSq8GridRefresh:
 
 class TestSq8IndexLifecycle:
     """Round-15: SQ8 index maintenance twins
-    (streaming/pipelines.py:q_stream_sq8_index_grow / q_sq8_index_compact
+    (operators/index_lifecycle.py:q_stream_sq8_index_grow / q_sq8_index_compact
     / q_sq8_index_health, VERDICT r14 missing 1)."""
 
     def test_grown_serving_equals_persisted_one_shot(self, spark, sf_dir):
@@ -4200,7 +4200,7 @@ class TestSq8IndexLifecycle:
         from spark_sql_custom_mq_datasource_spark.plans.registry import (
             get_queries,
         )
-        from spark_sql_custom_mq_datasource_spark.streaming.pipelines import (
+        from spark_sql_custom_mq_datasource_spark.operators.index_lifecycle import (
             PQ_HEALTH_SAMPLE,
         )
 
@@ -4813,7 +4813,7 @@ class TestPqDeleteFamily:
 class TestBqPersistedIndex:
     """Round-17: persisted BQ index + lifecycle
     (operators/similarity.py:q_ann_bq_persisted,
-    streaming/pipelines.py:q_stream_bq_index_grow,q_bq_index_compact,
+    operators/index_lifecycle.py:q_stream_bq_index_grow,q_bq_index_compact,
     q_bq_index_health)."""
 
     def test_persisted_serving_bit_identical_to_inline(self, spark, sf_dir):

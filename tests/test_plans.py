@@ -907,15 +907,16 @@ class TestRound15Plans:
         growth layout keeps the one-shot index's pruning dividend."""
         import re
 
-        from spark_sql_custom_mq_datasource_spark.streaming.pipelines import (
-            _build_grown_sq8_family_layout,
-            _read_grown_codes,
+        from spark_sql_custom_mq_datasource_spark.operators.index_lifecycle import (
+            SQ8,
+            build_grown_layout,
+            read_grown_codes,
         )
 
-        codes_root, fam, _ = _build_grown_sq8_family_layout(
-            spark, sf_dir, "sq8_plan_pin_index", residual=False
+        codes_root, bound, emb = build_grown_layout(
+            spark, sf_dir, SQ8, "plan_pin"
         )
-        out = fam.serve_std(_read_grown_codes(spark, codes_root))
+        out = SQ8.serve(bound, emb, read_grown_codes(spark, codes_root))
         p = df_plan(spark, out)
         assert "CartesianProduct" not in p
         pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", p)
@@ -944,15 +945,16 @@ class TestRound15Plans:
         scan — growth keeps the pruning dividend, like the raw twin."""
         import re
 
-        from spark_sql_custom_mq_datasource_spark.streaming.pipelines import (
-            _build_grown_sq8_family_layout,
-            _read_grown_codes,
+        from spark_sql_custom_mq_datasource_spark.operators.index_lifecycle import (
+            SQ8_RESIDUAL,
+            build_grown_layout,
+            read_grown_codes,
         )
 
-        codes_root, fam, _ = _build_grown_sq8_family_layout(
-            spark, sf_dir, "sq8_res_plan_pin_index", residual=True
+        codes_root, bound, emb = build_grown_layout(
+            spark, sf_dir, SQ8_RESIDUAL, "plan_pin"
         )
-        out = fam.serve_std(_read_grown_codes(spark, codes_root))
+        out = SQ8_RESIDUAL.serve(bound, emb, read_grown_codes(spark, codes_root))
         p = df_plan(spark, out)
         assert "CartesianProduct" not in p
         pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", p)
@@ -1187,3 +1189,24 @@ class TestRound17OptimizationPlans:
         in the composed plan (r16 HEAD carried 94)."""
         p = plan(spark, sf_dir, "q_pipeline_end_to_end")
         assert "SortMergeJoin" not in p
+
+
+class TestTpEnvKnobs:
+    def test_malformed_env_knobs_fall_back(self, spark, sf_dir, monkeypatch):
+        """A non-integer SPARK_GRAFT_TP_BYTES_PER_TASK / SPARK_GRAFT_TP_WIDTH
+        must not raise in tp(): the spread falls back to the default
+        bytes-per-task rule and the width probe is ignored."""
+        from spark_sql_custom_mq_datasource_spark.plans import util
+
+        key = (util.session_key(spark), sf_dir, "embeddings", "tp")
+        monkeypatch.delitem(util._cache, key, raising=False)
+        monkeypatch.delenv("SPARK_GRAFT_TP_WIDTH", raising=False)
+        monkeypatch.delenv("SPARK_GRAFT_TP_BYTES_PER_TASK", raising=False)
+        default = util.tp(spark, sf_dir, "embeddings").rdd.getNumPartitions()
+
+        del util._cache[key]
+        monkeypatch.setenv("SPARK_GRAFT_TP_BYTES_PER_TASK", "64k")
+        monkeypatch.setenv("SPARK_GRAFT_TP_WIDTH", "wide")
+        got = util.tp(spark, sf_dir, "embeddings").rdd.getNumPartitions()
+        del util._cache[key]
+        assert got == default

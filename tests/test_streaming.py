@@ -181,11 +181,18 @@ class TestRocksDBStateStore:
         n_over = floor + 3
         d = tmp_path / "inbox"
         d.mkdir()
-        (d / "00.json").write_bytes(b"x" * (VOLUME_BYTES_PER_STATE_PART * n_over))
+        import os
+
+        def sized(name: str, size: int) -> None:
+            # sparse: the sizing walk reads st_size, not content
+            (d / name).write_bytes(b"")
+            os.truncate(d / name, size)
+
+        sized("00.json", VOLUME_BYTES_PER_STATE_PART * n_over)
         assert volume_state_parts(spark, str(d)) == n_over
         # metadata/hidden files contribute nothing
-        (d / "_SUCCESS").write_bytes(b"x" * VOLUME_BYTES_PER_STATE_PART * 8)
-        (d / ".00.json.crc").write_bytes(b"x" * VOLUME_BYTES_PER_STATE_PART * 8)
+        sized("_SUCCESS", VOLUME_BYTES_PER_STATE_PART * 8)
+        sized(".00.json.crc", VOLUME_BYTES_PER_STATE_PART * 8)
         assert volume_state_parts(spark, str(d)) == n_over
 
 

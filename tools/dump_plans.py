@@ -410,9 +410,10 @@ SHOWCASE = [
         "residualized ADC lookup — the probe recomputes nothing; each "
         "growth trigger was one O(batch) residual encode + append.",
     ),
-    # (q_pq_index_health returns a driver-assembled one-row summary —
-    # its plan story lives in SCALING.md; the legs it composes are the
-    # already-showcased ADC probe and a fixed-N broadcast exact leg.)
+    # (q_pq_index_health, like every index_lifecycle.health monitor,
+    # returns a one-row summary assembled from bounded collects — its
+    # plan story lives in SCALING.md; the legs it composes are the
+    # already-showcased serving probe and a fixed-N broadcast exact leg.)
     (
         "q_bpe_tokenize_oov_persisted",
         "Persisted-artifact OOV serving: the merge table arrives as a "
