@@ -22,6 +22,12 @@ monitor loop:
     skew for the cell-partitioned layouts, mean popcount for flat BQ.
     The retrain thresholds are documented in SCALING.md.
 
+  * delete: merge-on-read serving anti-joins a tombstone keys table
+    against the persisted code scan (delete_mor); a maintenance pass
+    applies the tombstones by rewriting the codes without them behind
+    the pinned staged swap (delete_apply). Both raise unless serving
+    is bit-identical to its rebuild from the survivors.
+
 A ``Layout`` carries only what is the layout's own: its frozen-artifact
 encode and serving probe, its partition column, the exact leg its recall
 is scored against, its drift statistic, and its oracles.
@@ -36,11 +42,12 @@ statistic is one |cells|-row (or 1-row) aggregate.
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 import shutil
 from collections.abc import Callable
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,8 +55,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.registry import register
-from ..plans.util import cached_fixture_dir, t, work_dir
-from ..sources.manifest import replace_dir
+from ..plans.util import cached_fixture_dir, t, tp, work_dir
+from ..sources.manifest import pinned_replace, replace_dir
 from .similarity import (
     _SQL_BQ_BASE_CTES,
     _SQL_BQ_TOPK,
@@ -67,7 +74,10 @@ from .similarity import (
     SQ8_DIM,
     SQ8_LEVELS,
     TOPK,
+    _IVFPQ_SERVE_ORACLE,
     _PQ_PROBE_ORACLE,
+    _SQ8_DELETE_MOD,
+    _SQ8_DELETE_RESIDUE,
     _collect_query_eq,
     _ivfpq_residual_base_ctes,
     _ivfpq_residual_probe_ctes,
@@ -77,7 +87,10 @@ from .similarity import (
     _pq_oracle_chain,
     _pq_subvectors,
     _pq_train_ctes,
+    _proved_readout,
     _sq8_residuals,
+    _sq8_tombstones,
+    _tombstone_oracle,
     _sql_pq_msum,
     adc_probe_topk,
     bq_index_path,
@@ -86,8 +99,10 @@ from .similarity import (
     ivf_sq8_probes,
     ivf_sq8_residual_scan_topk,
     ivf_sq8_scan_topk,
+    pq_adc_rank,
     pq_code_struct_array,
     pq_index_path,
+    pq_probe_tables,
     pq_residual_encode,
     pq_residual_index_path,
     residual_probe_topk,
@@ -146,15 +161,19 @@ def read_grown_codes(spark: SparkSession, codes_root: str) -> DataFrame:
     return grown
 
 
+def _write_codes(df: DataFrame, path: str, partition_by: str | None) -> None:
+    w = df.write.mode("overwrite")
+    if partition_by:
+        w = w.partitionBy(partition_by)
+    w.parquet(path)
+
+
 def _write_batch(
     df: DataFrame, root: str, batch_id: int, partition_by: str | None
 ) -> None:
     """Batch-keyed OVERWRITE: rewriting batch ``batch_id`` replaces its
     own earlier output, never appends to it."""
-    w = df.write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(partition_by)
-    w.parquet(os.path.join(root, f"b{batch_id:05d}"))
+    _write_codes(df, os.path.join(root, f"b{batch_id:05d}"), partition_by)
 
 
 def _parquet_files(dirs: list[str]) -> int:
@@ -250,6 +269,7 @@ class Bound(NamedTuple):
     encode: Callable[[DataFrame], DataFrame]
     # (anchors, grown codes) -> the serving top-k (qid, neighbor_id, ...)
     probe: Callable[[DataFrame, DataFrame], DataFrame]
+    codes: str  # the persisted index's code table (the delete pair's input)
 
 
 @dataclass(frozen=True)
@@ -269,6 +289,8 @@ class Layout:
     # the health monitor's drift columns: grown -> (values, schema)
     drift: Callable[[DataFrame], tuple[tuple, str]]
     serve_oracle: str
+    # the serve oracle's candidate clause, where the tombstone filter lands
+    candidate_clause: str
     health_oracle: str
     twin: str  # the persisted serving query whose oracle grow/compact share
     encode_doc: str
@@ -394,6 +416,62 @@ def health(spark: SparkSession, sf_dir: str, layout: Layout) -> DataFrame:
     )
 
 
+def delete_mor(
+    spark: SparkSession, sf_dir: str, layout: Layout, dels: DataFrame
+) -> DataFrame:
+    """Merge-on-read serving over the persisted index: the code scan MINUS
+    the tombstone keys table ``dels`` (any (vec_id) DataFrame — the
+    erasure-feed contract; an unhinted equi anti-join), served by the
+    twin's probe, which keeps its probed-cell partition filter. RAISES
+    unless bit-identical to serving over a survivors-only encode against
+    the same frozen artifacts."""
+    bound = layout.bind(spark, sf_dir)
+    emb = tp(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
+    live = spark.read.parquet(bound.codes).join(dels, "vec_id", "left_anti")
+    survivors = bound.encode(emb.join(dels, "vec_id", "left_anti"))
+    return _proved_readout(
+        spark,
+        layout.serve(bound, emb, live),
+        layout.serve(bound, emb, survivors),
+    )
+
+
+def delete_apply(
+    spark: SparkSession, sf_dir: str, layout: Layout, dels: DataFrame
+) -> DataFrame:
+    """The APPLY pass: an own copy of the index (the session-cached one
+    stays live) is rewritten without the tombstoned rows behind
+    pinned_replace. RAISES unless the row delta equals the tombstoned
+    row count (M rows per key on PQ) and serving the compacted index
+    DIRECTLY equals the merge-on-read probe before the apply."""
+    bound = layout.bind(spark, sf_dir)
+    emb = tp(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
+    live = os.path.join(work_dir(f"{layout.key}_delete_compact_index"), "codes")
+    _write_codes(bound.encode(emb), live, layout.partition_by)
+
+    def codes() -> DataFrame:
+        return spark.read.parquet(live)
+
+    mor = layout.serve(bound, emb, codes().join(dels, "vec_id", "left_anti"))
+    pre = sorted(map(tuple, mor.collect()))  # bounded: Q·topk rows
+    rows_before = codes().count()
+    n_tombstoned = codes().join(dels, "vec_id", "semi").count()
+    pinned_replace(
+        live,
+        lambda staged: _write_codes(
+            codes().join(dels, "vec_id", "left_anti"), staged, layout.partition_by
+        ),
+    )
+    dropped = rows_before - codes().count()
+    if dropped != n_tombstoned:
+        raise AssertionError(f"apply dropped {dropped} rows, expected {n_tombstoned}")
+    post_df = layout.serve(bound, emb, codes())
+    post_rows = post_df.collect()
+    if sorted(map(tuple, post_rows)) != pre:
+        raise AssertionError("probe changed across the delete apply")
+    return spark.createDataFrame(post_rows, post_df.schema).orderBy("qid", "rk")
+
+
 # --------------------------------------------------------------------------
 # Recall legs and drift statistics
 # --------------------------------------------------------------------------
@@ -502,27 +580,54 @@ def _pq_queries(anchors: DataFrame) -> DataFrame:
 def _bind_pq(spark: SparkSession, sf_dir: str) -> Bound:
     """Frozen codebooks; the encode is the stateless expression encoder
     (pq_code_struct_array), bit-identical to the build's pq_assign."""
-    cb_path, _, _ = pq_index_path(spark, sf_dir)
+    cb_path, codes_path, _ = pq_index_path(spark, sf_dir)
     cdf = spark.read.parquet(cb_path)
-    by_m: dict[int, list] = {}
-    for r in cdf.collect():  # bounded: M·K rows
-        by_m.setdefault(r["m"], []).append((r["code"], list(r["cu"])))
-    codes = pq_code_struct_array(by_m)
+
+    # built on first encode: building the M·K literal structs took ~2.4 s
+    # of driver time per bind (sf0.01, 4 cores), which a serving-only
+    # bind (q_ann_ivf_pq_persisted) never needs
+    @functools.cache
+    def codebook_expr():
+        by_m: dict[int, list] = {}
+        for r in cdf.collect():  # bounded: M·K rows
+            by_m.setdefault(r["m"], []).append((r["code"], list(r["cu"])))
+        return pq_code_struct_array(by_m)
 
     def encode(bdf: DataFrame) -> DataFrame:
-        return bdf.select("vec_id", F.explode(codes).alias("mc"), "label").select(
+        mc = F.explode(codebook_expr()).alias("mc")
+        return bdf.select("vec_id", mc, "label").select(
             "vec_id", F.col("mc.m").alias("m"), F.col("mc.code").alias("code"), "label"
         )
 
     def probe(anchors: DataFrame, grown: DataFrame) -> DataFrame:
         return adc_probe_topk(_pq_queries(anchors), cdf, grown)
 
-    return Bound(encode, probe)
+    return Bound(encode, probe, codes_path)
+
+
+def _bind_ivf_pq(spark: SparkSession, sf_dir: str) -> Bound:
+    """Raw PQ served IVF-style (q_ann_ivf_pq_persisted): _bind_pq's
+    encode, a probe that coarse-prunes against the persisted cell
+    centroids and turns the probed labels (a bounded collect, ≤ Q·nprobe
+    values) into a literal IN PARTITION filter on the code scan before
+    ADC."""
+    cb_path, _, cells_path = pq_index_path(spark, sf_dir)
+    cdf = spark.read.parquet(cb_path)
+    cells = spark.read.parquet(cells_path)
+
+    def probe(anchors: DataFrame, grown: DataFrame) -> DataFrame:
+        probes, qd = pq_probe_tables(_pq_queries(anchors), cdf, cells)
+        probed = sorted(
+            {r["label"] for r in probes.select("label").distinct().collect()}
+        )
+        return pq_adc_rank(grown.where(F.col("label").isin(probed)), probes, qd)
+
+    return _bind_pq(spark, sf_dir)._replace(probe=probe)
 
 
 def _bind_pq_residual(spark: SparkSession, sf_dir: str) -> Bound:
     """Frozen residual codebooks + INT cell centroids."""
-    cb_path, _, cells_path = pq_residual_index_path(spark, sf_dir)
+    cb_path, codes_path, cells_path = pq_residual_index_path(spark, sf_dir)
     rcdf = spark.read.parquet(cb_path)
     cells = spark.read.parquet(cells_path)
 
@@ -532,14 +637,14 @@ def _bind_pq_residual(spark: SparkSession, sf_dir: str) -> Bound:
     def probe(anchors: DataFrame, grown: DataFrame) -> DataFrame:
         return residual_probe_topk(_pq_queries(anchors), rcdf, cells, grown)
 
-    return Bound(encode, probe)
+    return Bound(encode, probe, codes_path)
 
 
 def _bind_sq8(spark: SparkSession, sf_dir: str, residual: bool) -> Bound:
     """The frozen one-row [mn, rng] grid + INT cell centroids; the
     encode is the one-shot build's exact expressions."""
     index_path = sq8_residual_index_path if residual else sq8_index_path
-    grid_path, _, cells_path = index_path(spark, sf_dir)
+    grid_path, codes_path, cells_path = index_path(spark, sf_dir)
     [grid] = spark.read.parquet(grid_path).collect()  # bounded: 1 row
     mn, rng = list(grid["mn"]), list(grid["rng"])
     cells_df = spark.read.parquet(cells_path)
@@ -564,13 +669,13 @@ def _bind_sq8(spark: SparkSession, sf_dir: str, residual: bool) -> Bound:
             )
         return ivf_sq8_scan_topk(pruned, queries, probed, mn, rng, TOPK)
 
-    return Bound(encode, probe)
+    return Bound(encode, probe, codes_path)
 
 
 def _bind_bq(spark: SparkSession, sf_dir: str) -> Bound:
     """The frozen per-dim sign cutoffs: the whole trained state is one
     64-integer row."""
-    th_path, _ = bq_index_path(spark, sf_dir)
+    th_path, codes_path = bq_index_path(spark, sf_dir)
     [row] = spark.read.parquet(th_path).collect()  # bounded: 1 row
     cutoffs = [int(v) for v in row["t"]]
 
@@ -585,7 +690,7 @@ def _bind_bq(spark: SparkSession, sf_dir: str) -> Bound:
         )
         return bq_serve(grown, qdf)
 
-    return Bound(encode, probe)
+    return Bound(encode, probe, codes_path)
 
 
 def _first_anchors(emb: DataFrame) -> DataFrame:
@@ -868,6 +973,7 @@ PQ = Layout(
     topk=PQ_TOPK,
     drift=_occupancy,
     serve_oracle=_PQ_PROBE_ORACLE,
+    candidate_clause="WHERE a.vec_id <> qd.qid",
     health_oracle=_pq_health_oracle(),
     twin="q_pq_persisted_probe",
     encode_doc="frozen-codebook expression encode (argmin via "
@@ -887,6 +993,7 @@ PQ_RESIDUAL = Layout(
     topk=PQ_TOPK,
     drift=_occupancy,
     serve_oracle=_ivfpq_residual_serve_oracle(),
+    candidate_clause="WHERE a.vec_id <> p.qid",
     health_oracle=_pq_residual_health_oracle(),
     twin="q_ann_ivf_pq_residual_persisted",
     encode_doc="residualize against the frozen INT cell centroids, "
@@ -908,6 +1015,7 @@ SQ8 = Layout(
     topk=TOPK,
     drift=_occupancy,
     serve_oracle=_SQL_IVF_SQ8,
+    candidate_clause="WHERE r.vec_id <> p.qid",
     health_oracle=_sq8_health_oracle(residual=False),
     twin="q_ann_sq8_persisted",
     encode_doc="frozen-grid sq8_encode",
@@ -927,6 +1035,7 @@ SQ8_RESIDUAL = Layout(
     topk=TOPK,
     drift=_occupancy,
     serve_oracle=_SQL_IVF_SQ8_RESIDUAL,
+    candidate_clause="WHERE r.vec_id <> p.qid",
     health_oracle=_sq8_health_oracle(residual=True),
     twin="q_ann_sq8_residual_persisted",
     encode_doc="residualize against the frozen INT cells, "
@@ -948,6 +1057,7 @@ BQ = Layout(
     topk=TOPK,
     drift=_bit_balance,
     serve_oracle=_SQL_BQ_TOPK,
+    candidate_clause="ON q.d = r.d AND r.vec_id <> q.qid",
     health_oracle=_bq_health_oracle(),
     twin="q_ann_bq_persisted",
     encode_doc="the frozen-threshold bq_pack projection",
@@ -972,13 +1082,33 @@ def _query(name: str, body, layout: Layout):
     return query
 
 
-def _register(layout: Layout) -> None:
+def _fixture_deletes(verb):
+    """A delete verb over the fixture's tombstone keys table."""
+
+    def body(spark: SparkSession, sf_dir: str, layout: Layout) -> DataFrame:
+        dels = _sq8_tombstones(tp(spark, sf_dir, "embeddings"))
+        return verb(spark, sf_dir, layout, dels)
+
+    return body
+
+
+def _register(layout: Layout, deletes: Layout) -> None:
+    """Register ``layout``'s five queries; the delete pair serves through
+    ``deletes`` (raw PQ's serves IVF-PQ, not the flat ADC probe)."""
     subdirs = "label-partitioned" if layout.partition_by else "flat"
     name, twin = layout.name, layout.twin
-    for qname, body, oracle, doc in (
+    scan = (
+        "partition-pruned label-partitioned"
+        if layout.partition_by
+        else "flat (no coarse prune: the bit scan is the prune)"
+    )
+    delete_oracle = _tombstone_oracle(deletes.serve_oracle, deletes.candidate_clause)
+    mor = f"q_ann_{layout.key}_delete_mor"
+    for qname, body, bound_to, oracle, doc in (
         (
             f"q_stream_{layout.key}_index_grow",
             grow,
+            layout,
             layout.serve_oracle,
             f"STREAMING growth of the {name} index: a base index (even "
             "vec_ids, encoded batch-side against the frozen artifacts) "
@@ -991,6 +1121,7 @@ def _register(layout: Layout) -> None:
         (
             f"q_{layout.key}_index_compact",
             compact,
+            layout,
             layout.serve_oracle,
             f"atomic small-file compaction of the incrementally-grown {name} "
             f"code table: base + {GROW_SLICES} batch-keyed delta subdirs (the "
@@ -1004,14 +1135,53 @@ def _register(layout: Layout) -> None:
         (
             f"q_{layout.key}_index_health",
             health,
+            layout,
             layout.health_oracle,
             f"{name} index HEALTH MONITOR over the grown index (base + delta "
             "subdirs): sampled exact recall of the serving path on a fixed-"
             f"{PQ_HEALTH_SAMPLE} md5-ordered anchor draw {layout.health_doc}",
         ),
+        (
+            mor,
+            _fixture_deletes(delete_mor),
+            deletes,
+            delete_oracle,
+            f"MERGE-ON-READ deletes for the persisted {name} index: serving "
+            "anti-joins the tombstone keys table (fixture: the deterministic "
+            f"vec_id % {_SQ8_DELETE_MOD} == {_SQ8_DELETE_RESIDUE} instance of "
+            f"the erasure-feed contract) against the {scan} code scan — an "
+            "unhinted vec_id equi-join — with the frozen artifacts untouched "
+            "(deletes remove candidates; retraining is the drift monitors' "
+            "job); RAISES unless the probe is bit-identical to serving over "
+            "an index encoded from only the survivors; full value oracle "
+            f"(the {deletes.twin} ranking minus tombstoned candidates).",
+        ),
+        (
+            f"q_{layout.key}_delete_compact",
+            _fixture_deletes(delete_apply),
+            deletes,
+            delete_oracle,
+            f"delete APPLICATION for the {name} index (the maintenance pass "
+            "that turns merge-on-read tombstones into compacted files): the "
+            f"code table is rewritten without the tombstoned rows — {subdirs} "
+            "rewrite behind the pinned staged swap (live files stat-pinned "
+            "until the swap) — after which serving reads the compacted index "
+            "DIRECTLY (no anti-join) and must be bit-identical to the "
+            "merge-on-read probe before the apply (RAISES otherwise); the row "
+            "delta must equal the tombstoned row count; shared oracle with "
+            f"{mor}.",
+        ),
     ):
-        register(qname, oracle, doc=doc)(_query(qname, body, layout))
+        register(qname, oracle, doc=doc)(_query(qname, body, bound_to))
 
 
+# raw PQ's delete pair serves IVF-PQ: the coarse prune as a partition filter
+IVF_PQ = replace(
+    PQ,
+    bind=_bind_ivf_pq,
+    serve_oracle=_IVFPQ_SERVE_ORACLE,
+    candidate_clause="WHERE a.vec_id <> p.qid",
+    twin="q_ann_ivf_pq_persisted",
+)
 for _layout in LAYOUTS:
-    _register(_layout)
+    _register(_layout, IVF_PQ if _layout is PQ else _layout)

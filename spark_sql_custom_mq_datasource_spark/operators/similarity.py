@@ -25,7 +25,7 @@ numpy matmul), also with a full oracle.
 
 from __future__ import annotations
 
-from typing import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -43,7 +43,7 @@ from pyspark.sql.window import Window
 
 from ..plans.registry import register
 from ..plans.util import materialize_small, session_key, t, tp, work_dir
-from ..sources.manifest import replace_dir
+from ..sources.manifest import file_stats, pinned_replace, replace_dir
 
 TOPK = 5
 N_QUERIES = 5  # fixture queries: vec_id < 5
@@ -2861,27 +2861,11 @@ def pq_adc_rank(codes: DataFrame, probes: DataFrame, qd: DataFrame) -> DataFrame
     "partition filter is pinned in tests/test_plans.py.",
 )
 def q_ann_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cb_path, codes_path, cells_path = pq_index_path(spark, sf_dir)
-    cdf = spark.read.parquet(cb_path)
-    cells = spark.read.parquet(cells_path)
+    from .index_lifecycle import _bind_ivf_pq, _first_anchors
+
+    bound = _bind_ivf_pq(spark, sf_dir)
     emb = tp(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    anchor_ids = [
-        r["vec_id"]
-        for r in emb.select("vec_id").orderBy("vec_id").limit(PQ_QUERIES).collect()
-    ]
-    # query-side subvectors only — corpus quantization lives in the index
-    q = _pq_subvectors(emb.where(F.col("vec_id").isin(anchor_ids))).select(
-        F.col("vec_id").alias("qid"), "m", F.col("sv").alias("qsv")
-    )
-    probes, qd = pq_probe_tables(q, cdf, cells)
-    # bounded: ≤ Q·nprobe labels — becomes a literal IN partition filter
-    probed_labels = sorted(
-        {r["label"] for r in probes.select("label").distinct().collect()}
-    )
-    pruned_codes = spark.read.parquet(codes_path).where(
-        F.col("label").isin(probed_labels)
-    )
-    return pq_adc_rank(pruned_codes, probes, qd)
+    return bound.probe(_first_anchors(emb), spark.read.parquet(bound.codes))
 
 
 # --------------------------------------------------------------------------
@@ -3878,6 +3862,61 @@ def q_ann_ivf_pq_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
+def _proved_readout(
+    spark: SparkSession,
+    probe: DataFrame,
+    full: DataFrame,
+    counts: tuple[tuple, str] | None = None,
+) -> DataFrame:
+    """RAISE unless ``probe`` is bit-identical to ``full`` (the rebuild it
+    must equal), then return the probe's rows ordered by (qid, rk) with
+    the one ``counts`` row (values, schema) cross-joined on."""
+    rows = probe.collect()
+    if sorted(map(tuple, rows)) != sorted(map(tuple, full.collect())):
+        raise AssertionError("probe differs from its full rebuild")
+    out = spark.createDataFrame(rows, probe.schema)
+    if counts is not None:
+        out = out.crossJoin(F.broadcast(spark.createDataFrame([counts[0]], counts[1])))
+    return out.orderBy("qid", "rk")
+
+
+def _coarse_refresh_swap(
+    live: str,
+    stale: dict,
+    fresh: dict,
+    encode_moved: Callable[[list[int]], DataFrame],
+) -> list[int]:
+    """The incremental re-index both coarse refreshes share: cells whose
+    fresh centroid differs from the stale one are re-encoded
+    (``encode_moved(changed)``), every other ``label=`` dir of ``live``
+    is copied byte-untouched (at an object store a server-side
+    copy — metadata-rate), and the result swaps in by pinned_replace.
+    Returns the changed labels."""
+    import os as _os
+    import shutil as _shutil
+
+    missing = sorted(set(fresh) - set(stale))
+    if missing:
+        # a cell with no vectors in the original half has no stale
+        # centroid — its vectors could never have been encoded, so the
+        # premise (a grown index over frozen artifacts) is violated
+        raise AssertionError(f"cells absent from the stale index: {missing}")
+    changed = sorted(lb for lb in fresh if fresh[lb] != stale[lb])
+
+    def write(staged: str) -> None:
+        _os.makedirs(staged)
+        if changed:
+            encode_moved(changed).write.mode("overwrite").partitionBy(
+                "label"
+            ).parquet(staged)
+        for d in _os.listdir(live):
+            if d.startswith("label=") and int(d.split("=", 1)[1]) not in changed:
+                _shutil.copytree(_os.path.join(live, d), _os.path.join(staged, d))
+
+    pinned_replace(live, write)
+    return changed
+
+
 def _pq_coarse_refresh_oracle() -> str:
     l2 = _SQL_PQ_L2.format(a="v.sv", b="c.cu", n=PQ_SUBDIM)
     raw = _pq_train_ctes()
@@ -3985,7 +4024,6 @@ def pq_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     means shift nearly every cell, so the moved-subset arithmetic is only
     assertable on constructed geometry)."""
     import os as _os
-    import shutil as _shutil
 
     from pyspark.storagelevel import StorageLevel
 
@@ -4029,55 +4067,16 @@ def pq_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
             out.setdefault(r["label"], {})[r["m"]] = tuple(r["cu"])
         return out
 
-    h_map = by_label(cci_h.collect())
-    f_map = by_label(cci_f.collect())
-    missing = sorted(set(f_map) - set(h_map))
-    if missing:
-        # a cell with no vectors in the original half has no stale
-        # centroid — its vectors could never have been encoded, so the
-        # premise (a grown index over frozen artifacts) is violated
-        raise AssertionError(f"cells absent from the stale index: {missing}")
-    changed = sorted(lb for lb in f_map if f_map[lb] != h_map[lb])
-    n_changed_cells = len(changed)
-
-    # stat-pin the live index: no file may change before the swap
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-
-    staged = _os.path.join(state, "staged")
-    _shutil.rmtree(staged, ignore_errors=True)
-    _os.makedirs(staged, exist_ok=True)
-    if changed:
-        # re-encode ONLY the moved cells' vectors against the fresh
-        # centroids (codebooks frozen)
-        (
-            pq_residual_encode(
-                emb.where(F.col("label").isin(changed)), cci_f, rcdf
-            )
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(staged)
-        )
-    # unchanged cells: file-level copy, never re-encoded (at an object
-    # store this is a server-side copy/rename — metadata-rate)
-    for d in _os.listdir(current):
-        if d.startswith("label=") and int(d.split("=", 1)[1]) not in changed:
-            _shutil.copytree(
-                _os.path.join(current, d), _os.path.join(staged, d)
-            )
-
-    post_stats = stat_map(current)
-    if post_stats != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    replace_dir(staged, current)
+    # re-encode ONLY the moved cells' vectors against the fresh
+    # centroids (codebooks frozen)
+    changed = _coarse_refresh_swap(
+        current,
+        by_label(cci_h.collect()),
+        by_label(cci_f.collect()),
+        lambda moved: pq_residual_encode(
+            emb.where(F.col("label").isin(moved)), cci_f, rcdf
+        ),
+    )
 
     # probe the refreshed index; RAISE unless bit-identical to a full
     # re-encode against (cci_f, frozen codebooks)
@@ -4088,26 +4087,21 @@ def pq_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     q = sv.where(F.col("vec_id").isin(anchor_ids)).select(
         F.col("vec_id").alias("qid"), "m", F.col("sv").alias("qsv")
     )
-    refreshed = spark.read.parquet(current)
-    probe = residual_probe_topk(q, rcdf, cci_f, refreshed)
+    probe = residual_probe_topk(q, rcdf, cci_f, spark.read.parquet(current))
     full = residual_probe_topk(q, rcdf, cci_f, pq_residual_encode(emb, cci_f, rcdf))
-    probe_rows = probe.collect()
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError(
-            "incremental refresh probe differs from the full re-encode"
-        )
+    n_moved = emb.where(F.col("label").isin(changed)).count() if changed else 0
+    out = _proved_readout(
+        spark,
+        probe,
+        full,
+        (
+            (n_moved, emb.count(), len(changed)),
+            "n_moved bigint, n_total bigint, n_changed_cells bigint",
+        ),
+    )
     sv.unpersist()
     rsv_h.unpersist()
-    n_total = emb.count()
-    n_moved = (
-        emb.where(F.col("label").isin(changed)).count() if changed else 0
-    )
-    counts = spark.createDataFrame(
-        [(int(n_moved), int(n_total), int(n_changed_cells))],
-        "n_moved bigint, n_total bigint, n_changed_cells bigint",
-    )
-    out = spark.createDataFrame(probe_rows, probe.schema)
-    return out.crossJoin(F.broadcast(counts)).orderBy("qid", "rk")
+    return out
 
 
 # --------------------------------------------------------------------------
@@ -4908,15 +4902,13 @@ def sq8_grid_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     registered query so tests can drive it with constructed drift
     geometry (dims moved / not moved, saturating tails)."""
     import os as _os
-    import shutil as _shutil
 
     # stale grid: trained on the even-vec_id half (the original build)
     mn_h, mx_h = _sq8_raw_minmax(emb.where(F.col("vec_id") % 2 == 0))
     rng_h = [max(mx_h[d] - mn_h[d], 1) for d in range(len(mn_h))]
 
     # the live index: the FULL corpus encoded on the stale grid
-    state = work_dir("sq8_refresh_index")
-    current = _os.path.join(state, "current")
+    current = _os.path.join(work_dir("sq8_refresh_index"), "current")
     sq8_encode(emb, mn_h, rng_h).write.mode("overwrite").parquet(current)
 
     # the alarm's number: out-of-grid values under the stale grid
@@ -4931,43 +4923,25 @@ def sq8_grid_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
         if mn_h[d] != mn_f[d] or mx_h[d] != mx_f[d]
     )
     n_sat_after = _sq8_out_of_grid_count(emb, mn_f, mx_f)
-
-    # stat-pin the live index: no file may change before the swap
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-
-    staged = _os.path.join(state, "staged")
-    _shutil.rmtree(staged, ignore_errors=True)
-    sq8_encode(emb, mn_f, rng_f).write.mode("overwrite").parquet(staged)
-
-    if stat_map(current) != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    replace_dir(staged, current)
+    pinned_replace(
+        current,
+        lambda staged: sq8_encode(emb, mn_f, rng_f)
+        .write.mode("overwrite")
+        .parquet(staged),
+    )
 
     # probe the refreshed index; RAISE unless bit-identical to a
     # from-scratch rebuild on the fresh grid
     queries = _collect_query_eq(emb.where(F.col("vec_id") < N_QUERIES))
-    refreshed = spark.read.parquet(current)
-    probe = sq8_topk(refreshed, queries, mn_f, rng_f, TOPK)
-    probe_rows = probe.collect()
-    full = sq8_topk(sq8_encode(emb, mn_f, rng_f), queries, mn_f, rng_f, TOPK)
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError("refreshed probe differs from the full rebuild")
-
-    counts = spark.createDataFrame(
-        [(int(n_dims_moved), int(n_sat_before), int(n_sat_after))],
-        "n_dims_moved bigint, n_sat_before bigint, n_sat_after bigint",
+    return _proved_readout(
+        spark,
+        sq8_topk(spark.read.parquet(current), queries, mn_f, rng_f, TOPK),
+        sq8_topk(sq8_encode(emb, mn_f, rng_f), queries, mn_f, rng_f, TOPK),
+        (
+            (n_dims_moved, n_sat_before, n_sat_after),
+            "n_dims_moved bigint, n_sat_before bigint, n_sat_after bigint",
+        ),
     )
-    out = spark.createDataFrame(probe_rows, probe.schema)
-    return out.crossJoin(F.broadcast(counts)).orderBy("qid", "rk")
 
 
 # --------------------------------------------------------------------------
@@ -5475,7 +5449,6 @@ def sq8_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame
     the registered query so tests can drive it with constructed geometry
     where only SOME cells' centroids move."""
     import os as _os
-    import shutil as _shutil
 
     half = emb.where(F.col("vec_id") % 2 == 0)
 
@@ -5488,8 +5461,7 @@ def sq8_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame
 
     # the grown index: EVERY vector residual-encoded vs the STALE cells
     # on the frozen grid (clamped — stale artifacts meet unseen data)
-    state = work_dir("sq8_coarse_refresh_index")
-    current = _os.path.join(state, "current")
+    current = _os.path.join(work_dir("sq8_coarse_refresh_index"), "current")
     (
         sq8_encode_ints(_sq8_residuals(emb, cells_h_df), "rv", mn, rng, clamp=True)
         .write.mode("overwrite")
@@ -5497,55 +5469,22 @@ def sq8_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame
         .parquet(current)
     )
 
-    # refresh: new INT centroids over the full corpus
+    # refresh: new INT centroids over the full corpus; ONLY the moved
+    # cells' vectors re-encode against them (residual grid frozen)
     cells_f = ivf_sq8_cells(emb)
     cells_f_df = spark.createDataFrame(cells_f, "label int, cq array<bigint>")
-    h_map = dict(cells_h)
-    f_map = dict(cells_f)
-    missing = sorted(set(f_map) - set(h_map))
-    if missing:
-        # a cell absent from the original half has no stale centroid —
-        # its vectors could never have been encoded, premise violated
-        raise AssertionError(f"cells absent from the stale index: {missing}")
-    changed = sorted(lb for lb in f_map if f_map[lb] != h_map[lb])
-    n_changed_cells = len(changed)
-
-    # stat-pin the live index: no file may change before the swap
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-
-    staged = _os.path.join(state, "staged")
-    _shutil.rmtree(staged, ignore_errors=True)
-    _os.makedirs(staged, exist_ok=True)
-    if changed:
-        # re-encode ONLY the moved cells' vectors against the fresh
-        # centroids (residual grid frozen)
-        moved = emb.where(F.col("label").isin(changed))
-        (
-            sq8_encode_ints(
-                _sq8_residuals(moved, cells_f_df), "rv", mn, rng, clamp=True
-            )
-            .write.mode("overwrite")
-            .partitionBy("label")
-            .parquet(staged)
-        )
-    # unchanged cells: file-level copy, never re-encoded (object store:
-    # server-side copy/rename — metadata-rate)
-    for d in _os.listdir(current):
-        if d.startswith("label=") and int(d.split("=", 1)[1]) not in changed:
-            _shutil.copytree(_os.path.join(current, d), _os.path.join(staged, d))
-
-    if stat_map(current) != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    replace_dir(staged, current)
+    changed = _coarse_refresh_swap(
+        current,
+        dict(cells_h),
+        dict(cells_f),
+        lambda moved: sq8_encode_ints(
+            _sq8_residuals(emb.where(F.col("label").isin(moved)), cells_f_df),
+            "rv",
+            mn,
+            rng,
+            clamp=True,
+        ),
+    )
 
     # probe the refreshed index; RAISE unless bit-identical to a full
     # re-encode against (fresh cells, frozen grid)
@@ -5555,29 +5494,23 @@ def sq8_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame
     refreshed = spark.read.parquet(current).where(
         F.col("label").isin(all_probed)
     )
-    probe = ivf_sq8_residual_scan_topk(
-        refreshed, queries, probed, mn, rng, cells_f, TOPK
-    )
-    probe_rows = probe.collect()
     full_codes = sq8_encode_ints(
         _sq8_residuals(emb, cells_f_df), "rv", mn, rng, clamp=True
     ).where(F.col("label").isin(all_probed))
-    full = ivf_sq8_residual_scan_topk(
-        full_codes, queries, probed, mn, rng, cells_f, TOPK
-    )
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError(
-            "incremental coarse refresh probe differs from the full re-encode"
-        )
-
-    n_total = emb.count()
     n_moved = emb.where(F.col("label").isin(changed)).count() if changed else 0
-    counts = spark.createDataFrame(
-        [(int(n_moved), int(n_total), int(n_changed_cells))],
-        "n_moved bigint, n_total bigint, n_changed_cells bigint",
+    return _proved_readout(
+        spark,
+        ivf_sq8_residual_scan_topk(
+            refreshed, queries, probed, mn, rng, cells_f, TOPK
+        ),
+        ivf_sq8_residual_scan_topk(
+            full_codes, queries, probed, mn, rng, cells_f, TOPK
+        ),
+        (
+            (n_moved, emb.count(), len(changed)),
+            "n_moved bigint, n_total bigint, n_changed_cells bigint",
+        ),
     )
-    out = spark.createDataFrame(probe_rows, probe.schema)
-    return out.crossJoin(F.broadcast(counts)).orderBy("qid", "rk")
 
 
 # --------------------------------------------------------------------------
@@ -5828,7 +5761,6 @@ def sq8_residual_grid_refresh_readout(
     frame — split from the registered query so tests can drive it with
     constructed within-cell drift geometry."""
     import os as _os
-    import shutil as _shutil
 
     # frozen cells (the original build's centroids — they do NOT move)
     cells_h = ivf_sq8_cells(emb.where(F.col("vec_id") % 2 == 0))
@@ -5841,8 +5773,7 @@ def sq8_residual_grid_refresh_readout(
 
     # the live index: the FULL corpus encoded on the stale grid (clamped
     # — the stale grid meets residuals it was not trained on)
-    state = work_dir("sq8_res_grid_refresh_index")
-    current = _os.path.join(state, "current")
+    current = _os.path.join(work_dir("sq8_res_grid_refresh_index"), "current")
     (
         sq8_encode_ints(rem, "rv", mn_h, rng_h, clamp=True)
         .write.mode("overwrite")
@@ -5860,61 +5791,40 @@ def sq8_residual_grid_refresh_readout(
         1 for d in range(len(mn_f)) if mn_h[d] != mn_f[d] or mx_h[d] != mx_f[d]
     )
     n_sat_after = _arr_out_of_grid_count(rem, "rv", mn_f, mx_f)
-
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-
-    staged = _os.path.join(state, "staged")
-    _shutil.rmtree(staged, ignore_errors=True)
-    (
-        sq8_encode_ints(rem, "rv", mn_f, rng_f)
+    pinned_replace(
+        current,
+        lambda staged: sq8_encode_ints(rem, "rv", mn_f, rng_f)
         .write.mode("overwrite")
         .partitionBy("label")
-        .parquet(staged)
+        .parquet(staged),
     )
-
-    if stat_map(current) != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    replace_dir(staged, current)
 
     # probe the refreshed index; RAISE unless bit-identical to a
     # from-scratch rebuild on the fresh grid
     queries = _collect_query_eq(emb.where(F.col("vec_id") < N_QUERIES))
     probed = ivf_sq8_probes(queries, cells_h)
     all_probed = sorted({lb for labs in probed.values() for lb in labs})
-    refreshed = spark.read.parquet(current).where(F.col("label").isin(all_probed))
-    probe = ivf_sq8_residual_scan_topk(
-        refreshed, queries, probed, mn_f, rng_f, cells_h, TOPK
-    )
-    probe_rows = probe.collect()
-    full = ivf_sq8_residual_scan_topk(
-        sq8_encode_ints(rem, "rv", mn_f, rng_f).where(
-            F.col("label").isin(all_probed)
-        ),
-        queries,
-        probed,
-        mn_f,
-        rng_f,
-        cells_h,
-        TOPK,
-    )
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError("refreshed probe differs from the full rebuild")
 
-    counts = spark.createDataFrame(
-        [(int(n_dims_moved), int(n_sat_before), int(n_sat_after))],
-        "n_dims_moved bigint, n_sat_before bigint, n_sat_after bigint",
+    def serve(codes: DataFrame) -> DataFrame:
+        return ivf_sq8_residual_scan_topk(
+            codes.where(F.col("label").isin(all_probed)),
+            queries,
+            probed,
+            mn_f,
+            rng_f,
+            cells_h,
+            TOPK,
+        )
+
+    return _proved_readout(
+        spark,
+        serve(spark.read.parquet(current)),
+        serve(sq8_encode_ints(rem, "rv", mn_f, rng_f)),
+        (
+            (n_dims_moved, n_sat_before, n_sat_after),
+            "n_dims_moved bigint, n_sat_before bigint, n_sat_after bigint",
+        ),
     )
-    out = spark.createDataFrame(probe_rows, probe.schema)
-    return out.crossJoin(F.broadcast(counts)).orderBy("qid", "rk")
 
 
 # --------------------------------------------------------------------------
@@ -6156,18 +6066,9 @@ def sq8_dim_columnar_refresh_readout(
         if mn_h[d] != mn_f[d] or mx_h[d] != mx_f[d]
     ]
 
-    def stat_map(path: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(path):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
     # unmoved dims' column files must survive the WHOLE refresh untouched
     unmoved_pre = {
-        d: stat_map(_os.path.join(root, f"d={d}"))
+        d: file_stats(_os.path.join(root, f"d={d}"))
         for d in range(len(mn_f))
         if d not in moved
     }
@@ -6199,7 +6100,7 @@ def sq8_dim_columnar_refresh_readout(
         replace_dir(staged_d, _os.path.join(root, f"d={d}"))
 
     unmoved_post = {
-        d: stat_map(_os.path.join(root, f"d={d}")) for d in unmoved_pre
+        d: file_stats(_os.path.join(root, f"d={d}")) for d in unmoved_pre
     }
     if unmoved_post != unmoved_pre:
         raise AssertionError("unmoved dims' column files were rewritten")
@@ -6211,478 +6112,66 @@ def sq8_dim_columnar_refresh_readout(
         spark, root, len(mn_f), SQ8_DIMCOL_BUCKETS
     )
     queries = _collect_query_eq(emb.where(F.col("vec_id") < N_QUERIES))
-    probe = sq8_topk(codes_arr, queries, mn_f, rng_f, TOPK)
-    probe_rows = probe.collect()
-    full = sq8_topk(sq8_encode(emb, mn_f, rng_f), queries, mn_f, rng_f, TOPK)
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError(
-            "dim-columnar serving differs from the array-row rebuild"
-        )
-
-    counts = spark.createDataFrame(
-        [(int(len(moved)), int(len(mn_f)))],
-        "n_dims_moved bigint, n_dims_total bigint",
+    return _proved_readout(
+        spark,
+        sq8_topk(codes_arr, queries, mn_f, rng_f, TOPK),
+        sq8_topk(sq8_encode(emb, mn_f, rng_f), queries, mn_f, rng_f, TOPK),
+        ((len(moved), len(mn_f)), "n_dims_moved bigint, n_dims_total bigint"),
     )
-    out = spark.createDataFrame(probe_rows, probe.schema)
-    return out.crossJoin(F.broadcast(counts)).orderBy("qid", "rk")
 
 
 # --------------------------------------------------------------------------
-# Merge-on-read DELETES for the persisted SQ8 index (round 16, beyond the
-# brief): the one lifecycle verb the index families lacked. Production
+# Merge-on-read DELETES for the persisted ANN indexes (round 16, beyond the
+# brief): the lifecycle verb the index layouts lacked. Production
 # vector stores take deletes as a tombstone list against immutable code
 # files (Milvus delta deletes, Lucene live-docs bitmaps) — serving
 # anti-joins the tombstones (merge-on-read), and a maintenance pass later
 # APPLIES them by rewriting the files without the deleted rows (the
 # manifest family's q_manifest_row_deletes / merge-on-read pattern, now
-# on the ANN side). The trained artifacts (grid, cells) are NOT retrained
-# on delete — that is drift-monitor territory; a delete only removes
-# candidates.
+# on the ANN side). The trained artifacts (grids, cells, codebooks,
+# thresholds) are NOT retrained on delete — that is drift-monitor
+# territory; a delete only removes candidates.
+#
+# The pair is written once for all five persisted layouts in
+# operators/index_lifecycle.py (delete_mor / delete_apply, registered
+# as q_ann_<layout>_delete_mor / q_<layout>_delete_compact). What lives
+# here is the fixture's deterministic tombstone predicate (vec_id % 7 ==
+# 3) on both engines, which keeps the whole chain value-checkable.
 #
 # Scale: the tombstone anti-join is an equi-join on vec_id (broadcast
 # while the tombstone list fits, shuffle past that — unhinted, the
 # vocab-join discipline); the apply pass is one partitioned rewrite at
-# maintenance cadence with the staged-rename swap, and serving afterwards
-# reads strictly fewer bytes. Deterministic delete predicate (vec_id %
-# 7 == 3) keeps the whole chain value-checkable by the oracle.
+# maintenance cadence behind the pinned staged swap, and serving
+# afterwards reads strictly fewer bytes.
 # --------------------------------------------------------------------------
 
 _SQ8_DELETE_MOD = 7
 _SQ8_DELETE_RESIDUE = 3
 
 
-def _sq8_delete_oracle(base_sql: str) -> str:
-    """The family oracle minus tombstoned candidates: the delete filter
-    lands ONLY in the candidate clause — artifacts (grid, cells) stay
-    trained on the full corpus, exactly like the implementation."""
-    old = "WHERE r.vec_id <> p.qid"
-    assert base_sql.count(old) == 1
+def _tombstone_oracle(base_sql: str, clause: str) -> str:
+    """A serving oracle minus tombstoned candidates: the delete filter
+    lands ONLY in the candidate ``clause`` (its ``<>`` left operand is
+    the candidate vec_id) — the artifacts stay trained on the full
+    corpus, exactly like the implementation."""
+    assert base_sql.count(clause) == 1
+    vec_id = clause.rsplit(" <> ", 1)[0].split()[-1]
     return base_sql.replace(
-        old,
-        f"WHERE r.vec_id <> p.qid"
-        f" AND r.vec_id % {_SQ8_DELETE_MOD} <> {_SQ8_DELETE_RESIDUE}",
+        clause,
+        f"{clause} AND {vec_id} % {_SQ8_DELETE_MOD} <> {_SQ8_DELETE_RESIDUE}",
     )
-
-
-_SQL_SQ8_DELETE = _sq8_delete_oracle(_SQL_IVF_SQ8)
-_SQL_SQ8_RES_DELETE = _sq8_delete_oracle(_SQL_IVF_SQ8_RESIDUAL)
 
 
 def _sq8_tombstones(emb: DataFrame) -> DataFrame:
     """The FIXTURE tombstone list: (vec_id) of deleted vectors via the
     deterministic predicate, so the whole delete chain stays
-    value-checkable by the oracle. The operator contract the bodies
-    below actually take is "deletes arrive as a keys TABLE" — any
+    value-checkable by the oracle. The operator contract the delete
+    bodies actually take is "deletes arrive as a keys TABLE" — any
     (vec_id) DataFrame works (e.g. an erasure-request feed, or the
     manifest family's delete files projected to keys); this predicate
     is just that contract's deterministic instance."""
     return emb.select("vec_id").where(
         F.col("vec_id") % _SQ8_DELETE_MOD == _SQ8_DELETE_RESIDUE
-    )
-
-
-def _sq8_delete_family(spark: SparkSession, sf_dir: str, residual: bool):
-    """Closures for the delete pair over ONE persisted layout (raw or
-    residual — the index_lifecycle Layout pattern, so the MOR and APPLY
-    bodies are written once): (codes_path, encode survivors fn,
-    serving-scan fn, probed labels, queries)."""
-    from types import SimpleNamespace
-
-    if residual:
-        grid_path, codes_path, cells_path = sq8_residual_index_path(
-            spark, sf_dir
-        )
-    else:
-        grid_path, codes_path, cells_path = sq8_index_path(spark, sf_dir)
-    [grid] = spark.read.parquet(grid_path).collect()  # bounded: 1 row
-    mn, rng = list(grid["mn"]), list(grid["rng"])
-    cells_df = spark.read.parquet(cells_path)
-    cells = sorted(
-        (int(r["label"]), [int(v) for v in r["cq"]])
-        for r in cells_df.collect()  # bounded: |cells|
-    )
-    queries = _collect_query_eq(
-        t(spark, sf_dir, "embeddings").where(F.col("vec_id") < N_QUERIES)
-    )
-    probed = ivf_sq8_probes(queries, cells)
-    all_probed = sorted({lb for labs in probed.values() for lb in labs})
-
-    if residual:
-
-        def encode(df: DataFrame) -> DataFrame:
-            return sq8_encode_ints(_sq8_residuals(df, cells_df), "rv", mn, rng)
-
-        def scan(pruned: DataFrame) -> DataFrame:
-            return ivf_sq8_residual_scan_topk(
-                pruned, queries, probed, mn, rng, cells, TOPK
-            )
-
-    else:
-
-        def encode(df: DataFrame) -> DataFrame:
-            return sq8_encode(df, mn, rng)
-
-        def scan(pruned: DataFrame) -> DataFrame:
-            return ivf_sq8_scan_topk(pruned, queries, probed, mn, rng, TOPK)
-
-    return SimpleNamespace(
-        codes_path=codes_path, encode=encode, scan=scan, all_probed=all_probed
-    )
-
-
-def _ann_delete_mor_body(
-    spark: SparkSession, sf_dir: str, fam, dels: DataFrame
-) -> DataFrame:
-    """Merge-on-read serving over ANY persisted quantized layout (the
-    SQ8/residual-SQ8/PQ/residual-PQ/BQ family namespaces all fit):
-    partition-pruned code scan (fam.all_probed None ⇒ a flat layout
-    with no coarse prune, the BQ shape) MINUS the tombstone KEYS TABLE
-    (dels: any (vec_id) DataFrame — the erasure-feed contract); RAISES
-    unless bit-identical to serving over a survivors-only encode
-    against the same frozen artifacts."""
-
-    def prune(df: DataFrame) -> DataFrame:
-        if fam.all_probed is None:
-            return df
-        return df.where(F.col("label").isin(fam.all_probed))
-
-    emb = tp(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    pruned = prune(spark.read.parquet(fam.codes_path)).join(
-        dels, "vec_id", "left_anti"
-    )
-    probe = fam.scan(pruned)
-    probe_rows = probe.collect()
-
-    survivors = emb.join(dels, "vec_id", "left_anti")
-    full = fam.scan(prune(fam.encode(survivors)))
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError(
-            "merge-on-read serving differs from the survivors-only encode"
-        )
-    out = spark.createDataFrame(probe_rows, probe.schema)
-    return out.orderBy("qid", "rk")
-
-
-def _ann_delete_apply_body(
-    spark: SparkSession, sf_dir: str, fam, dels: DataFrame, state_name: str
-) -> DataFrame:
-    """The APPLY pass over ANY persisted quantized layout: rewrite the
-    code table without the tombstoned rows (own copy — the
-    session-cached index stays live), staged-rename swap, row delta must
-    equal the tombstone count, and serving the compacted index DIRECTLY
-    must equal the pre-apply MOR probe. dels is the same keys-table
-    contract as the MOR body; fam.partition_by names the layout's
-    physical partition columns (empty for flat layouts like BQ)."""
-    import os as _os
-    import shutil as _shutil
-
-    def prune(df: DataFrame) -> DataFrame:
-        if fam.all_probed is None:
-            return df
-        return df.where(F.col("label").isin(fam.all_probed))
-
-    def write_codes(df: DataFrame, path: str) -> None:
-        w = df.write.mode("overwrite")
-        part = getattr(fam, "partition_by", ["label"])
-        if part:
-            w = w.partitionBy(*part)
-        w.parquet(path)
-
-    emb = tp(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-
-    state = work_dir(state_name)
-    current = _os.path.join(state, "codes")
-    write_codes(fam.encode(emb), current)
-
-    pre_df = fam.scan(
-        prune(spark.read.parquet(current)).join(dels, "vec_id", "left_anti")
-    )
-    pre = sorted(map(tuple, pre_df.collect()))
-    rows_before = spark.read.parquet(current).count()
-    # expected removal in ROWS, not keys: SQ8 stores one code row per
-    # vector, PQ stores M — count the tombstoned rows actually present
-    n_tombstoned_rows = (
-        spark.read.parquet(current).join(dels, "vec_id", "semi").count()
-    )
-
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                pth = _os.path.join(r, fn)
-                st = _os.stat(pth)
-                out[pth] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-    staged = current + "_staged"
-    _shutil.rmtree(staged, ignore_errors=True)
-    write_codes(
-        spark.read.parquet(current).join(dels, "vec_id", "left_anti"), staged
-    )
-    if stat_map(current) != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    replace_dir(staged, current)
-
-    rows_after = spark.read.parquet(current).count()
-    if rows_before - rows_after != n_tombstoned_rows:
-        raise AssertionError(
-            f"apply dropped {rows_before - rows_after} rows, "
-            f"expected {n_tombstoned_rows}"
-        )
-
-    post_df = fam.scan(prune(spark.read.parquet(current)))
-    post_rows = post_df.collect()
-    if sorted(map(tuple, post_rows)) != pre:
-        raise AssertionError("probe changed across the delete apply")
-    out = spark.createDataFrame(post_rows, post_df.schema)
-    return out.orderBy("qid", "rk")
-
-
-@register(
-    "q_ann_sq8_delete_mor",
-    _SQL_SQ8_DELETE,
-    doc="MERGE-ON-READ deletes for the persisted SQ8 index: serving "
-    "anti-joins a tombstone list (deterministic vec_id % "
-    f"{_SQ8_DELETE_MOD} == {_SQ8_DELETE_RESIDUE}) against the "
-    "label-partitioned code scan — an unhinted vec_id equi-join "
-    "(broadcast while the list fits) — with grid and cells untouched "
-    "(deletes remove candidates; retraining is the drift monitors' "
-    "job); RAISES unless the probe is bit-identical to serving over an "
-    "index encoded from only the survivors; full value oracle "
-    "(the shared IVF-SQ8 ranking minus tombstoned candidates).",
-)
-def q_ann_sq8_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fam = _sq8_delete_family(spark, sf_dir, residual=False)
-    emb = tp(spark, sf_dir, "embeddings")
-    return _ann_delete_mor_body(spark, sf_dir, fam, _sq8_tombstones(emb))
-
-
-@register(
-    "q_sq8_delete_compact",
-    _SQL_SQ8_DELETE,
-    doc="delete APPLICATION for the SQ8 index (the maintenance pass that "
-    "turns merge-on-read tombstones into physically-compacted files): "
-    "the code table is rewritten without the tombstoned rows — per-label "
-    "partitioned rewrite, staged-rename swap, live files stat-pinned "
-    "until the swap — after which serving reads the compacted index "
-    "DIRECTLY (no anti-join) and must be bit-identical to the "
-    "merge-on-read probe before the apply (RAISES otherwise); row count "
-    "must shrink by exactly the tombstone count; shared oracle with "
-    "q_ann_sq8_delete_mor.",
-)
-def q_sq8_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fam = _sq8_delete_family(spark, sf_dir, residual=False)
-    emb = tp(spark, sf_dir, "embeddings")
-    return _ann_delete_apply_body(
-        spark, sf_dir, fam, _sq8_tombstones(emb), "sq8_delete_compact_index"
-    )
-
-
-@register(
-    "q_ann_sq8_residual_delete_mor",
-    _SQL_SQ8_RES_DELETE,
-    doc="MERGE-ON-READ deletes for the persisted RESIDUAL SQ8 index — "
-    "the layout an SQ8 store actually ships (by_residual default) gets "
-    "the same tombstone verb as the raw twin, through the SAME "
-    "parameterized body: anti-join on the partition-pruned residual "
-    "code scan, artifacts untouched, RAISES unless bit-identical to a "
-    "survivors-only residual encode; full value oracle (the residual "
-    "ranking minus tombstoned candidates).",
-)
-def q_ann_sq8_residual_delete_mor(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    fam = _sq8_delete_family(spark, sf_dir, residual=True)
-    emb = tp(spark, sf_dir, "embeddings")
-    return _ann_delete_mor_body(spark, sf_dir, fam, _sq8_tombstones(emb))
-
-
-@register(
-    "q_sq8_residual_delete_compact",
-    _SQL_SQ8_RES_DELETE,
-    doc="delete APPLICATION for the RESIDUAL SQ8 index: the raw twin's "
-    "apply pass through the same parameterized body — partitioned "
-    "rewrite without tombstoned rows, staged-rename swap, row delta == "
-    "tombstone count, post-apply direct serving == pre-apply MOR probe "
-    "(RAISES otherwise); shared oracle with "
-    "q_ann_sq8_residual_delete_mor.",
-)
-def q_sq8_residual_delete_compact(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    fam = _sq8_delete_family(spark, sf_dir, residual=True)
-    emb = tp(spark, sf_dir, "embeddings")
-    return _ann_delete_apply_body(
-        spark, sf_dir, fam, _sq8_tombstones(emb), "sq8_res_delete_compact_index"
-    )
-
-
-# --------------------------------------------------------------------------
-# Delete lifecycle for the PQ layouts (round 17, VERDICT r16 missing 1):
-# the SQ8 family's tombstone verbs on the OTHER two persisted quantized
-# layouts — raw IVF-PQ and residual IVF-PQ (the layout a production
-# store actually ships). Same parameterized MOR + APPLY bodies, new
-# family closures: artifacts = (codebooks, cell-partitioned codes,
-# coarse cells); encode survivors = the frozen-artifact ingest encode
-# (pq_assign / pq_residual_encode — bit-identical to the index build);
-# serving scan = the shared ADC rank (pq_adc_rank / residual_adc_rank).
-# A GDPR erasure path is not optional on the shipped layout; this closes
-# the lifecycle symmetry (grow/compact/refresh/health existed, delete
-# did not).
-#
-# Scale: identical to the SQ8 twins — the tombstone anti-join is an
-# unhinted vec_id equi-join over the PARTITION-PRUNED code scan
-# (broadcast while the keys table fits), the apply is one partitioned
-# rewrite at maintenance cadence behind a staged-rename swap, and the
-# codebooks/cells stay trained on the full corpus (deletes remove
-# candidates; retraining is drift-monitor territory).
-# --------------------------------------------------------------------------
-
-
-def _pq_delete_oracle(base_sql: str) -> str:
-    """A PQ serving oracle minus tombstoned candidates: the delete
-    filter lands ONLY in the candidate clause (cand/rcand) — codebooks
-    and cells stay trained on the full corpus, exactly like the
-    implementation."""
-    old = "WHERE a.vec_id <> p.qid"
-    assert base_sql.count(old) == 1
-    return base_sql.replace(
-        old,
-        f"WHERE a.vec_id <> p.qid"
-        f" AND a.vec_id % {_SQ8_DELETE_MOD} <> {_SQ8_DELETE_RESIDUE}",
-    )
-
-
-_SQL_PQ_DELETE = _pq_delete_oracle(_IVFPQ_SERVE_ORACLE)
-_SQL_PQ_RES_DELETE = _pq_delete_oracle(_ivfpq_residual_serve_oracle())
-
-
-def _pq_delete_family(spark: SparkSession, sf_dir: str, residual: bool):
-    """Closures for the delete pair over ONE persisted PQ layout (raw or
-    residual): (codes_path, encode survivors fn, serving-scan fn, probed
-    labels) — the namespace _ann_delete_mor_body/_ann_delete_apply_body
-    consume, so the MOR and APPLY verbs are written once across all four
-    quantized layouts."""
-    from types import SimpleNamespace
-
-    if residual:
-        cb_path, codes_path, cells_path = pq_residual_index_path(spark, sf_dir)
-    else:
-        cb_path, codes_path, cells_path = pq_index_path(spark, sf_dir)
-    cdf = spark.read.parquet(cb_path)
-    cells = spark.read.parquet(cells_path)
-    emb = tp(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    anchor_ids = [
-        r["vec_id"]
-        for r in emb.select("vec_id").orderBy("vec_id").limit(PQ_QUERIES).collect()
-    ]
-    # query-side subvectors only — corpus quantization lives in the index
-    q = _pq_subvectors(emb.where(F.col("vec_id").isin(anchor_ids))).select(
-        F.col("vec_id").alias("qid"), "m", F.col("sv").alias("qsv")
-    )
-    if residual:
-        probes, rqd = residual_probe_tables(q, cdf, cells)
-
-        def encode(df: DataFrame) -> DataFrame:
-            return pq_residual_encode(df, cells, cdf)
-
-        def scan(pruned: DataFrame) -> DataFrame:
-            return residual_adc_rank(pruned, probes, rqd)
-
-    else:
-        probes, qd = pq_probe_tables(q, cdf, cells)
-
-        def encode(df: DataFrame) -> DataFrame:
-            lbl = df.select("vec_id", "label")
-            sv = _pq_subvectors(df.select("vec_id", "embedding"))
-            return pq_assign(sv, cdf).join(lbl, "vec_id")
-
-        def scan(pruned: DataFrame) -> DataFrame:
-            return pq_adc_rank(pruned, probes, qd)
-
-    # bounded: ≤ Q·nprobe labels — the literal IN partition filter
-    all_probed = sorted(
-        {r["label"] for r in probes.select("label").distinct().collect()}
-    )
-    return SimpleNamespace(
-        codes_path=codes_path, encode=encode, scan=scan, all_probed=all_probed
-    )
-
-
-@register(
-    "q_ann_pq_delete_mor",
-    _SQL_PQ_DELETE,
-    doc="MERGE-ON-READ deletes for the persisted IVF-PQ index: serving "
-    "anti-joins the tombstone keys table (fixture: the deterministic "
-    f"vec_id % {_SQ8_DELETE_MOD} == {_SQ8_DELETE_RESIDUE} instance of "
-    "the erasure-feed contract) against the partition-pruned "
-    "cell-partitioned code scan — an unhinted vec_id equi-join — with "
-    "codebooks and cells untouched; RAISES unless the ADC probe is "
-    "bit-identical to serving over an index encoded from only the "
-    "survivors; full value oracle (the shared IVFADC serving chain "
-    "minus tombstoned candidates).",
-)
-def q_ann_pq_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fam = _pq_delete_family(spark, sf_dir, residual=False)
-    emb = tp(spark, sf_dir, "embeddings")
-    return _ann_delete_mor_body(spark, sf_dir, fam, _sq8_tombstones(emb))
-
-
-@register(
-    "q_pq_delete_compact",
-    _SQL_PQ_DELETE,
-    doc="delete APPLICATION for the IVF-PQ index: the code table is "
-    "rewritten without the tombstoned rows — per-label partitioned "
-    "rewrite, staged-rename swap, live files stat-pinned until the "
-    "swap — after which serving reads the compacted index DIRECTLY (no "
-    "anti-join) and must be bit-identical to the merge-on-read probe "
-    "before the apply (RAISES otherwise); row delta must equal the "
-    "tombstone count; shared oracle with q_ann_pq_delete_mor.",
-)
-def q_pq_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fam = _pq_delete_family(spark, sf_dir, residual=False)
-    emb = tp(spark, sf_dir, "embeddings")
-    return _ann_delete_apply_body(
-        spark, sf_dir, fam, _sq8_tombstones(emb), "pq_delete_compact_index"
-    )
-
-
-@register(
-    "q_ann_pq_residual_delete_mor",
-    _SQL_PQ_RES_DELETE,
-    doc="MERGE-ON-READ deletes for the persisted RESIDUAL IVF-PQ index — "
-    "the layout a production PQ store actually ships gets the same "
-    "tombstone verb through the SAME parameterized body: anti-join of "
-    "the keys table on the partition-pruned residual code scan, "
-    "artifacts untouched, RAISES unless bit-identical to a "
-    "survivors-only pq_residual_encode; full value oracle (the residual "
-    "ADC serving chain minus tombstoned candidates).",
-)
-def q_ann_pq_residual_delete_mor(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    fam = _pq_delete_family(spark, sf_dir, residual=True)
-    emb = tp(spark, sf_dir, "embeddings")
-    return _ann_delete_mor_body(spark, sf_dir, fam, _sq8_tombstones(emb))
-
-
-@register(
-    "q_pq_residual_delete_compact",
-    _SQL_PQ_RES_DELETE,
-    doc="delete APPLICATION for the RESIDUAL IVF-PQ index: partitioned "
-    "rewrite without tombstoned rows, staged-rename swap, row delta == "
-    "tombstone count, post-apply direct serving == pre-apply MOR probe "
-    "(RAISES otherwise); shared oracle with "
-    "q_ann_pq_residual_delete_mor.",
-)
-def q_pq_residual_delete_compact(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    fam = _pq_delete_family(spark, sf_dir, residual=True)
-    emb = tp(spark, sf_dir, "embeddings")
-    return _ann_delete_apply_body(
-        spark, sf_dir, fam, _sq8_tombstones(emb), "pq_res_delete_compact_index"
     )
 
 
@@ -7329,96 +6818,16 @@ def q_ann_bq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# BQ delete pair + threshold refresh (round 17, beyond the brief): the
-# lifecycle symmetry closed on the FIFTH persisted layout. Deletes ride
-# the same generalized MOR/APPLY bodies as SQ8/PQ — the BQ family
-# namespace just has NO coarse prune (all_probed=None: the flat Hamming
-# scan IS the prune) and a flat write (partition_by=[]). The refresh is
-# the BQ analogue of q_sq8_grid_refresh: stale sign thresholds (trained
-# on the even half) re-trained on the full corpus and the coded table
-# re-packed — necessarily a FULL rewrite (moved bits live inside packed
-# int64 words; there is no per-dim partial path on the packed layout —
-# that trade belongs to the dim-columnar experiment), but of the
-# 32×-smaller table. RAISES unless the refreshed serving equals a
-# from-scratch rebuild; emits n_dims_moved — the drift magnitude the
-# health monitor's popcount stat alarms on.
+# BQ threshold refresh (round 17, beyond the brief): the BQ analogue of
+# q_sq8_grid_refresh — stale sign thresholds (trained on the even half)
+# re-trained on the full corpus and the coded table re-packed —
+# necessarily a FULL rewrite (moved bits live inside packed int64 words;
+# there is no per-dim partial path on the packed layout — that trade
+# belongs to the dim-columnar experiment), but of the 32×-smaller table.
+# RAISES unless the refreshed serving equals a from-scratch rebuild;
+# emits n_dims_moved — the drift magnitude the health monitor's popcount
+# stat alarms on.
 # --------------------------------------------------------------------------
-
-
-def _bq_delete_oracle(base_sql: str) -> str:
-    """The BQ Hamming-ranking oracle minus tombstoned candidates: the
-    filter lands ONLY in the candidate clause — thresholds stay trained
-    on the full corpus, exactly like the implementation."""
-    old = "ON q.d = r.d AND r.vec_id <> q.qid"
-    assert base_sql.count(old) == 1
-    return base_sql.replace(
-        old,
-        f"ON q.d = r.d AND r.vec_id <> q.qid"
-        f" AND r.vec_id % {_SQ8_DELETE_MOD} <> {_SQ8_DELETE_RESIDUE}",
-    )
-
-
-_SQL_BQ_DELETE = _bq_delete_oracle(_SQL_BQ_TOPK)
-
-
-def _bq_delete_family(spark: SparkSession, sf_dir: str):
-    """The BQ instance of the delete-family namespace: flat codes (no
-    coarse prune — all_probed None; partition_by empty), frozen-threshold
-    pack as the survivors encode, the Hamming serve as the scan."""
-    from types import SimpleNamespace
-
-    th_path, codes_path = bq_index_path(spark, sf_dir)
-    [row] = spark.read.parquet(th_path).collect()  # bounded: 1 row
-    t_ = [int(v) for v in row["t"]]
-    qdf = bq_query_bits(spark, sf_dir, t_)
-
-    def encode(df: DataFrame) -> DataFrame:
-        return bq_pack(df.select("vec_id", "embedding"), t_)
-
-    def scan(codes: DataFrame) -> DataFrame:
-        return bq_serve(codes, qdf)
-
-    return SimpleNamespace(
-        codes_path=codes_path,
-        encode=encode,
-        scan=scan,
-        all_probed=None,
-        partition_by=[],
-    )
-
-
-@register(
-    "q_ann_bq_delete_mor",
-    _SQL_BQ_DELETE,
-    doc="MERGE-ON-READ deletes for the persisted BQ index — the fifth "
-    "persisted layout gets the same tombstone verb through the SAME "
-    "generalized body: the keys-table anti-join runs on the flat coded "
-    "scan (BQ has no coarse prune; the 32× bit scan is the prune), "
-    "thresholds untouched; RAISES unless bit-identical to serving over "
-    "a survivors-only frozen-threshold pack; full value oracle (the "
-    "Hamming ranking minus tombstoned candidates).",
-)
-def q_ann_bq_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fam = _bq_delete_family(spark, sf_dir)
-    emb = tp(spark, sf_dir, "embeddings")
-    return _ann_delete_mor_body(spark, sf_dir, fam, _sq8_tombstones(emb))
-
-
-@register(
-    "q_bq_delete_compact",
-    _SQL_BQ_DELETE,
-    doc="delete APPLICATION for the BQ index: flat rewrite without the "
-    "tombstoned rows (one row per vector — row delta == tombstoned row "
-    "count), staged-rename swap, live files stat-pinned until the swap, "
-    "post-apply direct serving == pre-apply MOR probe (RAISES "
-    "otherwise); shared oracle with q_ann_bq_delete_mor.",
-)
-def q_bq_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    fam = _bq_delete_family(spark, sf_dir)
-    emb = tp(spark, sf_dir, "embeddings")
-    return _ann_delete_apply_body(
-        spark, sf_dir, fam, _sq8_tombstones(emb), "bq_delete_compact_index"
-    )
 
 
 _SQL_BQ_REFRESH = f"""
@@ -7457,51 +6866,28 @@ _SQL_BQ_REFRESH = f"""
 )
 def q_bq_threshold_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
-    import shutil as _shutil
 
     emb = tp(spark, sf_dir, "embeddings").select("vec_id", "embedding")
 
     # the live index, packed on STALE thresholds (even-half training)
     t_h = bq_thresholds(emb.where(F.col("vec_id") % 2 == 0))
-    state = work_dir("bq_refresh_index")
-    current = _os.path.join(state, "codes")
+    current = _os.path.join(work_dir("bq_refresh_index"), "codes")
     bq_pack(emb, t_h).write.mode("overwrite").parquet(current)
 
     # retrain on the full corpus; measure drift
     t_f = bq_thresholds(emb)
     n_moved = sum(1 for a, b in zip(t_h, t_f) if a != b)
-
-    def stat_map(root: str) -> dict[str, tuple[int, int]]:
-        out = {}
-        for r, _, files in _os.walk(root):
-            for fn in files:
-                p = _os.path.join(r, fn)
-                st = _os.stat(p)
-                out[p] = (st.st_size, st.st_mtime_ns)
-        return out
-
-    pre_stats = stat_map(current)
-    staged = current + "_staged"
-    _shutil.rmtree(staged, ignore_errors=True)
-    bq_pack(emb, t_f).write.mode("overwrite").parquet(staged)
-    if stat_map(current) != pre_stats:
-        raise AssertionError("live index files changed before the swap")
-    replace_dir(staged, current)
-
-    probe = bq_serve(
-        spark.read.parquet(current), bq_query_bits(spark, sf_dir, t_f)
+    pinned_replace(
+        current,
+        lambda staged: bq_pack(emb, t_f).write.mode("overwrite").parquet(staged),
     )
-    probe_rows = probe.collect()
-    full = bq_serve(bq_pack(emb, t_f), bq_query_bits(spark, sf_dir, t_f))
-    if sorted(map(tuple, probe_rows)) != sorted(map(tuple, full.collect())):
-        raise AssertionError("refreshed probe differs from the full rebuild")
-
-    counts = spark.createDataFrame(
-        [(int(n_moved), int(SQ8_DIM))],
-        "n_dims_moved bigint, n_dims_total bigint",
+    qdf = bq_query_bits(spark, sf_dir, t_f)
+    return _proved_readout(
+        spark,
+        bq_serve(spark.read.parquet(current), qdf),
+        bq_serve(bq_pack(emb, t_f), qdf),
+        ((n_moved, SQ8_DIM), "n_dims_moved bigint, n_dims_total bigint"),
     )
-    out = spark.createDataFrame(probe_rows, probe.schema)
-    return out.crossJoin(F.broadcast(counts)).orderBy("qid", "rk")
 
 
 # --------------------------------------------------------------------------

@@ -87,15 +87,19 @@ def _normalize_events_ts(df: DataFrame) -> DataFrame:
 TP_BYTES_PER_TASK = 64 * 1024
 
 
-def _fixture_bytes(sf_dir: str, name: str) -> int:
-    """Compressed on-disk size of one fixture table — a local-FS listing
-    (the fixtures are driver-local files by the TESTDATA contract; a
-    remote store would list via the Hadoop FS API instead)."""
-    path = f"{sf_dir}/{name}.parquet"
+def data_bytes(path: str) -> int:
+    """Bytes of the data files at ``path``: one file, or every file in a
+    directory tree. Hidden/metadata names (leading '_' or '.') are
+    skipped, directories included, mirroring Spark's own data-file
+    filter: a stream's _spark_metadata or a checkpoint beside the data
+    counts for nothing. A driver-local listing (fixtures and feeds are
+    local paths by the TESTDATA/work_dir contract; a remote store would
+    list via the Hadoop FS API instead)."""
     if os.path.isfile(path):
         return os.path.getsize(path)
     total = 0
-    for root, _dirs, files in os.walk(path):
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for fname in files:
             if not fname.startswith(("_", ".")):
                 try:
@@ -139,7 +143,7 @@ def tp(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if key not in _cache:
         df = t(spark, sf_dir, name)
         per_task = _env_int("SPARK_GRAFT_TP_BYTES_PER_TASK", TP_BYTES_PER_TASK)
-        need = -(-_fixture_bytes(sf_dir, name) // max(per_task, 1))
+        need = -(-data_bytes(f"{sf_dir}/{name}.parquet") // max(per_task, 1))
         target = min(spark.sparkContext.defaultParallelism, max(1, need))
         # probe knob, see tools/probe_tp_width.py
         probe = _env_int("SPARK_GRAFT_TP_WIDTH")

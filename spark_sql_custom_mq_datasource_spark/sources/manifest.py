@@ -44,6 +44,7 @@ import json
 import os
 import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -144,6 +145,33 @@ def replace_dir(staged: str, live: str) -> None:
             os.replace(retired, live)
         raise
     shutil.rmtree(retired, ignore_errors=True)
+
+
+def file_stats(root: str) -> dict[str, tuple[int, int]]:
+    """(size, mtime_ns) of every file under ``root``: the pin a staged
+    swap holds the live tree to."""
+    out = {}
+    for r, _, files in os.walk(root):
+        for fn in files:
+            p = os.path.join(r, fn)
+            st = os.stat(p)
+            out[p] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def pinned_replace(live: str, write: Callable[[str], None]) -> None:
+    """The staged swap of every index refresh and delete-apply: pin the
+    file stats of ``live``, have ``write(staged)`` fill a sibling
+    staging dir (it may read ``live``, never change it), RAISE if any
+    file under ``live`` changed meanwhile, then replace_dir."""
+    staged = os.path.normpath(live) + "_staged"
+    shutil.rmtree(staged, ignore_errors=True)
+    pinned = file_stats(live)
+    write(staged)
+    if file_stats(live) != pinned:
+        shutil.rmtree(staged, ignore_errors=True)
+        raise AssertionError(f"live index files changed before the swap: {live}")
+    replace_dir(staged, live)
 
 
 def write_snapshot(df: DataFrame, table: str, partition_col: str) -> int:

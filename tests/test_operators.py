@@ -4790,22 +4790,21 @@ class TestPqDeleteFamily:
         exactly those neighbors from serving."""
         from pyspark.sql import functions as F
 
-        from spark_sql_custom_mq_datasource_spark.operators.similarity import (
-            _ann_delete_mor_body,
-            _pq_delete_family,
+        from spark_sql_custom_mq_datasource_spark.operators.index_lifecycle import (
+            IVF_PQ,
+            delete_mor,
         )
         from spark_sql_custom_mq_datasource_spark.plans.util import tp
 
-        fam = _pq_delete_family(spark, sf_dir, residual=False)
         emb = tp(spark, sf_dir, "embeddings")
         # baseline serving (empty keys table) to pick victims from
         none = emb.select("vec_id").where(F.lit(False))
-        base = _ann_delete_mor_body(spark, sf_dir, fam, none).collect()
+        base = delete_mor(spark, sf_dir, IVF_PQ, none).collect()
         victims = sorted({r["neighbor_id"] for r in base})[:2]
         keys = spark.createDataFrame(
             [(int(v),) for v in victims], "vec_id long"
         )
-        got = _ann_delete_mor_body(spark, sf_dir, fam, keys).collect()
+        got = delete_mor(spark, sf_dir, IVF_PQ, keys).collect()
         assert got
         assert not {r["neighbor_id"] for r in got} & set(victims)
 

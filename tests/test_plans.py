@@ -1063,24 +1063,23 @@ class TestRound17Plans:
         scale."""
         import re
 
-        from pyspark.sql import functions as F
-
+        from spark_sql_custom_mq_datasource_spark.operators.index_lifecycle import (
+            IVF_PQ,
+        )
         from spark_sql_custom_mq_datasource_spark.operators.similarity import (
-            _pq_delete_family,
             _sq8_tombstones,
         )
         from spark_sql_custom_mq_datasource_spark.plans.util import tp
 
-        fam = _pq_delete_family(spark, sf_dir, residual=False)
+        # the delete_mor shape: anti-join first, the probe prunes the cells
+        bound = IVF_PQ.bind(spark, sf_dir)
         emb = tp(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding", "label"
         )
-        pruned = (
-            spark.read.parquet(fam.codes_path)
-            .where(F.col("label").isin(fam.all_probed))
-            .join(_sq8_tombstones(emb), "vec_id", "left_anti")
+        live = spark.read.parquet(bound.codes).join(
+            _sq8_tombstones(emb), "vec_id", "left_anti"
         )
-        probe = fam.scan(pruned)
+        probe = IVF_PQ.serve(bound, emb, live)
         p = df_plan(spark, probe)
         assert "CartesianProduct" not in p
         assert "BroadcastNestedLoopJoin" not in p
@@ -1210,3 +1209,16 @@ class TestTpEnvKnobs:
         got = util.tp(spark, sf_dir, "embeddings").rdd.getNumPartitions()
         del util._cache[key]
         assert got == default
+
+    def test_data_bytes_skips_hidden_and_metadata_dirs(self, tmp_path):
+        """tp() and volume_state_parts size their input with data_bytes: a
+        stream's _spark_metadata log and a hidden checkpoint dir beside the
+        data must count for nothing, not just hidden file names."""
+        from spark_sql_custom_mq_datasource_spark.plans.util import data_bytes
+
+        (tmp_path / "part-0.parquet").write_bytes(b"x" * 100)
+        for sub, name in (("_spark_metadata", "0"), (".ckpt", "x")):
+            (tmp_path / sub).mkdir()
+            (tmp_path / sub / name).write_bytes(b"y" * 1000)
+        assert data_bytes(str(tmp_path)) == 100
+        assert data_bytes(str(tmp_path / "part-0.parquet")) == 100

@@ -1,13 +1,18 @@
-"""replace_dir (sources/manifest.py): the one directory swap every index
-compaction, refresh and delete-apply goes through. Spark-free."""
+"""replace_dir and pinned_replace (sources/manifest.py): the one directory
+swap every index compaction, refresh and delete-apply goes through, and
+the live-file pin in front of it. Spark-free."""
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 import pytest
 
-from spark_sql_custom_mq_datasource_spark.sources.manifest import replace_dir
+from spark_sql_custom_mq_datasource_spark.sources.manifest import (
+    pinned_replace,
+    replace_dir,
+)
 
 
 def _write(d, name: str, text: str) -> None:
@@ -64,3 +69,26 @@ def test_crash_between_renames_is_restored_on_next_swap(tmp_path):
     replace_dir(str(tmp_path / "staged_d3"), str(live))
     assert _files(live) == {"part-0.parquet": "new"}
     assert sorted(p.name for p in tmp_path.iterdir()) == ["d=3"]
+
+
+def test_pinned_replace_raises_when_live_changes_before_swap(tmp_path):
+    live = tmp_path / "codes"
+    _write(live, "part-0.parquet", "old")
+    st = os.stat(live / "part-0.parquet")
+
+    def touching_write(staged: str) -> None:
+        _write(Path(staged), "part-0.parquet", "new")
+        # a writer that also touches a live file: same bytes, new mtime
+        os.utime(live / "part-0.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 1))
+
+    with pytest.raises(AssertionError, match="live index files changed"):
+        pinned_replace(str(live), touching_write)
+    assert _files(live) == {"part-0.parquet": "old"}
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["codes"]
+
+    # a writer that leaves live alone gets its staged dir swapped in
+    pinned_replace(
+        str(live), lambda staged: _write(Path(staged), "part-0.parquet", "new")
+    )
+    assert _files(live) == {"part-0.parquet": "new"}
+    assert sorted(p.name for p in tmp_path.iterdir()) == ["codes"]

@@ -87,9 +87,11 @@ def profile_dimcol(spark, sf_dir):
 
 
 def profile_pqmor(spark, sf_dir):
+    from spark_sql_custom_mq_datasource_spark.operators.index_lifecycle import (
+        IVF_PQ,
+        delete_mor,
+    )
     from spark_sql_custom_mq_datasource_spark.operators.similarity import (
-        _ann_delete_mor_body,
-        _pq_delete_family,
         _sq8_tombstones,
         pq_index_path,
     )
@@ -98,18 +100,13 @@ def profile_pqmor(spark, sf_dir):
     sc = spark.sparkContext
     out = []
     timed(sc, "pq_index_path", lambda: pq_index_path(spark, sf_dir), out)
-    fam = timed(
-        sc,
-        "pq_delete_family",
-        lambda: _pq_delete_family(spark, sf_dir, residual=False),
-        out,
-    )
+    timed(sc, "ivf_pq_bind", lambda: IVF_PQ.bind(spark, sf_dir), out)
     emb = tp(spark, sf_dir, "embeddings")
     timed(
         sc,
         "mor_body",
-        lambda: _ann_delete_mor_body(
-            spark, sf_dir, fam, _sq8_tombstones(emb)
+        lambda: delete_mor(
+            spark, sf_dir, IVF_PQ, _sq8_tombstones(emb)
         ).collect(),
         out,
     )
