@@ -55,7 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..plans.registry import register
-from ..plans.util import cached_fixture_dir, t, tp, work_dir
+from ..plans.util import ordered_inbox, read_inbox, t, tp, work_dir
 from ..sources.manifest import pinned_replace, replace_dir
 from .similarity import (
     _SQL_BQ_BASE_CTES,
@@ -225,23 +225,13 @@ def _grow_inbox(spark: SparkSession, sf_dir: str) -> str:
     """The ONE deterministic inbox every index-grow query replays: the
     odd-vec_id remainder of the embeddings fixture as GROW_SLICES
     one-file micro-batches (slice i = vec_id % (2·n) == 2i+1). The spec
-    string pins the slicing rule AND the column set, so editing build()
-    without bumping the spec cannot serve stale content."""
+    string pins the slicing rule AND the column set; bump its version
+    whenever _delta_slice or ordered_inbox's file layout changes."""
     emb = _embeddings(spark, sf_dir)
-    spec = f"pq-grow-v2 slices={GROW_SLICES} odd-ids cols={','.join(emb.columns)}"
-
-    def build(inbox: str) -> None:
-        staging = os.path.join(inbox, "_staging")
-        for i in range(GROW_SLICES):
-            part = os.path.join(staging, f"slice{i}")
-            _delta_slice(emb, i).coalesce(1).write.mode("overwrite").parquet(part)
-            src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
-            shutil.copyfile(
-                os.path.join(part, src), os.path.join(inbox, f"{i:02d}.parquet")
-            )
-        shutil.rmtree(staging, ignore_errors=True)
-
-    return cached_fixture_dir("pq_grow", sf_dir, spec, build)
+    spec = f"pq-grow-v3 slices={GROW_SLICES} odd-ids cols={','.join(emb.columns)}"
+    return ordered_inbox(
+        "pq_grow", sf_dir, spec, [_delta_slice(emb, i) for i in range(GROW_SLICES)]
+    )
 
 
 def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -336,37 +326,22 @@ def build_grown_layout(
 def grow(spark: SparkSession, sf_dir: str, layout: Layout) -> DataFrame:
     """Base index + the streamed remainder folded as batch-keyed
     OVERWRITE appends, then the twin's serving probe over base ∪ deltas."""
-    from ..streaming.pipelines import _ckpt
+    from ..streaming.pipelines import redelivery_exercise, run_foreach_batch
 
     codes_root, bound, emb = _base_index(spark, sf_dir, layout, "grow")
     inbox = _grow_inbox(spark, sf_dir)
-    delivered: list[int] = []
 
     def fold(bdf: DataFrame, batch_id: int) -> None:
-        delivered.append(int(batch_id))
         _write_batch(bound.encode(bdf), codes_root, batch_id + 1, layout.partition_by)
 
-    q = (
-        spark.readStream.schema(_EMB_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(inbox)
-        .writeStream.foreachBatch(fold)
-        .option("checkpointLocation", _ckpt(f"{layout.key}_grow"))
-        .trigger(availableNow=True)
-        .start()
+    delivered = run_foreach_batch(
+        spark, read_inbox(spark, _EMB_SCHEMA, inbox), fold, f"{layout.key}_grow"
     )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError(f"{layout.name} index grow did not drain")
-    finally:
-        q.stop()
-
-    # Redelivery exercise (default ON; SPARK_GRAFT_REDELIVERY_EXERCISE=0
-    # skips it): re-fold the LAST DELIVERED batch's content under its
-    # recorded id. max(delivered), not GROW_SLICES-1: availableNow may
-    # group files into fewer batches. The probe must not change.
-    if delivered and os.environ.get("SPARK_GRAFT_REDELIVERY_EXERCISE") != "0":
+    # Redelivery exercise (default ON, see redelivery_exercise): re-fold
+    # the LAST DELIVERED batch's content under its recorded id.
+    # max(delivered), not GROW_SLICES-1: availableNow may group files
+    # into fewer batches. The probe must not change.
+    if delivered and redelivery_exercise():
         last = max(delivered)
         inbox_file = os.path.join(inbox, f"{last:02d}.parquet")
         fold(spark.read.schema(_EMB_SCHEMA).parquet(inbox_file), last)

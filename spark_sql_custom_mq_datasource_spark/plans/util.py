@@ -12,9 +12,11 @@ tz-awareness differences between engines.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: F401 (used throughout)
+from pyspark.sql.types import StructType
 
 from .. import TABLES
 
@@ -359,6 +361,43 @@ def stream_inbox(df: DataFrame, name: str, sf_dir: str, slices: int = 4) -> str:
         sf_dir,
         spec,
         lambda p: df.repartition(slices).write.mode("overwrite").parquet(p),
+    )
+
+
+def ordered_inbox(
+    name: str, sf_dir: str, spec: str, slices: Iterable[DataFrame]
+) -> str:
+    """Build ONCE (via cached_fixture_dir) a micro-batch inbox that
+    replays ``slices`` in order: slice i is the single file
+    ``NN.parquet`` with its mtime pinned to 1_600_000_000 + 100·i, so
+    read_inbox delivers one slice per trigger, oldest first. ``slices``
+    is iterated only when the cache misses, so a generator defers the
+    eager work its slicing needs (a min/max collect) to the build."""
+    import shutil
+
+    def build(inbox: str) -> None:
+        scratch = os.path.join(inbox, "_scratch")
+        for i, df in enumerate(slices):
+            part = os.path.join(scratch, f"slice{i}")
+            df.coalesce(1).write.mode("overwrite").parquet(part)
+            src = next(f for f in os.listdir(part) if f.endswith(".parquet"))
+            dst = os.path.join(inbox, f"{i:02d}.parquet")
+            shutil.copyfile(os.path.join(part, src), dst)
+            mtime = 1_600_000_000 + 100 * i
+            os.utime(dst, (mtime, mtime))
+        shutil.rmtree(scratch, ignore_errors=True)
+
+    return cached_fixture_dir(name, sf_dir, spec, build)
+
+
+def read_inbox(spark: SparkSession, schema: StructType | str, inbox: str) -> DataFrame:
+    """A file stream over an inbox directory, one file per trigger in
+    mtime order (the arrival order ordered_inbox pins)."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("latestFirst", "false")
+        .parquet(inbox)
     )
 
 

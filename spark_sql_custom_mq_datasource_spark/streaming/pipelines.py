@@ -25,12 +25,15 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
+import os
 import uuid
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -45,7 +48,14 @@ from pyspark.sql.window import Window
 
 from ..operators.index_lifecycle import committed_batch_dirs, compact_batch_root
 from ..plans.registry import register
-from ..plans.util import data_bytes, stream_inbox, t, work_dir
+from ..plans.util import (
+    data_bytes,
+    ordered_inbox,
+    read_inbox,
+    stream_inbox,
+    t,
+    work_dir,
+)
 
 # --------------------------------------------------------------------------
 # Plumbing
@@ -91,8 +101,6 @@ def configure_state_store(spark: SparkSession) -> None:
 
     Set per-session (captured by each query at start). Escape hatch:
     SPARK_GRAFT_STATE_STORE=hdfs restores the default provider."""
-    import os
-
     if os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower() == "hdfs":
         return
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
@@ -112,21 +120,26 @@ def _ckpt(name: str) -> str:
     /tmp for the life of the machine — ~10 sites × 50+ query runs per
     session accumulated without bound (VERDICT r07 "what's wrong" 2).
     ``work_dir`` keeps the fresh-start contract while each site reuses
-    one footprint. Queries run serially, and every stream is drained
-    (awaitTermination) before its query function returns, so clearing on
-    the NEXT entry never races a live stream."""
+    one footprint. Its only caller is the drain core ``_drain``: queries
+    run serially, and ``_drain`` stops every stream before its query
+    function returns, so clearing on the NEXT entry never races a live
+    stream."""
     return work_dir(f"ckpt_{name}")
 
 
-def run_to_table(
+DRAIN_TIMEOUT_S = 300
+
+
+def _drain(
     spark: SparkSession,
-    df: DataFrame,
-    output_mode: str,
-    timeout_sec: int = 300,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Drain a finite streaming DataFrame via Trigger.AvailableNow into a
-    memory sink; return the sink contents as a batch DataFrame.
+    writer: DataStreamWriter,
+    name: str,
+    ckpt_name: str,
+    state_partitions: int | None,
+) -> None:
+    """The one lifecycle of every streaming query here: RocksDB state,
+    an availableNow start, a bounded wait, and a stop that also runs when
+    a micro-batch fails.
 
     ``state_partitions``: optional override of ``spark.sql.shuffle.partitions``
     for the duration of the drain. The shuffle-partition count at stream START
@@ -137,29 +150,25 @@ def run_to_table(
     state is small and bounded pass a value derived from
     ``defaultParallelism`` so the instance count tracks state volume instead
     of defaulting to one instance per core (guide §2.2: partition count must
-    match the data, not the machine). Results are invariant to the setting —
+    match the data, not the machine). foreachBatch folds also run their
+    batch shuffles at this width. Results are invariant to the setting —
     it only shards the state rows. The session value is restored after the
     drain; the stream itself keeps the cloned conf it captured at start."""
     configure_state_store(spark)
-    name = "strm_" + uuid.uuid4().hex[:12]
     restore: str | None = None
     if state_partitions is not None:
         restore = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
         q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", _ckpt("run_to_table"))
+            writer.option("checkpointLocation", _ckpt(ckpt_name))
             .trigger(availableNow=True)
             .start()
         )
         try:
-            finished = q.awaitTermination(timeout_sec)
-            if not finished:
+            if not q.awaitTermination(DRAIN_TIMEOUT_S):
                 raise TimeoutError(
-                    f"streaming query {name} did not drain in {timeout_sec}s"
+                    f"streaming query {name} did not drain in {DRAIN_TIMEOUT_S}s"
                 )
         finally:
             if q.isActive:
@@ -167,7 +176,55 @@ def run_to_table(
     finally:
         if restore is not None:
             spark.conf.set("spark.sql.shuffle.partitions", restore)
-    return spark.table(name)
+
+
+def run_to_table(
+    spark: SparkSession,
+    df: DataFrame,
+    output_mode: str,
+    state_partitions: int | None = None,
+) -> DataFrame:
+    """Drain a finite streaming DataFrame into a memory sink; return the
+    sink contents as a batch DataFrame. The sink's view is dropped once
+    the result is bound, so its rows live only as long as the result."""
+    name = "strm_" + uuid.uuid4().hex[:12]
+    writer = df.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    _drain(spark, writer, name, "run_to_table", state_partitions)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
+
+
+def run_foreach_batch(
+    spark: SparkSession,
+    df: DataFrame,
+    fold: Callable[[DataFrame, int], None],
+    ckpt_name: str,
+    output_mode: str | None = None,
+    state_partitions: int | None = None,
+) -> list[int]:
+    """Drain a finite streaming DataFrame through ``fold(batch_df,
+    batch_id)``, the foreachBatch sink; returns the ids of the folded
+    batches in delivery order."""
+    delivered: list[int] = []
+
+    def tracked(bdf: DataFrame, batch_id: int) -> None:
+        fold(bdf, batch_id)
+        delivered.append(int(batch_id))
+
+    writer = df.writeStream.foreachBatch(tracked)
+    if output_mode is not None:
+        writer = writer.outputMode(output_mode)
+    _drain(spark, writer, ckpt_name, ckpt_name, state_partitions)
+    return delivered
+
+
+def redelivery_exercise() -> bool:
+    """Whether the foreachBatch queries re-fold a delivered batch under
+    its own id to prove the fold idempotent (the exactly-once sink
+    contract). On unless SPARK_GRAFT_REDELIVERY_EXERCISE=0, which bench
+    runs set so the timed body is the fold alone; read at call time."""
+    return os.environ.get("SPARK_GRAFT_REDELIVERY_EXERCISE") != "0"
 
 
 def small_state_parts(spark: SparkSession) -> int:
@@ -175,7 +232,7 @@ def small_state_parts(spark: SparkSession) -> int:
     bounded by the operator's construction — a fixed shard count or a
     few-key domain (event types, sources, langs, calendar windows) — so the
     per-RocksDB-instance fixed update/commit cost dominates the fold work.
-    Measured at sf0.1/local[32] (tools/probe_state_parts.py, warm draws):
+    Measured at sf0.1/local[32] (OPTIMIZATION_r17.md, warm draws):
     parallelism//4 = 8 instances reads 1.4-1.8x faster than one instance
     per core and 5-6x faster than the vanilla-session conf default of 200
     (e.g. q_stream_table_fingerprint 5.5 s @32 / 18.1 s @200 / 3.0 s @8).
@@ -791,27 +848,17 @@ def q_stream_mq_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(idempotent exactly-once); oracle proves loss-free, dup-free landing.",
 )
 def q_stream_foreachbatch_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
     out_dir = work_dir("fb_sink")
 
     def land(bdf: DataFrame, batch_id: int) -> None:
         bdf.write.mode("overwrite").parquet(os.path.join(out_dir, f"batch={batch_id}"))
 
-    q = (
-        events_stream(spark, sf_dir)
-        .select("event_type", "ts", "value")
-        .writeStream.foreachBatch(land)
-        .option("checkpointLocation", _ckpt("foreachbatch_parquet"))
-        .trigger(availableNow=True)
-        .start()
+    run_foreach_batch(
+        spark,
+        events_stream(spark, sf_dir).select("event_type", "ts", "value"),
+        land,
+        "foreachbatch_parquet",
     )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("foreachBatch stream did not drain in 300s")
-    finally:
-        if q.isActive:
-            q.stop()
 
     landed = spark.read.parquet(out_dir)
     return (
@@ -829,7 +876,7 @@ def q_stream_foreachbatch_parquet(spark: SparkSession, sf_dir: str) -> DataFrame
 # --------------------------------------------------------------------------
 # 13. Built-in rate-micro-batch source (SURVEY.md §2.4 sources row): the
 #     stock load-generator Spark ships for throughput testing. One
-#     Trigger.Once batch of rowsPerBatch sequential values is fully
+#     availableNow batch of rowsPerBatch sequential values is fully
 #     deterministic, so even this "load" source gets a value-level oracle
 #     (generate_series). numPartitions shows the same partition→task
 #     mapping contract as the mq source.
@@ -845,7 +892,7 @@ def q_stream_foreachbatch_parquet(spark: SparkSession, sf_dir: str) -> DataFrame
     ORDER BY bucket
     """,
     doc="STREAMING built-in rate-micro-batch source, one deterministic "
-    "Trigger.Once batch of 1000 sequential values.",
+    "availableNow batch of 1000 sequential values.",
 )
 def q_stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = (
@@ -860,22 +907,7 @@ def q_stream_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bucket")
         .agg(F.count("*").alias("cnt"), F.sum("value").alias("sum_v"))
     )
-    name = "strm_" + uuid.uuid4().hex[:12]
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", _ckpt("rate_source"))
-        .trigger(once=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(120):
-            raise TimeoutError("rate-micro-batch query did not finish in 120s")
-    finally:
-        if q.isActive:
-            q.stop()
-    return spark.table(name).orderBy("bucket")
+    return run_to_table(spark, agg, "complete").orderBy("bucket")
 
 
 # --------------------------------------------------------------------------
@@ -1134,8 +1166,6 @@ def _register_stream_decontaminate() -> None:
         "per-(doc,eval) state forever (ADVICE r04 item 5).",
     )
     def q_stream_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
         from ..functions.text import word_hash  # noqa: F401 (module init)
         from ..operators.dedup import hashed_shingles, shingle_sets_cached
 
@@ -1172,18 +1202,7 @@ def _register_stream_decontaminate() -> None:
                 os.path.join(out_dir, f"batch={batch_id}")
             )
 
-        q = (
-            stream.writeStream.foreachBatch(probe)
-            .option("checkpointLocation", _ckpt("decontaminate"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("decontaminate stream did not drain in 300s")
-        finally:
-            if q.isActive:
-                q.stop()
+        run_foreach_batch(spark, stream, probe, "decontaminate")
 
         landed_schema = StructType(
             [
@@ -1493,11 +1512,8 @@ def _register_stream_lm_score() -> None:
         "the batch self-scored result (same model, same docs).",
     )
     def q_stream_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
         from ..plans.util import tp
 
-        configure_state_store(spark)
         # reference model, trained once in batch (broadcast-sized tables)
         c1, c2 = train_bigram_lm(tp(spark, sf_dir, "documents"))
         c1 = c1.cache()
@@ -1517,18 +1533,7 @@ def _register_stream_lm_score() -> None:
                 "overwrite"
             ).parquet(os.path.join(out_dir, f"batch={batch_id}"))
 
-        q = (
-            stream.writeStream.foreachBatch(score)
-            .option("checkpointLocation", _ckpt("lm_score"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("lm-score stream did not drain in 300s")
-        finally:
-            if q.isActive:
-                q.stop()
+        run_foreach_batch(spark, stream, score, "lm_score")
 
         landed = spark.read.parquet(out_dir)
         return (
@@ -1569,7 +1574,6 @@ def _register_stream_mv_merge() -> None:
         "the full recompute.",
     )
     def q_stream_mv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-        configure_state_store(spark)
         table = work_dir("stream_daily_mv")
 
         ev = t(spark, sf_dir, "events")
@@ -1580,40 +1584,14 @@ def _register_stream_mv_merge() -> None:
         # days' partitions (a round-robin slice made every batch touch
         # all 31 days: a 4x full-MV rewrite, not an incremental fold).
         # Built once per (sf, spec) and reused (VERDICT r06 item 4).
-        import os as _os
-        import shutil as _shutil
-
-        from ..plans.util import cached_fixture_dir
-
         bounds = [(1, 8), (9, 15), (16, 23), (24, 31)]
-
-        def build(inbox: str) -> None:
-            scratch = _os.path.join(inbox, "_scratch")
-            base_mtime = 1_600_000_000
-            for i, (d0, d1) in enumerate(bounds):
-                part = _os.path.join(scratch, f"slice{i}")
-                (
-                    ev.where(F.dayofmonth("ts").between(d0, d1))
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(part)
-                )
-                src = next(
-                    f for f in _os.listdir(part) if f.endswith(".parquet")
-                )
-                dst = _os.path.join(inbox, f"{i:02d}.parquet")
-                _shutil.copyfile(_os.path.join(part, src), dst)
-                _os.utime(dst, (base_mtime + i * 100, base_mtime + i * 100))
-            _shutil.rmtree(scratch, ignore_errors=True)
-
-        inbox = cached_fixture_dir(
-            "stream_daily_mv", sf_dir, f"daily-mv-v2 {bounds}", build
+        inbox = ordered_inbox(
+            "stream_daily_mv",
+            sf_dir,
+            f"daily-mv-v2 {bounds}",
+            [ev.where(F.dayofmonth("ts").between(d0, d1)) for d0, d1 in bounds],
         )
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inbox)
-        )
+        stream = read_inbox(spark, ev.schema, inbox)
 
         def fold(bdf: DataFrame, batch_id: int) -> None:
             base = _observed_version(table)
@@ -1659,18 +1637,7 @@ def _register_stream_mv_merge() -> None:
             replace_partitions(merged, table, "day", batch_id)
             delta.unpersist()
 
-        q = (
-            stream.writeStream.foreachBatch(fold)
-            .option("checkpointLocation", _ckpt("mv_merge"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("mv-merge stream did not drain in 300s")
-        finally:
-            if q.isActive:
-                q.stop()
+        run_foreach_batch(spark, stream, fold, "mv_merge")
 
         mv = read_snapshot(spark, table)
         return mv.select(
@@ -1704,19 +1671,12 @@ def _register_stream_manifest_ingest() -> None:
         "the driver's own correctness gate. Oracle = the full corpus.",
     )
     def q_stream_manifest_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        configure_state_store(spark)
         root = work_dir("manifest_ingest")
         table = os.path.join(root, "tbl")
         inbox = os.path.join(root, "inbox")
         ev = t(spark, sf_dir, "events")
         ev.repartition(4).write.mode("overwrite").parquet(inbox)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inbox)
-        )
+        stream = read_inbox(spark, ev.schema, inbox)
 
         def land(bdf: DataFrame, batch_id: int) -> None:
             append_snapshot(bdf, table, batch_id)
@@ -1725,18 +1685,7 @@ def _register_stream_manifest_ingest() -> None:
                 # the second commit of the same batch id MUST be a no-op
                 assert append_snapshot(bdf, table, batch_id) is None
 
-        q = (
-            stream.writeStream.foreachBatch(land)
-            .option("checkpointLocation", _ckpt("manifest_ingest"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("manifest ingest stream did not drain in 300s")
-        finally:
-            if q.isActive:
-                q.stop()
+        run_foreach_batch(spark, stream, land, "manifest_ingest")
 
         landed = read_append_table(spark, table)
         return (
@@ -1776,7 +1725,6 @@ def _register_stream_kmeans_assign() -> None:
     def q_stream_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..plans.util import tp
 
-        configure_state_store(spark)
         emb = tp(spark, sf_dir, "embeddings").select("vec_id", "embedding")
         _, cents = _kmeans_loop(spark, emb)  # k (cid, cu) rows, driver-side
 
@@ -1908,13 +1856,6 @@ def _register_stream_funnel() -> None:
         "conditional-min chain.",
     )
     def q_stream_funnel_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-        import shutil
-
-        from ..plans.util import cached_fixture_dir
-
-        configure_state_store(spark)
-
         ev = t(spark, sf_dir, "events").select(
             "user_id", "event_type", F.unix_micros(F.col("ts")).alias("tsu")
         ).where(F.col("event_type").isin(list(FUNNEL)))
@@ -1923,40 +1864,14 @@ def _register_stream_funnel() -> None:
         # Built ONCE per (sf, spec) and reused, so the timed body is the
         # stateful fold, not fixture I/O (VERDICT r06 item 4).
         bounds = [(1, 8), (9, 15), (16, 23), (24, 31)]
-        base_mtime = 1_600_000_000
-
-        def build(inbox: str) -> None:
-            scratch = os.path.join(inbox, "_scratch")
-            for i, (d0, d1) in enumerate(bounds):
-                part = os.path.join(scratch, f"slice{i}")
-                (
-                    ev.where(
-                        F.dayofmonth(F.timestamp_micros("tsu")).between(d0, d1)
-                    )
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(part)
-                )
-                src = next(
-                    f for f in os.listdir(part) if f.endswith(".parquet")
-                )
-                dst = os.path.join(inbox, f"{i:02d}.parquet")
-                shutil.copyfile(os.path.join(part, src), dst)
-                os.utime(dst, (base_mtime + i * 100, base_mtime + i * 100))
-            shutil.rmtree(scratch, ignore_errors=True)
-
-        inbox = cached_fixture_dir(
-            "funnel_state", sf_dir, f"funnel-v1 {FUNNEL} {bounds}", build
+        day = F.dayofmonth(F.timestamp_micros("tsu"))
+        inbox = ordered_inbox(
+            "funnel_state",
+            sf_dir,
+            f"funnel-v1 {FUNNEL} {bounds}",
+            [ev.where(day.between(d0, d1)) for d0, d1 in bounds],
         )
-
-        stream = (
-            spark.readStream.schema(
-                "user_id long, event_type string, tsu long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(inbox)
-        )
+        stream = read_inbox(spark, "user_id long, event_type string, tsu long", inbox)
         updates = stream.groupBy("user_id").applyInPandasWithState(
             fold, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
@@ -2004,13 +1919,10 @@ def _register_stream_mq_to_manifest() -> None:
         "loss-free and duplicate-free.",
     )
     def q_stream_mq_to_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
         from ..session import register_mq_source
         from ..sources.manifest import append_snapshot, read_append_table
 
         register_mq_source(spark)
-        configure_state_store(spark)
         table = os.path.join(work_dir("mq_to_manifest"), "tbl")
 
         stream = (
@@ -2029,18 +1941,7 @@ def _register_stream_mq_to_manifest() -> None:
             if batch_id == 0:
                 assert append_snapshot(bdf, table, batch_id) is None
 
-        q = (
-            lines.writeStream.foreachBatch(land)
-            .option("checkpointLocation", _ckpt("mq_to_manifest"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("mq->manifest stream did not drain in 300s")
-        finally:
-            if q.isActive:
-                q.stop()
+        run_foreach_batch(spark, lines, land, "mq_to_manifest")
 
         landed = read_append_table(spark, table)
         return (
@@ -2088,16 +1989,11 @@ def _register_stream_gram_mv() -> None:
             replace_partitions,
         )
 
-        configure_state_store(spark)
         table = work_dir("gram_mv")
 
         docs = t(spark, sf_dir, "documents").select("doc_id", "text")
         inbox = stream_inbox(docs, "gram_mv", sf_dir)
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inbox)
-        )
+        stream = read_inbox(spark, "doc_id long, text string", inbox)
 
         N_BUCKETS = 16
         COUNTS_SCHEMA = "gram string, cnt bigint"  # the MV's bucket files
@@ -2178,31 +2074,17 @@ def _register_stream_gram_mv() -> None:
         # VANILLA session is 200 for a KB-scale micro-batch (measured
         # 18.2 s/drain at sf0.001 @200 in r17's batch-7 probe; AQE
         # coalescing alone did not close it). Derive the fold width from
-        # the feed's byte volume instead (guide §2.2) with the same
-        # set/restore contract as run_to_table — full width at 100 TB
-        # (volume_state_parts saturates its cap), no idle reduce tasks at
-        # test scale. Results are invariant: the grouped counts are sums,
-        # partition-count-independent by construction.
-        restore = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(volume_state_parts(spark, inbox)),
+        # the feed's byte volume instead (guide §2.2) — full width at
+        # 100 TB (volume_state_parts saturates its cap), no idle reduce
+        # tasks at test scale. Results are invariant: the grouped counts
+        # are sums, partition-count-independent by construction.
+        run_foreach_batch(
+            spark,
+            stream,
+            fold,
+            "gram_mv",
+            state_partitions=volume_state_parts(spark, inbox),
         )
-        try:
-            q = (
-                stream.writeStream.foreachBatch(fold)
-                .option("checkpointLocation", _ckpt("gram_mv"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            try:
-                if not q.awaitTermination(300):
-                    raise TimeoutError("gram-mv stream did not drain in 300s")
-            finally:
-                if q.isActive:
-                    q.stop()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", restore)
 
         # top-20 via orderBy+limit (TakeOrderedAndProject): the converged
         # count table is vocabulary-scale, and a partition-less ranking
@@ -2267,20 +2149,13 @@ def _register_stream_split_route() -> None:
         "nothing duplicated, every doc in exactly one table.",
     )
     def q_stream_split_route(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
-        configure_state_store(spark)
         root = work_dir("split_route")
         t_accept = os.path.join(root, "accept")
         t_quar = os.path.join(root, "quarantine")
 
         docs = t(spark, sf_dir, "documents").select("doc_id", "text")
         inbox = stream_inbox(docs, "split_route", sf_dir)
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(inbox)
-        )
+        stream = read_inbox(spark, "doc_id long, text string", inbox)
         toks = F.split(F.trim("text"), " ")
         letters = F.length(F.regexp_replace(F.trim("text"), " ", ""))
         gate = (F.size(toks) >= _MIN_TOKENS) & (
@@ -2290,8 +2165,7 @@ def _register_stream_split_route() -> None:
         from ..sources.manifest import append_file_dir
 
         def route(bdf: DataFrame, batch_id: int) -> None:
-            import os as _os
-            import shutil as _shutil
+            import shutil
 
             # ONE gate evaluation, ONE write: the batch is written once
             # partitioned by destination, then each partition directory
@@ -2300,8 +2174,8 @@ def _register_stream_split_route() -> None:
             # scored batch and ran a separate Spark write per sink, so
             # every trigger paid N sink write jobs for one routing pass
             # (guide §2.4: N sinks, one data move).
-            staging = _os.path.join(root, "staging", f"b{batch_id}")
-            _shutil.rmtree(staging, ignore_errors=True)
+            staging = os.path.join(root, "staging", f"b{batch_id}")
+            shutil.rmtree(staging, ignore_errors=True)
             (
                 bdf.select(
                     "doc_id",
@@ -2315,33 +2189,20 @@ def _register_stream_split_route() -> None:
                 .parquet(staging)
             )
             append_file_dir(
-                t_accept, _os.path.join(staging, "dest=accept"), batch_id
+                t_accept, os.path.join(staging, "dest=accept"), batch_id
             )
             append_file_dir(
-                t_quar, _os.path.join(staging, "dest=quarantine"), batch_id
+                t_quar, os.path.join(staging, "dest=quarantine"), batch_id
             )
             # redelivery is a no-op on each sink — a correctness exercise,
             # not part of the routing fold's cost; bench runs exclude it
-            # via the same env gate the incremental-dedup fold uses
+            # via the same gate the incremental-dedup fold uses
             # (ADVICE r09 item 1), correctness runs keep it ON
-            if batch_id == 0 and (
-                _os.environ.get("SPARK_GRAFT_REDELIVERY_EXERCISE") != "0"
-            ):
+            if batch_id == 0 and redelivery_exercise():
                 assert append_file_dir(t_accept, None, batch_id) is None
-            _shutil.rmtree(staging, ignore_errors=True)
+            shutil.rmtree(staging, ignore_errors=True)
 
-        q = (
-            stream.writeStream.foreachBatch(route)
-            .option("checkpointLocation", _ckpt("split_route"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("split-route stream did not drain in 300s")
-        finally:
-            if q.isActive:
-                q.stop()
+        run_foreach_batch(spark, stream, route, "split_route")
 
         acc = read_append_table(spark, t_accept).withColumn(
             "dest", F.lit("accept")
@@ -2523,13 +2384,6 @@ def _register_stream_debounce() -> None:
         headline=True,  # the bench's stateful-streaming representative
     )
     def q_stream_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-
-        from ..plans.util import cached_fixture_dir
-
-        configure_state_store(spark)
-
         ev = t(spark, sf_dir, "events").select(
             "event_id",
             "user_id",
@@ -2537,38 +2391,15 @@ def _register_stream_debounce() -> None:
             F.unix_micros(F.col("ts")).alias("tsu"),
         )
         bounds = [(1, 8), (9, 15), (16, 23), (24, 31)]
-
-        def build(inbox: str) -> None:
-            scratch = _os.path.join(inbox, "_scratch")
-            base_mtime = 1_600_000_000
-            for i, (d0, d1) in enumerate(bounds):
-                part = _os.path.join(scratch, f"slice{i}")
-                (
-                    ev.where(
-                        F.dayofmonth(F.timestamp_micros("tsu")).between(d0, d1)
-                    )
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(part)
-                )
-                src = next(
-                    f for f in _os.listdir(part) if f.endswith(".parquet")
-                )
-                dst = _os.path.join(inbox, f"{i:02d}.parquet")
-                _shutil.copyfile(_os.path.join(part, src), dst)
-                _os.utime(dst, (base_mtime + i * 100, base_mtime + i * 100))
-            _shutil.rmtree(scratch, ignore_errors=True)
-
-        inbox = cached_fixture_dir(
-            "stream_debounce", sf_dir, f"debounce-v1 {bounds}", build
+        day = F.dayofmonth(F.timestamp_micros("tsu"))
+        inbox = ordered_inbox(
+            "stream_debounce",
+            sf_dir,
+            f"debounce-v1 {bounds}",
+            [ev.where(day.between(d0, d1)) for d0, d1 in bounds],
         )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, tsu long"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(inbox)
+        stream = read_inbox(
+            spark, "event_id long, user_id long, event_type string, tsu long", inbox
         )
         # Scale-adaptive bucket count: enough buckets to spread hot state
         # partitions (8x parallelism keeps per-call batches vectorizable
@@ -2631,42 +2462,25 @@ _register_stream_debounce()
 # --------------------------------------------------------------------------
 
 
+DOCS_INBOX_SCHEMA = "doc_id long, source string, text string"
+
+
 def docs_quartile_inbox(spark: SparkSession, sf_dir: str) -> str:
     """The documents fixture as four doc_id-ordered, mtime-ordered parquet
     slices — the micro-batch inbox shared by the doc_id-ordered streaming
     folds (incremental dedup, source quota). Content-fingerprint cached
     via cached_fixture_dir, so every consumer in a session shares one
     build."""
-    import os as _os
-    import shutil as _shutil
-
-    from ..plans.util import cached_fixture_dir
-
     docs = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
 
-    def build(inbox: str) -> None:
+    def quartiles():
         mx = docs.agg(F.max("doc_id").alias("m")).collect()[0]["m"]
         cuts = [0, mx // 4, mx // 2, (3 * mx) // 4, mx + 1]
-        scratch = _os.path.join(inbox, "_scratch")
-        base_mtime = 1_600_000_000
-        for i in range(4):
-            part = _os.path.join(scratch, f"slice{i}")
-            (
-                docs.where(
-                    (F.col("doc_id") >= cuts[i]) & (F.col("doc_id") < cuts[i + 1])
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part)
-            )
-            src = next(f for f in _os.listdir(part) if f.endswith(".parquet"))
-            dst = _os.path.join(inbox, f"{i:02d}.parquet")
-            _shutil.copyfile(_os.path.join(part, src), dst)
-            _os.utime(dst, (base_mtime + i * 100, base_mtime + i * 100))
-        _shutil.rmtree(scratch, ignore_errors=True)
+        for lo, hi in zip(cuts, cuts[1:]):
+            yield docs.where((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
 
-    return cached_fixture_dir(
-        "stream_dedup_inc", sf_dir, "dedup-inc-v1 quartiles", build
+    return ordered_inbox(
+        "stream_dedup_inc", sf_dir, "dedup-inc-v1 quartiles", quartiles()
     )
 
 
@@ -2819,52 +2633,33 @@ def _register_stream_dedup_incremental() -> None:
         "recompute.",
     )
     def q_stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-
         docs = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
         inbox = docs_quartile_inbox(spark, sf_dir)
         state = work_dir("stream_dedup_inc_state")
 
-        delivered: list[int] = []
-
-        def fold_tracking(bdf: DataFrame, batch_id: int) -> None:
-            delivered.append(int(batch_id))
+        def fold(bdf: DataFrame, batch_id: int) -> None:
             dedup_index_fold(spark, state, bdf, batch_id)
 
-        stream = (
-            spark.readStream.schema("doc_id long, source string, text string")
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(inbox)
+        delivered = run_foreach_batch(
+            spark, read_inbox(spark, DOCS_INBOX_SCHEMA, inbox), fold, "dedup_inc"
         )
-        q = (
-            stream.writeStream.foreachBatch(fold_tracking)
-            .option("checkpointLocation", _ckpt("dedup_inc"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("stream_dedup_incremental did not drain")
-        finally:
-            q.stop()
         # Redelivery exercise: re-invoke the fold with the LAST batch's
         # exact content and batch_id, simulating a foreachBatch retry
         # after a sink-side failure. With batch-keyed overwrite the
         # result below (which IS the driver-checked oracle comparison)
         # must be unchanged — double-appended survivors would break it.
-        # Env-gated (default ON) so correctness runs always exercise it
-        # while bench.py disables it — the timed body then measures only
-        # the streaming fold, not a test assertion (ADVICE r09 item 1);
-        # tests/test_streaming.py pins the same invariant suite-side.
-        if delivered and _os.environ.get("SPARK_GRAFT_REDELIVERY_EXERCISE") != "0":
+        # Gated by redelivery_exercise() (default ON) so correctness runs
+        # always exercise it while bench.py disables it — the timed body
+        # then measures only the streaming fold, not a test assertion
+        # (ADVICE r09 item 1); tests/test_streaming.py pins the same
+        # invariant suite-side.
+        if delivered and redelivery_exercise():
             last = max(delivered)
-            redelivered = (
-                spark.read.schema("doc_id long, source string, text string")
-                .parquet(_os.path.join(inbox, f"{last:02d}.parquet"))
+            redelivered = spark.read.schema(DOCS_INBOX_SCHEMA).parquet(
+                os.path.join(inbox, f"{last:02d}.parquet")
             )
-            dedup_index_fold(spark, state, redelivered, last)
-        surv_parts = committed_batch_dirs(_os.path.join(state, "surv"))
+            fold(redelivered, last)
+        surv_parts = committed_batch_dirs(os.path.join(state, "surv"))
         surv = spark.read.parquet(*surv_parts)
         arrived = docs.groupBy("source").agg(
             F.count("*").cast("bigint").alias("n_arrived")
@@ -3062,12 +2857,8 @@ def _register_stream_source_quota() -> None:
     )
     def q_stream_source_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
         inbox = docs_quartile_inbox(spark, sf_dir)
-        stream = (
-            spark.readStream.schema("doc_id long, source string, text string")
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(inbox)
-            .select("doc_id", "source")
+        stream = read_inbox(spark, DOCS_INBOX_SCHEMA, inbox).select(
+            "doc_id", "source"
         )
         admitted = stream.groupBy("source").applyInPandasWithState(
             fold, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
@@ -3102,8 +2893,6 @@ def _register_stream_anomaly() -> None:
         ANOMALY_ORACLE_SQL,
         ANOMALY_SIGMA_SQ,
     )
-    from ..plans.util import cached_fixture_dir
-
     out_schema = StructType(
         [
             StructField("event_type", StringType()),
@@ -3174,10 +2963,6 @@ def _register_stream_anomaly() -> None:
         "equal the batch twin bit-for-bit — the oracle is shared.",
     )
     def q_stream_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-        import shutil as _shutil
-
-        configure_state_store(spark)
         ev = t(spark, sf_dir, "events").select(
             "event_id",
             "event_type",
@@ -3190,44 +2975,24 @@ def _register_stream_anomaly() -> None:
         # (month-2 day 1 judged before month-1 days 25-31 arrive) —
         # ADVICE r08 item 1. Contiguous di ranges guarantee chronological
         # day-complete batches for ANY fixture span. The min/max scan (a
-        # 1-row driver collect, bounded) runs INSIDE build, so a cached
+        # 1-row driver collect, bounded) runs INSIDE the build, so a cached
         # inbox costs zero scans; the content fingerprint in the fixture
         # key covers invalidation (ADVICE r09 item 4). An empty events
         # fixture (lo is None) builds an empty inbox, handled below.
-        def build(inbox: str) -> None:
+        def day_quartiles():
             lo, hi = ev.agg(F.min("di"), F.max("di")).first()
             if lo is None:
                 return
-            lo, hi = int(lo), int(hi)
-            span = hi - lo + 1
-            cuts = [lo + span * i // 4 for i in range(5)]
-            bounds = [
-                (cuts[i], cuts[i + 1] - 1)
-                for i in range(4)
-                if cuts[i] <= cuts[i + 1] - 1
-            ]
-            scratch = _os.path.join(inbox, "_scratch")
-            base_mtime = 1_600_000_000
-            for i, (d0, d1) in enumerate(bounds):
-                part = _os.path.join(scratch, f"slice{i}")
-                (
-                    ev.where(F.col("di").between(d0, d1))
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(part)
-                )
-                src = next(
-                    f for f in _os.listdir(part) if f.endswith(".parquet")
-                )
-                dst = _os.path.join(inbox, f"{i:02d}.parquet")
-                _shutil.copyfile(_os.path.join(part, src), dst)
-                _os.utime(dst, (base_mtime + i * 100, base_mtime + i * 100))
-            _shutil.rmtree(scratch, ignore_errors=True)
+            span = int(hi) - int(lo) + 1
+            cuts = [int(lo) + span * i // 4 for i in range(5)]
+            for d0, d1 in zip(cuts, cuts[1:]):
+                if d0 <= d1 - 1:
+                    yield ev.where(F.col("di").between(d0, d1 - 1))
 
-        inbox = cached_fixture_dir(
-            "stream_anomaly", sf_dir, "anomaly-v3-epochday-quartiles", build
+        inbox = ordered_inbox(
+            "stream_anomaly", sf_dir, "anomaly-v3-epochday-quartiles", day_quartiles()
         )
-        if not any(f.endswith(".parquet") for f in _os.listdir(inbox)):
+        if not any(f.endswith(".parquet") for f in os.listdir(inbox)):
             # empty events fixture: nothing to stream — empty result with
             # the contract schema (int(None) previously raised TypeError)
             return spark.createDataFrame(
@@ -3235,12 +3000,7 @@ def _register_stream_anomaly() -> None:
                 "event_type string, day date, n_events bigint,"
                 " baseline_days int, is_anomaly boolean",
             )
-        stream = (
-            spark.readStream.schema("event_id long, event_type string, di long")
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(inbox)
-        )
+        stream = read_inbox(spark, "event_id long, event_type string, di long", inbox)
         updates = stream.groupBy("event_type").applyInPandasWithState(
             fold, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
         )
@@ -3400,14 +3160,7 @@ def stream_heavy_hitters(
     "top-k equals the exact batch answer — the oracle.",
 )
 def q_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_state_store(spark)
-    inbox = docs_quartile_inbox(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("doc_id long, source string, text string")
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(inbox)
-    )
+    stream = read_inbox(spark, DOCS_INBOX_SCHEMA, docs_quartile_inbox(spark, sf_dir))
     tokens = stream.select(
         F.explode(F.split(F.trim("text"), " ")).alias("token")
     )
@@ -3499,14 +3252,7 @@ def _fp_fold(key: tuple, pdfs, state: GroupState):
     "can never diverge — ADVICE r10 item 2).",
 )
 def q_stream_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    configure_state_store(spark)
-    inbox = docs_quartile_inbox(spark, sf_dir)
-    stream = (
-        spark.readStream.schema("doc_id long, source string, text string")
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(inbox)
-    )
+    stream = read_inbox(spark, DOCS_INBOX_SCHEMA, docs_quartile_inbox(spark, sf_dir))
     h = F.conv(
         F.substring(
             F.md5(
@@ -3635,43 +3381,24 @@ def _register_stream_phash_dedup() -> None:
         "q_multimodal_phash_apply.",
     )
     def q_stream_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-
         docs = t(spark, sf_dir, "documents").select("doc_id", "source", "text")
         inbox = docs_quartile_inbox(spark, sf_dir)
         state = work_dir("stream_phash_state")
 
-        delivered: list[int] = []
-
-        def fold_tracking(bdf: DataFrame, batch_id: int) -> None:
-            delivered.append(int(batch_id))
+        def fold(bdf: DataFrame, batch_id: int) -> None:
             phash_index_fold(spark, state, bdf, batch_id)
 
-        stream = (
-            spark.readStream.schema("doc_id long, source string, text string")
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(inbox)
+        delivered = run_foreach_batch(
+            spark, read_inbox(spark, DOCS_INBOX_SCHEMA, inbox), fold, "phash_inc"
         )
-        q = (
-            stream.writeStream.foreachBatch(fold_tracking)
-            .option("checkpointLocation", _ckpt("phash_inc"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("stream_phash_dedup did not drain")
-        finally:
-            q.stop()
-        if delivered and _os.environ.get("SPARK_GRAFT_REDELIVERY_EXERCISE") != "0":
+        if delivered and redelivery_exercise():
             last = max(delivered)
-            redelivered = spark.read.schema(
-                "doc_id long, source string, text string"
-            ).parquet(_os.path.join(inbox, f"{last:02d}.parquet"))
-            phash_index_fold(spark, state, redelivered, last)
+            redelivered = spark.read.schema(DOCS_INBOX_SCHEMA).parquet(
+                os.path.join(inbox, f"{last:02d}.parquet")
+            )
+            fold(redelivered, last)
         surv = spark.read.parquet(
-            *committed_batch_dirs(_os.path.join(state, "surv"))
+            *committed_batch_dirs(os.path.join(state, "surv"))
         )
         arrived = docs.groupBy("source").agg(
             F.count("*").cast("bigint").alias("n_docs")
@@ -3808,37 +3535,14 @@ def _overlap_inbox(spark: SparkSession, sf_dir: str) -> str:
     sliced BY USER (user_id % n) into one-file micro-batches, so each
     user's complete history lands in ONE batch and per-batch
     sessionization is exact (the doc_id-ordered-batches convention)."""
-    import os as _os
-    import shutil as _shutil
-
-    from ..plans.util import cached_fixture_dir
-
     ev = t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     n_slices = OVERLAP_STREAM_SLICES
-
-    def build(inbox: str) -> None:
-        scratch = _os.path.join(inbox, "_scratch")
-        for i in range(n_slices):
-            part = _os.path.join(scratch, f"slice{i}")
-            (
-                ev.where(F.col("user_id") % n_slices == i)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(part)
-            )
-            src_f = next(f for f in _os.listdir(part) if f.endswith(".parquet"))
-            _shutil.copyfile(
-                _os.path.join(part, src_f),
-                _os.path.join(inbox, f"{i:02d}.parquet"),
-            )
-        _shutil.rmtree(scratch, ignore_errors=True)
-
-    return cached_fixture_dir(
+    return ordered_inbox(
         "sessions_overlap",
         sf_dir,
-        f"sessions-overlap-v1 slices={n_slices} by-user "
+        f"sessions-overlap-v2 slices={n_slices} by-user "
         f"cols={','.join(ev.columns)}",
-        build,
+        [ev.where(F.col("user_id") % n_slices == i) for i in range(n_slices)],
     )
 
 
@@ -3994,45 +3698,28 @@ def _register_stream_sessions_overlap() -> None:
         "q_sessions_overlap_pairs).",
     )
     def q_stream_sessions_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os as _os
-
         state = work_dir("stream_sessions_overlap_state")
         inbox = _overlap_inbox(spark, sf_dir)
+        schema = "user_id long, ts timestamp, event_id long"
 
-        delivered: list[int] = []
-
-        def fold_tracking(bdf: DataFrame, batch_id: int) -> None:
-            delivered.append(int(batch_id))
+        def fold(bdf: DataFrame, batch_id: int) -> None:
             _overlap_fold(spark, state, bdf, batch_id)
 
-        stream = (
-            spark.readStream.schema("user_id long, ts timestamp, event_id long")
-            .option("maxFilesPerTrigger", "1")
-            .option("latestFirst", "false")
-            .parquet(inbox)
+        delivered = run_foreach_batch(
+            spark, read_inbox(spark, schema, inbox), fold, "sessions_overlap"
         )
-        q = (
-            stream.writeStream.foreachBatch(fold_tracking)
-            .option("checkpointLocation", _ckpt("sessions_overlap"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError("stream_sessions_overlap did not drain")
-        finally:
-            q.stop()
-
-        # Redelivery exercise (env-gated default ON): re-fold the last
-        # delivered batch's content under its batch_id — batch-keyed
-        # OVERWRITE + earlier-batches-only probing must leave the
-        # converged read-out unchanged.
-        if delivered and _os.environ.get("SPARK_GRAFT_REDELIVERY_EXERCISE") != "0":
+        # Redelivery exercise (default ON): re-fold the last delivered
+        # batch's content under its batch_id — batch-keyed OVERWRITE +
+        # earlier-batches-only probing must leave the converged read-out
+        # unchanged.
+        if delivered and redelivery_exercise():
             last = max(delivered)
-            redelivered = spark.read.schema(
-                "user_id long, ts timestamp, event_id long"
-            ).parquet(_os.path.join(inbox, f"{last:02d}.parquet"))
-            _overlap_fold(spark, state, redelivered, last)
+            fold(
+                spark.read.schema(schema).parquet(
+                    os.path.join(inbox, f"{last:02d}.parquet")
+                ),
+                last,
+            )
 
         return _overlap_converged(spark, state)
 
@@ -4133,58 +3820,30 @@ def _overlap_time_inbox(spark: SparkSession, sf_dir: str) -> str:
     (disjoint day ranges, mtimes ascending) plus a final flush-sentinel
     slice (one event_id = -1 row per user) that closes every still-open
     session at end of feed."""
-    import os as _os
-    import shutil as _shutil
-
-    from ..plans.util import cached_fixture_dir
-
     ev = t(spark, sf_dir, "events").select(
         "user_id",
         F.unix_micros(F.col("ts")).alias("tsu"),
         "event_id",
     )
     bounds = [(1, 8), (9, 15), (16, 23), (24, 31)]
-    base_mtime = 1_600_000_000
 
-    def build(inbox: str) -> None:
-        scratch = _os.path.join(inbox, "_scratch")
-
-        def ship(df: DataFrame, i: int) -> None:
-            part = _os.path.join(scratch, f"slice{i}")
-            df.coalesce(1).write.mode("overwrite").parquet(part)
-            src = next(
-                f for f in _os.listdir(part) if f.endswith(".parquet")
-            )
-            dst = _os.path.join(inbox, f"{i:02d}.parquet")
-            _shutil.copyfile(_os.path.join(part, src), dst)
-            _os.utime(dst, (base_mtime + i * 100, base_mtime + i * 100))
-
-        for i, (d0, d1) in enumerate(bounds):
-            ship(
-                ev.where(
-                    F.dayofmonth(F.timestamp_micros("tsu")).between(d0, d1)
-                ),
-                i,
-            )
+    def slices():
+        day = F.dayofmonth(F.timestamp_micros("tsu"))
+        for d0, d1 in bounds:
+            yield ev.where(day.between(d0, d1))
         [mx] = ev.agg(F.max("tsu").alias("mx")).collect()  # bounded: 1 row
         flush_ts = int(mx["mx"]) + 3600 * 1_000_000
-        ship(
-            ev.select("user_id")
-            .distinct()
-            .select(
-                "user_id",
-                F.lit(flush_ts).alias("tsu"),
-                F.lit(-1).cast("long").alias("event_id"),
-            ),
-            len(bounds),
+        yield ev.select("user_id").distinct().select(
+            "user_id",
+            F.lit(flush_ts).alias("tsu"),
+            F.lit(-1).cast("long").alias("event_id"),
         )
-        _shutil.rmtree(scratch, ignore_errors=True)
 
-    return cached_fixture_dir(
+    return ordered_inbox(
         "sessions_overlap_timesliced",
         sf_dir,
         f"sessions-overlap-ts-v1 {bounds} sentinel cols=user_id,tsu,event_id",
-        build,
+        slices(),
     )
 
 
@@ -4195,17 +3854,8 @@ def _overlap_timesliced_run(
     fold over closed sessions only; returns the converged per-user-pair
     counts. Parameterized by inbox so the straddling-session property
     pin can drive it with a constructed feed."""
-    import os as _os
-
-    configure_state_store(spark)
     state = work_dir(state_name)
-
-    stream = (
-        spark.readStream.schema("user_id long, tsu long, event_id long")
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(inbox)
-    )
+    stream = read_inbox(spark, "user_id long, tsu long, event_id long", inbox)
     closed = stream.groupBy("user_id").applyInPandasWithState(
         _overlap_sessionizer,
         _OVERLAP_SESS_OUT,
@@ -4214,10 +3864,7 @@ def _overlap_timesliced_run(
         GroupStateTimeout.NoTimeout,
     )
 
-    delivered: list[int] = []
-
     def fold(bdf: DataFrame, batch_id: int) -> None:
-        delivered.append(int(batch_id))
         iv = bdf.select(
             "user_id",
             "session_id",
@@ -4231,37 +3878,24 @@ def _overlap_timesliced_run(
     # the 5 triggers pays a fixed per-instance update/commit cost. The
     # per-user sessionizer state grows with the feed, so the count is
     # derived from the feed's byte volume (volume_state_parts): full
-    # width at 100 TB, no idle instances at test scale. Same
-    # set/restore contract as run_to_table's state_partitions.
-    restore = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(volume_state_parts(spark, inbox)),
+    # width at 100 TB, no idle instances at test scale.
+    delivered = run_foreach_batch(
+        spark,
+        closed,
+        fold,
+        ckpt_name,
+        output_mode="update",  # the stateful sessionizer emits updates
+        state_partitions=volume_state_parts(spark, inbox),
     )
-    try:
-        q = (
-            closed.writeStream.foreachBatch(fold)
-            .outputMode("update")  # the stateful sessionizer emits updates
-            .option("checkpointLocation", _ckpt(ckpt_name))
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(300):
-                raise TimeoutError(f"{state_name} did not drain")
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", restore)
 
-    # Redelivery exercise (env-gated default ON) at the SINK level — the
-    # replay risk in a foreachBatch pipeline: re-fold the last batch's
-    # closed sessions (read back from its own bins subdir) under the
-    # same batch id — batch-keyed OVERWRITE + earlier-batches-only
-    # probing must leave the converged read-out unchanged.
-    if delivered and _os.environ.get("SPARK_GRAFT_REDELIVERY_EXERCISE") != "0":
+    # Redelivery exercise (default ON) at the SINK level — the replay
+    # risk in a foreachBatch pipeline: re-fold the last batch's closed
+    # sessions (read back from its own bins subdir) under the same
+    # batch id — batch-keyed OVERWRITE + earlier-batches-only probing
+    # must leave the converged read-out unchanged.
+    if delivered and redelivery_exercise():
         last = max(delivered)
-        bins_dir = _os.path.join(state, "bins", f"b{last:05d}")
+        bins_dir = os.path.join(state, "bins", f"b{last:05d}")
         iv = (
             spark.read.parquet(bins_dir)
             .select("user_id", "session_id", "s_start", "s_end")

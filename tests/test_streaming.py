@@ -132,6 +132,36 @@ class TestRocksDBStateStore:
         )
         assert got == base
         assert spark.conf.get("spark.sql.shuffle.partitions") == before
+        # each drain drops its memory-sink view once the result is bound
+        assert not [t for t in spark.catalog.listTables() if t.name.startswith("strm_")]
+
+    def test_failing_micro_batch_stops_drain_and_restores_conf(self, spark):
+        """A fold that raises on batch 0 fails the drain, leaves no active
+        stream behind, and restores the session's shuffle-partition
+        setting that state_partitions overrode for the drain."""
+        from pyspark.errors import StreamingQueryException
+
+        from spark_sql_custom_mq_datasource_spark.streaming.pipelines import (
+            run_foreach_batch,
+        )
+
+        before = spark.conf.get("spark.sql.shuffle.partitions")
+        one_row = (
+            spark.readStream.format("rate-micro-batch")
+            .option("rowsPerBatch", 1)
+            .option("numPartitions", 1)
+            .load()
+        )
+
+        def fold(bdf, batch_id: int) -> None:
+            raise RuntimeError(f"fold failed on batch {batch_id}")
+
+        with pytest.raises(StreamingQueryException, match="fold failed on batch 0"):
+            run_foreach_batch(
+                spark, one_row, fold, "failing_fold", state_partitions=int(before) + 1
+            )
+        assert spark.streams.active == []
+        assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
     def test_volume_state_parts_floor_scale_cap(self, spark, tmp_path):
         """volume_state_parts derives the state-partition count from the
