@@ -54,61 +54,59 @@ def register(
 # rounds' prefixes and plans live in git history and in their
 # CORRECTNESS_r*.json records.
 _PRIORITY: tuple[str, ...] = (
-    # -- code changed: drained through streaming/pipelines.py's
-    #    run_foreach_batch / run_to_table core ------------------------
-    "q_stream_foreachbatch_parquet",
-    "q_stream_rate_source",
-    "q_stream_decontaminate",
-    "q_stream_lm_score",
-    "q_stream_mv_merge",
-    "q_stream_manifest_ingest",
-    "q_stream_mq_to_manifest",
-    "q_stream_gram_counts_mv",
-    "q_stream_split_route",
-    "q_stream_dedup_incremental",
-    "q_stream_phash_dedup",
-    "q_stream_sessions_overlap",
-    "q_stream_sessions_overlap_timesliced",
-    "q_stream_pq_index_grow",
-    "q_stream_pq_residual_index_grow",
-    "q_stream_sq8_index_grow",
-    "q_stream_sq8_residual_index_grow",
-    "q_stream_bq_index_grow",
-    # -- code changed: inbox built by plans/util.ordered_inbox ----------
-    "q_stream_funnel_stateful",
-    "q_stream_debounce",
-    "q_stream_anomaly_zscore",
-    "q_stream_source_quota",
-    "q_stream_heavy_hitters",
-    "q_stream_table_fingerprint",
-    "q_sessions_overlap_index_compact",
+    # -- code changed: the mqlog commit (one manifest parse, torn tail) --
+    "q_mqlog_roundtrip",
     # -- the r12-stale records the previous prefix left out, then the
     #    next r13-stale ones (tools/rotation_plan.py order) -------------
-    "q_text_token_stats",
-    "q_dedup_substring_apply",
-    "q_dedup_apply_clusters",
-    "q_semantic_dedup_apply",
-    "q_lm_perplexity_persisted",
-    "q_sample_per_source_bottomk",
-    "q_curriculum_by_perplexity",
-    "q_bm25_persisted",
-    "q_bm25_index_update",
-    "q_decontaminate_apply",
-    "q_multimodal_phash_dedup",
-    "q_multimodal_phash_apply",
-    "q_stream_chunk_documents",
-    "q_stream_scd2_enrich",
-    "q_rolling_dau_wau",
-    "q_cohort_retention",
-    "q_array_functions",
-    "q_events_global_stats",
-    "q_approx_percentile_bounds",
-    "q_window_time_range_avg",
-    "q_manifest_partition_evolution",
-    "q_embedding_dim_stats",
-    "q_hard_negative_mining",
-    "q_embedding_pq_codebooks",
-    "q_pq_adc_recall",
+    "q_unpivot_daily",
+    "q_null_semantics",
+    "q_ordered_string_agg",
+    "q_histogram_totalprice",
+    "q_zorder_point_range",
+    "q_jsonl_roundtrip",
+    "q_csv_roundtrip",
+    "q_compact_small_files",
+    "q_backfill_day_partition",
+    "q_merge_upsert_customers",
+    "q_schema_evolution_merge",
+    "q_retention_prune",
+    "q_scd2_build",
+    "q_scd2_pointintime",
+    "q_incremental_mv_merge",
+    "q_top_customers",
+    "q_full_outer_join_balance",
+    "q_text_quality",
+    "q_text_fingerprint",
+    "q_text_bpeish_tokens",
+    "q_text_lang_agg",
+    "q_text_normalize",
+    "q_text_repetition_scores",
+    "q_langid_confusion",
+    "q_bpe_train_merges",
+    "q_bpe_encode",
+    "q_dedup_rerank_cosine",
+    "q_dedup_cross_source_matrix",
+    "q_dedup_keep_longest",
+    "q_manifest_retention_prune",
+    "q_manifest_stats_skip",
+    "q_manifest_row_deletes",
+    "q_ann_ivf_pq",
+    "q_pq_persisted_probe",
+    "q_ann_ivf_pq_residual",
+    "q_ann_ivf_pq_nprobe_sweep",
+    "q_sample_weighted_per_source",
+    "q_hybrid_rrf_topk",
+    "q_mix_upsample",
+    "q_pack_sequences",
+    "q_split_leakage_free",
+    "q_udf_scalar_tokens",
+    "q_multimodal_binary_meta",
+    "q_multimodal_frame_sample",
+    "q_attribution_last_view",
+    "q_stream_pq_encode",
+    "q_semi_join_priority",
+    "q_cube_orders",
+    "q_distinct_parts_per_flag",
 )
 # NEXT ROTATION PLAN: lead with whatever the next change edits, then the
 # remaining r13-stale records oldest-first (tools/rotation_plan.py; it

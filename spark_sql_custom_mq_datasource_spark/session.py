@@ -16,12 +16,19 @@ from . import TABLES
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.1"
 
+# Python workers fork from the engine's daemon (worker_daemon.py), which
+# needs the package importable in the worker processes.
+_WORKER_DAEMON_MODULE = f"{__package__}.worker_daemon"
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_EXECUTOR_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
 
 def builder_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine configuration to a SparkSession builder.
 
     Kept separate so tests / bench / driver can layer their own master().
     """
+    pythonpath = builder._options.get(_EXECUTOR_PYTHONPATH)
     return (
         builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -42,6 +49,12 @@ def builder_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
         # working set comfortably off the GC cliff on the 128 GiB test host.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.showConsoleProgress", "false")
+        # every Python task otherwise re-reads pyspark.zip (worker_daemon.py)
+        .config("spark.python.daemon.module", _WORKER_DAEMON_MODULE)
+        .config(
+            _EXECUTOR_PYTHONPATH,
+            os.pathsep.join(p for p in (pythonpath, _PACKAGE_PARENT) if p),
+        )
     )
 
 

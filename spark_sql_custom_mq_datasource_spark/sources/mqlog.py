@@ -22,6 +22,9 @@ Commit protocol (the part that makes it exactly-once):
     manifest and is dropped — idempotent sink, no duplicates.
   * `abort()` deletes staged files; a crash between staging and commit
     leaves only invisible garbage in `.staging/`, never torn reads.
+  * A crash mid-append can leave an unterminated last manifest line. It was
+    never acknowledged (the append fsyncs before `commit()` returns), so
+    readers skip it and the next commit truncates it before appending.
   * The sink is APPEND-ONLY (an MQ is a log): batch `mode("overwrite")`
     raises, like the Kafka sink.
 
@@ -120,22 +123,38 @@ class _Topic:
         os.makedirs(self.staging, exist_ok=True)
         os.makedirs(self.segments, exist_ok=True)
 
-    def read_manifest(self) -> list[dict]:
-        if not os.path.exists(self.manifest):
-            return []
-        with open(self.manifest) as fh:
-            return [json.loads(line) for line in fh if line.strip()]
+    def _load(self) -> tuple[list[dict], int]:
+        """Parse the manifest once: its entries and the byte length of its
+        complete lines. An unterminated last line is a torn append that never
+        returned (``commit`` fsyncs before it acknowledges), so it is not an
+        entry."""
+        try:
+            with open(self.manifest, "rb") as fh:
+                data = fh.read()
+        except FileNotFoundError:
+            return [], 0
+        end = data.rfind(b"\n") + 1
+        return [json.loads(line) for line in data[:end].splitlines() if line.strip()], end
 
-    def append_manifest(self, entry: dict) -> None:
-        with open(self.manifest, "a") as fh:
-            fh.write(json.dumps(entry) + "\n")
+    def read_manifest(self) -> list[dict]:
+        return self._load()[0]
+
+    def commit(self, batch_id: int | None, files: list[str], rows: int) -> bool:
+        """Promote ``files`` and append their manifest line, numbered after
+        the committed entries. Returns False, promoting nothing, when
+        ``batch_id`` is already committed (an epoch re-delivery)."""
+        entries, end = self._load()
+        if batch_id is not None and any(e.get("batch_id") == batch_id for e in entries):
+            return False
+        self.promote(files)
+        line = {"commit": len(entries), "batch_id": batch_id, "files": files, "rows": rows}
+        with open(self.manifest, "ab") as fh:
+            if os.fstat(fh.fileno()).st_size > end:
+                fh.truncate(end)  # drop a torn tail so the line starts on its own
+            fh.write(json.dumps(line).encode() + b"\n")
             fh.flush()
             os.fsync(fh.fileno())
-
-    def batch_ids(self) -> set:
-        return {
-            e["batch_id"] for e in self.read_manifest() if e.get("batch_id") is not None
-        }
+        return True
 
     def promote(self, names: list[str]) -> None:
         for n in names:
@@ -198,11 +217,7 @@ class MQLogBatchWriter(DataSourceWriter):
     def commit(self, messages) -> None:
         files = [n for m in messages if m is not None for n in m.files]
         rows = sum(m.rows for m in messages if m is not None)
-        self.topic.promote(files)
-        self.topic.append_manifest(
-            {"commit": len(self.topic.read_manifest()), "batch_id": None,
-             "files": files, "rows": rows}
-        )
+        self.topic.commit(None, files, rows)
 
     def abort(self, messages) -> None:
         self.topic.discard(
@@ -221,16 +236,10 @@ class MQLogStreamWriter(DataSourceStreamWriter):
 
     def commit(self, messages, batchId: int) -> None:
         files = [n for m in messages if m is not None for n in m.files]
-        if batchId in self.topic.batch_ids():
+        rows = sum(m.rows for m in messages if m is not None)
+        if not self.topic.commit(batchId, files, rows):
             # epoch re-delivery after recovery: already durable, drop dupes
             self.topic.discard(files)
-            return
-        rows = sum(m.rows for m in messages if m is not None)
-        self.topic.promote(files)
-        self.topic.append_manifest(
-            {"commit": len(self.topic.read_manifest()), "batch_id": batchId,
-             "files": files, "rows": rows}
-        )
 
     def abort(self, messages, batchId: int) -> None:
         self.topic.discard(
@@ -311,7 +320,7 @@ class MQLogBatchReader(DataSourceReader):
         self.columns = [f.name for f in _topic_schema(self.topic).fields]
 
     def partitions(self):
-        files = _files_between(self.topic, 0, len(self.topic.read_manifest()))
+        files = [n for e in self.topic.read_manifest() for n in e["files"]]
         return [
             MQLogPartition(path=self.topic.path, files=[f], columns=self.columns)
             for f in files

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from spark_sql_custom_mq_datasource_spark.sources.mqlog import (
     _SegmentCommit,
     _Topic,
+    MQLogBatchReader,
     MQLogStreamWriter,
 )
 
@@ -116,6 +117,33 @@ class TestCommitProtocol:
         w.abort([_SegmentCommit(files=["seg-x.parquet"], rows=1)], batchId=0)
         assert os.listdir(topic.staging) == []
         assert topic.read_manifest() == []
+
+    def test_torn_tail_ignored_and_next_commit_contiguous(self):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        topic = _Topic(_topic_dir())
+        topic.ensure()
+        w = MQLogStreamWriter({"path": topic.path}, None, False)
+
+        def stage(name, values):
+            pq.write_table(pa.table({"value": values}), os.path.join(topic.staging, name))
+            return _SegmentCommit(files=[name], rows=len(values))
+
+        w.commit([stage("seg-a.parquet", ["a0", "a1"])], batchId=0)
+        # a crash mid-append leaves an unterminated, never-acknowledged line
+        with open(topic.manifest, "a") as fh:
+            fh.write('{"commit": 1, "batch_id": 1, "fil')
+        assert [e["batch_id"] for e in topic.read_manifest()] == [0]
+
+        w.commit([stage("seg-b.parquet", ["b0"])], batchId=1)
+        with open(topic.manifest) as fh:
+            lines = [json.loads(line) for line in fh]
+        assert [(e["commit"], e["batch_id"]) for e in lines] == [(0, 0), (1, 1)]
+        assert lines[1] == {"commit": 1, "batch_id": 1, "files": ["seg-b.parquet"], "rows": 1}
+        reader = MQLogBatchReader({"path": topic.path})
+        rows = [r for p in reader.partitions() for r in reader.read(p)]
+        assert sorted(rows) == [("a0",), ("a1",), ("b0",)]
 
 
 @pytest.mark.slow
