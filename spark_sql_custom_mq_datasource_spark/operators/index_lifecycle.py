@@ -96,9 +96,8 @@ from .similarity import (
     bq_index_path,
     bq_pack,
     bq_serve,
-    ivf_sq8_probes,
-    ivf_sq8_residual_scan_topk,
-    ivf_sq8_scan_topk,
+    grid_exact_topk,
+    ivf_sq8_scan,
     pq_adc_rank,
     pq_code_struct_array,
     pq_index_path,
@@ -110,8 +109,6 @@ from .similarity import (
     sq8_encode_ints,
     sq8_index_path,
     sq8_residual_index_path,
-    sq8_stats,
-    sq8_topk,
 )
 
 GROW_SLICES = 3  # the streamed remainder arrives as this many micro-batches
@@ -488,21 +485,10 @@ def _pq_exact_hits(
 def _grid_exact_hits(
     spark: SparkSession, emb: DataFrame, anchor_ids: list[int], served: DataFrame
 ) -> int:
-    """Exact top-TOPK on the raw Q20 integer grid (the q_ann_sq8_recall
-    identity-grid trick: levels=1, rng=1). It does not depend on the
-    quantizer, so one leg serves SQ8, residual SQ8 and BQ."""
-    vecs = emb.select("vec_id", "embedding")
-    abs_mn, _ = sq8_stats(vecs)
-    ones = [1] * len(abs_mn)
-    queries = _collect_query_eq(vecs.where(F.col("vec_id").isin(anchor_ids)))
-    ext = sq8_topk(
-        sq8_encode(vecs, abs_mn, ones, levels=1),
-        queries,
-        abs_mn,
-        ones,
-        TOPK,
-        levels=1,
-    ).select("qid", "neighbor_id")
+    """Exact top-TOPK on the raw Q20 integer grid. It does not depend on
+    the quantizer, so one leg serves SQ8, residual SQ8 and BQ."""
+    queries = _collect_query_eq(emb.where(F.col("vec_id").isin(anchor_ids)))
+    ext = grid_exact_topk(emb, queries).select("qid", "neighbor_id")
     return ext.join(served, ["qid", "neighbor_id"]).count()
 
 
@@ -634,15 +620,9 @@ def _bind_sq8(spark: SparkSession, sf_dir: str, residual: bool) -> Bound:
         return sq8_encode(bdf, mn, rng)
 
     def probe(anchors: DataFrame, grown: DataFrame) -> DataFrame:
-        queries = _collect_query_eq(anchors)
-        probed = ivf_sq8_probes(queries, cells)
-        all_probed = sorted({lb for labs in probed.values() for lb in labs})
-        pruned = grown.where(F.col("label").isin(all_probed))
-        if residual:
-            return ivf_sq8_residual_scan_topk(
-                pruned, queries, probed, mn, rng, cells, TOPK
-            )
-        return ivf_sq8_scan_topk(pruned, queries, probed, mn, rng, TOPK)
+        return ivf_sq8_scan(
+            grown, _collect_query_eq(anchors), cells, mn, rng, residual=residual
+        )
 
     return Bound(encode, probe, codes_path)
 

@@ -26,6 +26,7 @@ numpy matmul), also with a full oracle.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -4286,6 +4287,26 @@ def _collect_query_eq(queries: DataFrame) -> list[tuple[int, list[int]]]:
     return out
 
 
+def grid_exact_topk(
+    emb: DataFrame,
+    queries_eq: list[tuple[int, list[int]]],
+    mn: list[int] | None = None,
+) -> DataFrame:
+    """Exact integer-L2 top-k on the raw Q20 grid: the SQ8 scan on the
+    identity grid (levels=1, rng=1, so codes = e - mn and recon = e) —
+    an exact brute force sharing the quantized scan machinery. It does
+    not depend on any quantizer, so every recall leg uses it. ``mn`` is
+    emb's per-dim minimum when the caller already has it (one stats scan
+    fewer); any value keeping e - mn in int range gives the same result."""
+    vecs = emb.select("vec_id", "embedding")
+    if mn is None:
+        mn, _ = sq8_stats(vecs)
+    ones = [1] * len(mn)
+    return sq8_topk(
+        sq8_encode(vecs, mn, ones, levels=1), queries_eq, mn, ones, TOPK, levels=1
+    )
+
+
 _SQL_SQ8_CTES = f"""
     eq AS (SELECT vec_id,
                   list_transform(embedding,
@@ -4372,15 +4393,7 @@ def q_ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "embeddings").where(F.col("vec_id") < N_QUERIES)
     )
     sq8t = sq8_topk(coded, queries, mn, rng, TOPK).select("qid", "neighbor_id")
-
-    # exact leg on the same integer grid: the SQ8 scan with levels=1 and
-    # rng=1 degenerates to identity (codes = e - mn, recon = e), i.e. an
-    # exact integer-L2 brute force sharing the quantized scan machinery.
-    ones = [1] * len(mn)
-    exact_coded = sq8_encode(emb, mn, ones, levels=1)
-    ext = sq8_topk(exact_coded, queries, mn, ones, TOPK, levels=1).select(
-        "qid", "neighbor_id"
-    )
+    ext = grid_exact_topk(emb, queries, mn).select("qid", "neighbor_id")
     return (
         ext.join(sq8t.withColumn("hit", F.lit(1)), ["qid", "neighbor_id"], "left")
         .groupBy("qid")
@@ -4481,7 +4494,8 @@ def ivf_sq8_probes(
     cells: list[tuple[int, list[int]]],
     nprobe: int = IVF_NPROBE,
 ) -> dict[int, list[int]]:
-    """Per-query probed labels: argmin int L2 against the bounded cell
+    """Per-query probed labels in probe-rank order (ascending int L2 to
+    the cell centroid, ties by label): argmin against the bounded cell
     table, driver-side for the fixed anchor set (production: broadcast)."""
     probed: dict[int, list[int]] = {}
     for qid, eq in queries_eq:
@@ -4489,63 +4503,145 @@ def ivf_sq8_probes(
             (sum((e - c) ** 2 for e, c in zip(eq, cq)), label)
             for label, cq in cells
         )
-        probed[qid] = sorted(label for _, label in dists[:nprobe])
+        probed[qid] = [label for _, label in dists[:nprobe]]
     return probed
 
 
-def ivf_sq8_scan_topk(
-    pruned: DataFrame,
+def sq8_recon_base(
+    mn: list[int], cells: list[tuple[int, list[int]]], residual: bool
+) -> np.ndarray:
+    """The (max label + 1)×dim int64 table a code reconstructs from: every
+    row is mn·255, and a residual index adds cq[label]·255 to row label."""
+    base = np.tile(
+        np.asarray(mn, dtype=np.int64) * SQ8_LEVELS,
+        (max(label for label, _ in cells) + 1, 1),
+    )
+    if residual:
+        for label, cq in cells:
+            base[label] += np.asarray(cq, dtype=np.int64) * SQ8_LEVELS
+    return base
+
+
+def sq8_scan_batch(
+    ids: np.ndarray,
+    labs: np.ndarray,
+    codes: np.ndarray,
+    base: np.ndarray,
+    rng: np.ndarray,
+    queries: list[tuple[int, np.ndarray, list[tuple[int, list[int]]]]],
+    k: int,
+) -> pd.DataFrame:
+    """One Arrow batch of the IVF-SQ8 scan, Spark-free.
+
+    Each code reconstructs as ``base[label] + code·rng`` (int64, the x255
+    space). ``queries`` holds ``(qid, query·255, buckets)``, where a bucket
+    is ``(prk, labels)``; every query keeps its top-k by (dist, vec_id)
+    within each bucket, never itself. Returns (qid, prk, neighbor_id,
+    dist) rows."""
+    recon = base[labs] + codes * rng
+    parts = []
+    for qid, qs, buckets in queries:
+        for prk, bucket_labels in buckets:
+            mask = np.isin(labs, bucket_labels) & (ids != qid)
+            if not mask.any():
+                continue
+            diff = qs[None, :] - recon[mask]
+            dist = (diff * diff).sum(axis=1)
+            cid = ids[mask]
+            order = np.lexsort((cid, dist))[:k]
+            parts.append(
+                pd.DataFrame(
+                    {
+                        "qid": qid,
+                        "prk": prk,
+                        "neighbor_id": cid[order],
+                        "dist": dist[order],
+                    }
+                )
+            )
+    if not parts:
+        return pd.DataFrame(
+            columns=["qid", "prk", "neighbor_id", "dist"], dtype=np.int64
+        )
+    return pd.concat(parts, ignore_index=True)
+
+
+def ivf_sq8_scan(
+    codes: DataFrame,
     queries_eq: list[tuple[int, list[int]]],
-    probed: dict[int, list[int]],
+    cells: list[tuple[int, list[int]]],
     mn: list[int],
     rng: list[int],
-    k: int = TOPK,
+    residual: bool = False,
+    nprobe: int = IVF_NPROBE,
+    per_cell: bool = False,
 ) -> DataFrame:
-    """ONE numpy scan over the probed-cell union; each query ranks only
-    its own cells' members via a label mask inside the batch (a per-query
-    re-scan would multiply corpus reads by Q at scale). pruned:
-    (vec_id, label, codes)."""
-    mn_a = np.asarray(mn, dtype=np.int64)
+    """The IVF-SQ8 scan: probe, prune, ONE numpy pass, top-TOPK.
+
+    The probed-cell union becomes one literal ``label IN`` filter on
+    ``codes`` (vec_id, label, codes) — a parquet PARTITION filter on a
+    persisted index. Each query then ranks only its own probed cells'
+    members inside the batch (a per-query re-scan would multiply corpus
+    reads by Q at scale). Reconstruction is ``base[label] + code·rng``:
+    every base row is mn·255, plus cq[label]·255 for a ``residual`` index
+    (absolute space, so queries stay un-recentered).
+
+    Returns (qid, neighbor_id, rk) ordered by (qid, rk). With
+    ``per_cell`` every probed cell is its own rank bucket, and the
+    result is the per-(query, probe rank) partials (qid, prk,
+    neighbor_id, dist): every smaller nprobe re-ranks them without
+    rescanning codes (the top-k of a union lies inside the union of
+    per-bucket top-ks)."""
+    probed = ivf_sq8_probes(queries_eq, cells, nprobe)
+    all_probed = sorted({lb for labs in probed.values() for lb in labs})
+    base = sq8_recon_base(mn, cells, residual)
     rng_a = np.asarray(rng, dtype=np.int64)
-    qids = [qid for qid, _ in queries_eq]
-    qs = {
-        qid: np.asarray(eq, dtype=np.int64) * SQ8_LEVELS for qid, eq in queries_eq
-    }
-    probe_sets = {qid: set(labs) for qid, labs in probed.items()}
+    queries = [
+        (
+            qid,
+            np.asarray(eq, dtype=np.int64) * SQ8_LEVELS,
+            [(prk, [lb]) for prk, lb in enumerate(probed[qid], start=1)]
+            if per_cell
+            else [(0, probed[qid])],
+        )
+        for qid, eq in queries_eq
+    ]
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            labs = pdf["label"].to_numpy(dtype=np.int64)
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            recon = mn_a * SQ8_LEVELS + codes * rng_a
-            for qid in qids:
-                mask = np.isin(labs, list(probe_sets[qid])) & (ids != qid)
-                if not mask.any():
-                    continue
-                diff = qs[qid][None, :] - recon[mask]
-                dist = (diff * diff).sum(axis=1)
-                cid = ids[mask]
-                order = np.lexsort((cid, dist))[:k]
-                yield pd.DataFrame(
-                    {"qid": qid, "neighbor_id": cid[order], "dist": dist[order]}
-                )
+            out = sq8_scan_batch(
+                pdf["vec_id"].to_numpy(dtype=np.int64),
+                pdf["label"].to_numpy(dtype=np.int64),
+                np.stack(pdf["codes"].to_numpy()).astype(np.int64),
+                base,
+                rng_a,
+                queries,
+                TOPK,
+            )
+            yield out  # ONE Arrow batch back per input batch, not Q
 
     schema = StructType(
         [
             StructField("qid", LongType()),
+            StructField("prk", LongType()),
             StructField("neighbor_id", LongType()),
             StructField("dist", LongType()),
         ]
     )
-    partial = pruned.select("vec_id", "label", "codes").mapInPandas(scan, schema)
-    w = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("qid", "neighbor_id", F.col("rk").cast("int").alias("rk"))
-        .orderBy("qid", "rk")
+    partial = (
+        codes.where(F.col("label").isin(all_probed))
+        .select("vec_id", "label", "codes")
+        .mapInPandas(scan, schema)
     )
+    w = Window.partitionBy("qid", "prk").orderBy(
+        F.asc("dist"), F.asc("neighbor_id")
+    )
+    top = partial.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= TOPK)
+    if per_cell:
+        return top.select("qid", "prk", "neighbor_id", "dist")
+    return top.select(
+        "qid", "neighbor_id", F.col("rk").cast("int").alias("rk")
+    ).orderBy("qid", "rk")
 
 
 @register(
@@ -4567,10 +4663,7 @@ def q_ann_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # coarse prune: argmin over the bounded collected cell table (the
     # persisted serving turns the same literal into partition pruning)
-    probed = ivf_sq8_probes(queries, cells)
-    all_probed = sorted({lb for labs in probed.values() for lb in labs})
-    pruned = coded.where(F.col("label").isin(all_probed))
-    return ivf_sq8_scan_topk(pruned, queries, probed, mn, rng, TOPK)
+    return ivf_sq8_scan(coded, queries, cells, mn, rng)
 
 
 # --------------------------------------------------------------------------
@@ -4646,13 +4739,134 @@ def q_ann_sq8_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = _collect_query_eq(
         t(spark, sf_dir, "embeddings").where(F.col("vec_id") < N_QUERIES)
     )
-    probed = ivf_sq8_probes(queries, cells)
-    all_probed = sorted({lb for labs in probed.values() for lb in labs})
-    # the literal IN becomes a parquet PARTITION filter on the code scan
-    pruned = spark.read.parquet(codes_path).where(
-        F.col("label").isin(all_probed)
+    # the probed labels' literal IN becomes a parquet PARTITION filter
+    return ivf_sq8_scan(spark.read.parquet(codes_path), queries, cells, mn, rng)
+
+
+# --------------------------------------------------------------------------
+# Integer-grid toolkit: one set of helpers for BOTH SQ8 grids. The raw grid
+# is the Q20 int64 array column ``eqv`` (``_SQL_EQV`` over embedding); the
+# residual grid is ``rv`` (eqv − cq, see _sq8_residuals). Bounds, the
+# out-of-grid count, the drift audit and the refresh premise (stale grid
+# from the even-vec_id half, fresh grid over everything) are written once
+# over "an int64 array column".
+# --------------------------------------------------------------------------
+
+_SQL_EQV = (
+    f"transform(embedding, x -> "
+    f"CAST(floor(CAST(x AS DOUBLE) * {QUANT} + 0.5D) AS BIGINT))"
+)
+
+
+def _eqv(emb: DataFrame) -> DataFrame:
+    """(vec_id, eqv array<bigint>): the raw Q20 grid as an array column."""
+    return emb.select("vec_id", F.expr(_SQL_EQV).alias("eqv"))
+
+
+class IntGrid(NamedTuple):
+    """Raw per-dim [mn, mx] bounds of an integer grid (no rng floor: the
+    drift and moved-dim comparisons need the untouched bounds)."""
+
+    mn: list[int]
+    mx: list[int]
+
+    @property
+    def rng(self) -> list[int]:
+        """The encode divisor, floored at 1 so constant dims encode to 0."""
+        return [max(x - n, 1) for n, x in zip(self.mn, self.mx)]
+
+
+def _arr_raw_minmax(df: DataFrame, col: str, dim: int = SQ8_DIM) -> IntGrid:
+    """Per-dim raw (mn, mx) of an int64 array column — one scan, 2·dim
+    partial-agg cells."""
+    aggs = [
+        F.min(F.element_at(col, d + 1)).alias(f"mn{d}") for d in range(dim)
+    ] + [F.max(F.element_at(col, d + 1)).alias(f"mx{d}") for d in range(dim)]
+    row = df.agg(*aggs).collect()[0]
+    return IntGrid(
+        [int(row[f"mn{d}"]) for d in range(dim)],
+        [int(row[f"mx{d}"]) for d in range(dim)],
     )
-    return ivf_sq8_scan_topk(pruned, queries, probed, mn, rng, TOPK)
+
+
+def _arr_out_of_grid_count(
+    df: DataFrame, col: str, grid: IntGrid, dim: int = SQ8_DIM
+) -> int:
+    """Total out-of-grid values of an int64 array column under a [mn, mx]
+    grid — one scan ending in dim partial-agg cells."""
+    mn, mx = grid
+    el = [F.element_at(col, d + 1) for d in range(dim)]
+    aggs = [
+        F.sum(
+            F.when((el[d] < F.lit(mn[d])) | (el[d] > F.lit(mx[d])), 1).otherwise(0)
+        )
+        .cast("bigint")
+        .alias(f"o{d}")
+        for d in range(dim)
+    ]
+    row = df.agg(*aggs).collect()[0]
+    return sum(int(row[f"o{d}"]) for d in range(dim))
+
+
+def _stale_and_fresh_grids(
+    df: DataFrame, col: str
+) -> tuple[IntGrid, IntGrid, list[int]]:
+    """The refresh premise over an int64 array column: the stale grid
+    trained on the even-vec_id half (the original build), the fresh grid
+    over the whole (grown) frame, and the dims whose bounds moved."""
+    stale = _arr_raw_minmax(df.where(F.col("vec_id") % 2 == 0), col)
+    fresh = _arr_raw_minmax(df, col)
+    moved = [
+        d
+        for d in range(len(fresh.mn))
+        if (stale.mn[d], stale.mx[d]) != (fresh.mn[d], fresh.mx[d])
+    ]
+    return stale, fresh, moved
+
+
+def _grid_drift_audit(spark: SparkSession, df: DataFrame, col: str) -> DataFrame:
+    """Drift audit of an int64 array column: grid from the even-vec_id
+    half, audit over the odd half — total out-of-grid count, its low/high
+    split and the worst dimension's share (Q20). One bounds scan, then
+    ONE audit scan ending in 3·dim partial-agg cells."""
+    import math as _math
+
+    mn, mx = _arr_raw_minmax(df.where(F.col("vec_id") % 2 == 0), col)
+    el = [F.element_at(col, d + 1) for d in range(SQ8_DIM)]
+    aggs = []
+    for d in range(SQ8_DIM):
+        aggs.append(F.count(el[d]).cast("bigint").alias(f"n{d}"))
+        aggs.append(
+            F.sum(F.when(el[d] < F.lit(mn[d]), 1).otherwise(0))
+            .cast("bigint")
+            .alias(f"lo{d}")
+        )
+        aggs.append(
+            F.sum(F.when(el[d] > F.lit(mx[d]), 1).otherwise(0))
+            .cast("bigint")
+            .alias(f"hi{d}")
+        )
+    arow = df.where(F.col("vec_id") % 2 == 1).agg(*aggs).collect()[0]
+    n_values = sum(int(arow[f"n{d}"]) for d in range(SQ8_DIM))
+    n_lo = sum(int(arow[f"lo{d}"]) for d in range(SQ8_DIM))
+    n_hi = sum(int(arow[f"hi{d}"]) for d in range(SQ8_DIM))
+    worst_d, worst_sat, worst_n = 0, -1, 1
+    for d in range(SQ8_DIM):
+        sat = int(arow[f"lo{d}"]) + int(arow[f"hi{d}"])
+        if sat > worst_sat:
+            worst_d, worst_sat, worst_n = d, sat, int(arow[f"n{d}"])
+    out = (
+        n_values,
+        n_lo,
+        n_hi,
+        worst_d,
+        int(_math.floor(worst_sat * 1048576.0 / worst_n + 0.5)),
+    )
+    return spark.createDataFrame(
+        [out],
+        "n_values bigint, n_sat_lo bigint, n_sat_hi bigint, "
+        "worst_dim int, worst_dim_sat_q20 bigint",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -4722,59 +4936,7 @@ def sq8_grid_drift_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     """Drift audit body over any (vec_id, embedding) frame — grid from
     the even-vec_id half, audit over the odd half (testable on
     constructed corpora)."""
-    import math as _math
-
-    mn, _ = sq8_stats(emb.where(F.col("vec_id") % 2 == 0))
-    # sq8_stats floors rng at 1; the drift audit needs the raw mx
-    eqd = [
-        F.floor(F.element_at("embedding", d + 1).cast("double") * QUANT + F.lit(0.5))
-        .cast("bigint")
-        .alias(f"e{d}")
-        for d in range(SQ8_DIM)
-    ]
-    row = (
-        emb.where(F.col("vec_id") % 2 == 0)
-        .agg(*[F.max(e).alias(f"mx{d}") for d, e in enumerate(eqd)])
-        .collect()[0]
-    )
-    mx = [int(row[f"mx{d}"]) for d in range(SQ8_DIM)]
-
-    audit = emb.where(F.col("vec_id") % 2 == 1).select(*eqd)
-    aggs = []
-    for d in range(SQ8_DIM):
-        e = F.col(f"e{d}")
-        aggs.append(F.count(e).cast("bigint").alias(f"n{d}"))
-        aggs.append(
-            F.sum(F.when(e < F.lit(mn[d]), 1).otherwise(0))
-            .cast("bigint")
-            .alias(f"lo{d}")
-        )
-        aggs.append(
-            F.sum(F.when(e > F.lit(mx[d]), 1).otherwise(0))
-            .cast("bigint")
-            .alias(f"hi{d}")
-        )
-    arow = audit.agg(*aggs).collect()[0]  # bounded: 3·dim cells
-    n_values = sum(int(arow[f"n{d}"]) for d in range(SQ8_DIM))
-    n_lo = sum(int(arow[f"lo{d}"]) for d in range(SQ8_DIM))
-    n_hi = sum(int(arow[f"hi{d}"]) for d in range(SQ8_DIM))
-    worst_d, worst_sat, worst_n = 0, -1, 1
-    for d in range(SQ8_DIM):
-        sat = int(arow[f"lo{d}"]) + int(arow[f"hi{d}"])
-        if sat > worst_sat:
-            worst_d, worst_sat, worst_n = d, sat, int(arow[f"n{d}"])
-    out = (
-        n_values,
-        n_lo,
-        n_hi,
-        worst_d,
-        int(_math.floor(worst_sat * 1048576.0 / worst_n + 0.5)),
-    )
-    return spark.createDataFrame(
-        [out],
-        "n_values bigint, n_sat_lo bigint, n_sat_hi bigint, "
-        "worst_dim int, worst_dim_sat_q20 bigint",
-    )
+    return _grid_drift_audit(spark, _eqv(emb), "eqv")
 
 
 # --------------------------------------------------------------------------
@@ -4807,49 +4969,6 @@ def sq8_grid_drift_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
 # doubled. All-integer on the Q20 grid — full value oracle including the
 # refreshed ranking.
 # --------------------------------------------------------------------------
-
-
-def _sq8_raw_minmax(
-    emb: DataFrame, dim: int = SQ8_DIM
-) -> tuple[list[int], list[int]]:
-    """Raw per-dim (mn, mx) on the Q20 grid (no rng floor — the drift /
-    moved-dim comparisons need the untouched bounds); one scan, 2·dim
-    partial-agg cells."""
-    eqd = [
-        F.floor(F.element_at("embedding", d + 1).cast("double") * QUANT + F.lit(0.5))
-        .cast("bigint")
-        for d in range(dim)
-    ]
-    aggs = [F.min(eqd[d]).alias(f"mn{d}") for d in range(dim)] + [
-        F.max(eqd[d]).alias(f"mx{d}") for d in range(dim)
-    ]
-    row = emb.agg(*aggs).collect()[0]
-    return (
-        [int(row[f"mn{d}"]) for d in range(dim)],
-        [int(row[f"mx{d}"]) for d in range(dim)],
-    )
-
-
-def _sq8_out_of_grid_count(
-    emb: DataFrame, mn: list[int], mx: list[int], dim: int = SQ8_DIM
-) -> int:
-    """Total out-of-grid values over the frame under a [mn, mx] grid —
-    one scan ending in dim partial-agg cells."""
-    eqd = [
-        F.floor(F.element_at("embedding", d + 1).cast("double") * QUANT + F.lit(0.5))
-        .cast("bigint")
-        for d in range(dim)
-    ]
-    aggs = [
-        F.sum(
-            F.when((eqd[d] < F.lit(mn[d])) | (eqd[d] > F.lit(mx[d])), 1).otherwise(0)
-        )
-        .cast("bigint")
-        .alias(f"o{d}")
-        for d in range(dim)
-    ]
-    row = emb.agg(*aggs).collect()[0]
-    return sum(int(row[f"o{d}"]) for d in range(dim))
 
 
 @register(
@@ -4903,26 +5022,20 @@ def sq8_grid_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
     geometry (dims moved / not moved, saturating tails)."""
     import os as _os
 
-    # stale grid: trained on the even-vec_id half (the original build)
-    mn_h, mx_h = _sq8_raw_minmax(emb.where(F.col("vec_id") % 2 == 0))
-    rng_h = [max(mx_h[d] - mn_h[d], 1) for d in range(len(mn_h))]
+    # stale grid: trained on the even-vec_id half (the original build);
+    # fresh grid: retrained on the full corpus
+    eqv = _eqv(emb)
+    stale, fresh, moved = _stale_and_fresh_grids(eqv, "eqv")
+    mn_f, rng_f = fresh.mn, fresh.rng
 
     # the live index: the FULL corpus encoded on the stale grid
     current = _os.path.join(work_dir("sq8_refresh_index"), "current")
-    sq8_encode(emb, mn_h, rng_h).write.mode("overwrite").parquet(current)
+    sq8_encode(emb, stale.mn, stale.rng).write.mode("overwrite").parquet(current)
 
-    # the alarm's number: out-of-grid values under the stale grid
-    n_sat_before = _sq8_out_of_grid_count(emb, mn_h, mx_h)
-
-    # refresh: retrain on the full corpus
-    mn_f, mx_f = _sq8_raw_minmax(emb)
-    rng_f = [max(mx_f[d] - mn_f[d], 1) for d in range(len(mn_f))]
-    n_dims_moved = sum(
-        1
-        for d in range(len(mn_f))
-        if mn_h[d] != mn_f[d] or mx_h[d] != mx_f[d]
-    )
-    n_sat_after = _sq8_out_of_grid_count(emb, mn_f, mx_f)
+    # the alarm's number (out-of-grid values under the stale grid) and
+    # the acceptance check (0 under the fresh one)
+    n_sat_before = _arr_out_of_grid_count(eqv, "eqv", stale)
+    n_sat_after = _arr_out_of_grid_count(eqv, "eqv", fresh)
     pinned_replace(
         current,
         lambda staged: sq8_encode(emb, mn_f, rng_f)
@@ -4938,7 +5051,7 @@ def sq8_grid_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
         sq8_topk(spark.read.parquet(current), queries, mn_f, rng_f, TOPK),
         sq8_topk(sq8_encode(emb, mn_f, rng_f), queries, mn_f, rng_f, TOPK),
         (
-            (n_dims_moved, n_sat_before, n_sat_after),
+            (len(moved), n_sat_before, n_sat_after),
             "n_dims_moved bigint, n_sat_before bigint, n_sat_after bigint",
         ),
     )
@@ -4959,12 +5072,6 @@ def sq8_grid_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 SQ8_REFINE_R = 2 * TOPK  # SQ8 shortlist size handed to the exact re-rank
-
-_SQL_EQV = (
-    f"transform(embedding, x -> "
-    f"CAST(floor(CAST(x AS DOUBLE) * {QUANT} + 0.5D) AS BIGINT))"
-)
-
 
 @register(
     "q_ann_sq8_refine",
@@ -5050,20 +5157,6 @@ def q_ann_sq8_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _arr_int_stats(
-    df: DataFrame, col: str, dim: int = SQ8_DIM
-) -> tuple[list[int], list[int]]:
-    """Per-dim (mn, rng) of an int64 array column — one scan, 2·dim
-    partial-agg cells (the sq8_stats shape over precomputed ints)."""
-    aggs = [
-        F.min(F.element_at(col, d + 1)).alias(f"mn{d}") for d in range(dim)
-    ] + [F.max(F.element_at(col, d + 1)).alias(f"mx{d}") for d in range(dim)]
-    row = df.agg(*aggs).collect()[0]
-    mn = [int(row[f"mn{d}"]) for d in range(dim)]
-    rng = [max(int(row[f"mx{d}"]) - mn[d], 1) for d in range(dim)]
-    return mn, rng
-
-
 def sq8_encode_ints(
     df: DataFrame,
     col: str,
@@ -5096,66 +5189,6 @@ def sq8_encode_ints(
     codes = F.expr(f"transform({col}, (x, i) -> CAST({code} AS INT))")
     keep = [c for c in df.columns if c != col]
     return df.select(*keep, codes.alias("codes"))
-
-
-def ivf_sq8_residual_scan_topk(
-    pruned: DataFrame,
-    queries_eq: list[tuple[int, list[int]]],
-    probed: dict[int, list[int]],
-    mn: list[int],
-    rng: list[int],
-    cells: list[tuple[int, list[int]]],
-    k: int = TOPK,
-) -> DataFrame:
-    """ONE numpy scan over the probed-cell union, residual arithmetic:
-    reconstruction is cq[label]·levels + mn·levels + code·rng (absolute
-    space), so queries stay un-recentered. pruned: (vec_id, label,
-    codes)."""
-    mn_a = np.asarray(mn, dtype=np.int64)
-    rng_a = np.asarray(rng, dtype=np.int64)
-    max_label = max(label for label, _ in cells)
-    cq_m = np.zeros((max_label + 1, len(mn)), dtype=np.int64)
-    for label, cq in cells:
-        cq_m[label] = np.asarray(cq, dtype=np.int64)
-    qids = [qid for qid, _ in queries_eq]
-    qs = {
-        qid: np.asarray(eq, dtype=np.int64) * SQ8_LEVELS for qid, eq in queries_eq
-    }
-    probe_sets = {qid: set(labs) for qid, labs in probed.items()}
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            labs = pdf["label"].to_numpy(dtype=np.int64)
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            recon = cq_m[labs] * SQ8_LEVELS + mn_a * SQ8_LEVELS + codes * rng_a
-            for qid in qids:
-                mask = np.isin(labs, list(probe_sets[qid])) & (ids != qid)
-                if not mask.any():
-                    continue
-                diff = qs[qid][None, :] - recon[mask]
-                dist = (diff * diff).sum(axis=1)
-                cid = ids[mask]
-                order = np.lexsort((cid, dist))[:k]
-                yield pd.DataFrame(
-                    {"qid": qid, "neighbor_id": cid[order], "dist": dist[order]}
-                )
-
-    schema = StructType(
-        [
-            StructField("qid", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("dist", LongType()),
-        ]
-    )
-    partial = pruned.select("vec_id", "label", "codes").mapInPandas(scan, schema)
-    w = Window.partitionBy("qid").orderBy(F.asc("dist"), F.asc("neighbor_id"))
-    return (
-        partial.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("qid", "neighbor_id", F.col("rk").cast("int").alias("rk"))
-        .orderBy("qid", "rk")
-    )
 
 
 _SQL_IVF_SQ8_RESIDUAL = f"""
@@ -5222,15 +5255,13 @@ def q_ann_ivf_sq8_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(label, cq) for label, cq in cells], "label int, cq array<bigint>"
     )
     rem = _sq8_residuals(emb, cells_df)
-    mn, rng = _arr_int_stats(rem, "rv")
+    grid = _arr_raw_minmax(rem, "rv")
+    mn, rng = grid.mn, grid.rng
     coded = sq8_encode_ints(rem, "rv", mn, rng)
     queries = _collect_query_eq(
         t(spark, sf_dir, "embeddings").where(F.col("vec_id") < N_QUERIES)
     )
-    probed = ivf_sq8_probes(queries, cells)
-    all_probed = sorted({lb for labs in probed.values() for lb in labs})
-    pruned = coded.where(F.col("label").isin(all_probed))
-    return ivf_sq8_residual_scan_topk(pruned, queries, probed, mn, rng, cells, TOPK)
+    return ivf_sq8_scan(coded, queries, cells, mn, rng, residual=True)
 
 
 def _sq8_residuals(emb: DataFrame, cells_df: DataFrame) -> DataFrame:
@@ -5281,7 +5312,8 @@ def sq8_residual_index_path(
             [(label, cq) for label, cq in cells], "label int, cq array<bigint>"
         )
         rem = _sq8_residuals(emb, cells_df)
-        mn, rng = _arr_int_stats(rem, "rv")
+        grid = _arr_raw_minmax(rem, "rv")
+        mn, rng = grid.mn, grid.rng
         spark.createDataFrame(
             [(mn, rng)], "mn array<bigint>, rng array<bigint>"
         ).write.mode("overwrite").parquet(grid_path)
@@ -5323,11 +5355,10 @@ def q_ann_sq8_residual_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = _collect_query_eq(
         t(spark, sf_dir, "embeddings").where(F.col("vec_id") < N_QUERIES)
     )
-    probed = ivf_sq8_probes(queries, cells)
-    all_probed = sorted({lb for labs in probed.values() for lb in labs})
-    # the literal IN becomes a parquet PARTITION filter on the code scan
-    pruned = spark.read.parquet(codes_path).where(F.col("label").isin(all_probed))
-    return ivf_sq8_residual_scan_topk(pruned, queries, probed, mn, rng, cells, TOPK)
+    # the probed labels' literal IN becomes a parquet PARTITION filter
+    return ivf_sq8_scan(
+        spark.read.parquet(codes_path), queries, cells, mn, rng, residual=True
+    )
 
 
 # --------------------------------------------------------------------------
@@ -5457,7 +5488,8 @@ def sq8_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame
     cells_h_df = spark.createDataFrame(
         cells_h, "label int, cq array<bigint>"
     )
-    mn, rng = _arr_int_stats(_sq8_residuals(half, cells_h_df), "rv")
+    grid = _arr_raw_minmax(_sq8_residuals(half, cells_h_df), "rv")
+    mn, rng = grid.mn, grid.rng
 
     # the grown index: EVERY vector residual-encoded vs the STALE cells
     # on the frozen grid (clamped — stale artifacts meet unseen data)
@@ -5489,23 +5521,16 @@ def sq8_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame
     # probe the refreshed index; RAISE unless bit-identical to a full
     # re-encode against (fresh cells, frozen grid)
     queries = _collect_query_eq(emb.where(F.col("vec_id") < N_QUERIES))
-    probed = ivf_sq8_probes(queries, cells_f)
-    all_probed = sorted({lb for labs in probed.values() for lb in labs})
-    refreshed = spark.read.parquet(current).where(
-        F.col("label").isin(all_probed)
-    )
     full_codes = sq8_encode_ints(
         _sq8_residuals(emb, cells_f_df), "rv", mn, rng, clamp=True
-    ).where(F.col("label").isin(all_probed))
+    )
     n_moved = emb.where(F.col("label").isin(changed)).count() if changed else 0
     return _proved_readout(
         spark,
-        ivf_sq8_residual_scan_topk(
-            refreshed, queries, probed, mn, rng, cells_f, TOPK
+        ivf_sq8_scan(
+            spark.read.parquet(current), queries, cells_f, mn, rng, residual=True
         ),
-        ivf_sq8_residual_scan_topk(
-            full_codes, queries, probed, mn, rng, cells_f, TOPK
-        ),
+        ivf_sq8_scan(full_codes, queries, cells_f, mn, rng, residual=True),
         (
             (n_moved, emb.count(), len(changed)),
             "n_moved bigint, n_total bigint, n_changed_cells bigint",
@@ -5531,39 +5556,6 @@ def sq8_coarse_refresh_readout(spark: SparkSession, emb: DataFrame) -> DataFrame
 # Scale: the residualize is the one bounded |cells|-row join the family
 # already pays; the audit is ONE scan ending in 3·dim partial-agg cells.
 # --------------------------------------------------------------------------
-
-
-def _arr_raw_minmax(
-    df: DataFrame, col: str, dim: int = SQ8_DIM
-) -> tuple[list[int], list[int]]:
-    """Per-dim raw (mn, mx) of an int64 array column — no rng floor; one
-    scan, 2·dim partial-agg cells."""
-    aggs = [
-        F.min(F.element_at(col, d + 1)).alias(f"mn{d}") for d in range(dim)
-    ] + [F.max(F.element_at(col, d + 1)).alias(f"mx{d}") for d in range(dim)]
-    row = df.agg(*aggs).collect()[0]
-    return (
-        [int(row[f"mn{d}"]) for d in range(dim)],
-        [int(row[f"mx{d}"]) for d in range(dim)],
-    )
-
-
-def _arr_out_of_grid_count(
-    df: DataFrame, col: str, mn: list[int], mx: list[int], dim: int = SQ8_DIM
-) -> int:
-    """Total out-of-grid values of an int64 array column under a [mn, mx]
-    grid — one scan ending in dim partial-agg cells."""
-    el = [F.element_at(col, d + 1) for d in range(dim)]
-    aggs = [
-        F.sum(
-            F.when((el[d] < F.lit(mn[d])) | (el[d] > F.lit(mx[d])), 1).otherwise(0)
-        )
-        .cast("bigint")
-        .alias(f"o{d}")
-        for d in range(dim)
-    ]
-    row = df.agg(*aggs).collect()[0]
-    return sum(int(row[f"o{d}"]) for d in range(dim))
 
 
 _SQL_SQ8_RES_DRIFT_BASE = f"""
@@ -5632,49 +5624,9 @@ def sq8_residual_grid_drift_readout(
     """Drift audit body over any (vec_id, embedding, label) frame —
     frozen cells + residual grid from the even-vec_id half, audit over
     the odd half's residuals against those frozen cells."""
-    import math as _math
-
     cells_h = ivf_sq8_cells(emb.where(F.col("vec_id") % 2 == 0))
     cells_h_df = spark.createDataFrame(cells_h, "label int, cq array<bigint>")
-    rem = _sq8_residuals(emb, cells_h_df)
-    mn, mx = _arr_raw_minmax(rem.where(F.col("vec_id") % 2 == 0), "rv")
-
-    audit = rem.where(F.col("vec_id") % 2 == 1)
-    el = [F.element_at("rv", d + 1) for d in range(SQ8_DIM)]
-    aggs = []
-    for d in range(SQ8_DIM):
-        aggs.append(F.count(el[d]).cast("bigint").alias(f"n{d}"))
-        aggs.append(
-            F.sum(F.when(el[d] < F.lit(mn[d]), 1).otherwise(0))
-            .cast("bigint")
-            .alias(f"lo{d}")
-        )
-        aggs.append(
-            F.sum(F.when(el[d] > F.lit(mx[d]), 1).otherwise(0))
-            .cast("bigint")
-            .alias(f"hi{d}")
-        )
-    arow = audit.agg(*aggs).collect()[0]  # bounded: 3·dim cells
-    n_values = sum(int(arow[f"n{d}"]) for d in range(SQ8_DIM))
-    n_lo = sum(int(arow[f"lo{d}"]) for d in range(SQ8_DIM))
-    n_hi = sum(int(arow[f"hi{d}"]) for d in range(SQ8_DIM))
-    worst_d, worst_sat, worst_n = 0, -1, 1
-    for d in range(SQ8_DIM):
-        sat = int(arow[f"lo{d}"]) + int(arow[f"hi{d}"])
-        if sat > worst_sat:
-            worst_d, worst_sat, worst_n = d, sat, int(arow[f"n{d}"])
-    out = (
-        n_values,
-        n_lo,
-        n_hi,
-        worst_d,
-        int(_math.floor(worst_sat * 1048576.0 / worst_n + 0.5)),
-    )
-    return spark.createDataFrame(
-        [out],
-        "n_values bigint, n_sat_lo bigint, n_sat_hi bigint, "
-        "worst_dim int, worst_dim_sat_q20 bigint",
-    )
+    return _grid_drift_audit(spark, _sq8_residuals(emb, cells_h_df), "rv")
 
 
 # --------------------------------------------------------------------------
@@ -5767,30 +5719,25 @@ def sq8_residual_grid_refresh_readout(
     cells_h_df = spark.createDataFrame(cells_h, "label int, cq array<bigint>")
     rem = _sq8_residuals(emb, cells_h_df)
 
-    # stale residual grid: trained on the even-half residuals
-    mn_h, mx_h = _arr_raw_minmax(rem.where(F.col("vec_id") % 2 == 0), "rv")
-    rng_h = [max(mx_h[d] - mn_h[d], 1) for d in range(len(mn_h))]
+    # stale residual grid: trained on the even-half residuals; fresh
+    # grid: retrained on the full corpus's residuals (cells frozen)
+    stale, fresh, moved = _stale_and_fresh_grids(rem, "rv")
+    mn_f, rng_f = fresh.mn, fresh.rng
 
     # the live index: the FULL corpus encoded on the stale grid (clamped
     # — the stale grid meets residuals it was not trained on)
     current = _os.path.join(work_dir("sq8_res_grid_refresh_index"), "current")
     (
-        sq8_encode_ints(rem, "rv", mn_h, rng_h, clamp=True)
+        sq8_encode_ints(rem, "rv", stale.mn, stale.rng, clamp=True)
         .write.mode("overwrite")
         .partitionBy("label")
         .parquet(current)
     )
 
-    # the alarm's number: out-of-grid residuals under the stale grid
-    n_sat_before = _arr_out_of_grid_count(rem, "rv", mn_h, mx_h)
-
-    # refresh: retrain the residual grid on the full corpus (cells frozen)
-    mn_f, mx_f = _arr_raw_minmax(rem, "rv")
-    rng_f = [max(mx_f[d] - mn_f[d], 1) for d in range(len(mn_f))]
-    n_dims_moved = sum(
-        1 for d in range(len(mn_f)) if mn_h[d] != mn_f[d] or mx_h[d] != mx_f[d]
-    )
-    n_sat_after = _arr_out_of_grid_count(rem, "rv", mn_f, mx_f)
+    # the alarm's number (out-of-grid residuals under the stale grid)
+    # and the acceptance check (0 under the fresh one)
+    n_sat_before = _arr_out_of_grid_count(rem, "rv", stale)
+    n_sat_after = _arr_out_of_grid_count(rem, "rv", fresh)
     pinned_replace(
         current,
         lambda staged: sq8_encode_ints(rem, "rv", mn_f, rng_f)
@@ -5802,26 +5749,16 @@ def sq8_residual_grid_refresh_readout(
     # probe the refreshed index; RAISE unless bit-identical to a
     # from-scratch rebuild on the fresh grid
     queries = _collect_query_eq(emb.where(F.col("vec_id") < N_QUERIES))
-    probed = ivf_sq8_probes(queries, cells_h)
-    all_probed = sorted({lb for labs in probed.values() for lb in labs})
 
     def serve(codes: DataFrame) -> DataFrame:
-        return ivf_sq8_residual_scan_topk(
-            codes.where(F.col("label").isin(all_probed)),
-            queries,
-            probed,
-            mn_f,
-            rng_f,
-            cells_h,
-            TOPK,
-        )
+        return ivf_sq8_scan(codes, queries, cells_h, mn_f, rng_f, residual=True)
 
     return _proved_readout(
         spark,
         serve(spark.read.parquet(current)),
         serve(sq8_encode_ints(rem, "rv", mn_f, rng_f)),
         (
-            (n_dims_moved, n_sat_before, n_sat_after),
+            (len(moved), n_sat_before, n_sat_after),
             "n_dims_moved bigint, n_sat_before bigint, n_sat_after bigint",
         ),
     )
@@ -6045,26 +5982,18 @@ def sq8_dim_columnar_refresh_readout(
     import os as _os
     import shutil as _shutil
 
-    # stale grid: trained on the even-vec_id half (the original build)
-    mn_h, mx_h = _sq8_raw_minmax(emb.where(F.col("vec_id") % 2 == 0))
-    rng_h = [max(mx_h[d] - mn_h[d], 1) for d in range(len(mn_h))]
+    # stale grid: trained on the even-vec_id half (the original build);
+    # the refresh's fresh grid over the full corpus moves some dims only
+    stale, fresh, moved = _stale_and_fresh_grids(_eqv(emb), "eqv")
+    mn_f, rng_f = fresh.mn, fresh.rng
 
     # the live index, DIM-PARTITIONED and vec_id-co-bucketed/sorted:
     # (vec_id, code) under d=K/bucket=b subdirs — the zipper layout
     state = work_dir("sq8_dimcol_index")
     root = _os.path.join(state, "codes")
     sq8_dim_columnar_write(
-        sq8_encode(emb, mn_h, rng_h), root, SQ8_DIMCOL_BUCKETS
+        sq8_encode(emb, stale.mn, stale.rng), root, SQ8_DIMCOL_BUCKETS
     )
-
-    # refresh: fresh grid over the full corpus; moved dims only
-    mn_f, mx_f = _sq8_raw_minmax(emb)
-    rng_f = [max(mx_f[d] - mn_f[d], 1) for d in range(len(mn_f))]
-    moved = [
-        d
-        for d in range(len(mn_f))
-        if mn_h[d] != mn_f[d] or mx_h[d] != mx_f[d]
-    ]
 
     # unmoved dims' column files must survive the WHOLE refresh untouched
     unmoved_pre = {
@@ -6252,68 +6181,6 @@ def _sq8_sweep_oracle() -> str:
     """
 
 
-def ivf_sq8_scan_ranked_topk(
-    pruned: DataFrame,
-    queries_eq: list[tuple[int, list[int]]],
-    ranked: dict[int, list[int]],
-    mn: list[int],
-    rng: list[int],
-    k: int = TOPK,
-) -> DataFrame:
-    """Per-(query, cell-rank) top-k in ONE numpy scan: ``ranked`` maps
-    qid -> probed labels in rank order; each candidate ranks only within
-    its cell's rank bucket, so every nprobe <= len(ranked[qid]) re-ranks
-    from these bounded partials without rescanning codes."""
-    mn_a = np.asarray(mn, dtype=np.int64)
-    rng_a = np.asarray(rng, dtype=np.int64)
-    qids = [qid for qid, _ in queries_eq]
-    qs = {
-        qid: np.asarray(eq, dtype=np.int64) * SQ8_LEVELS for qid, eq in queries_eq
-    }
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            labs = pdf["label"].to_numpy(dtype=np.int64)
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            recon = mn_a * SQ8_LEVELS + codes * rng_a
-            for qid in qids:
-                for prk, lab in enumerate(ranked[qid], start=1):
-                    mask = (labs == lab) & (ids != qid)
-                    if not mask.any():
-                        continue
-                    diff = qs[qid][None, :] - recon[mask]
-                    dist = (diff * diff).sum(axis=1)
-                    cid = ids[mask]
-                    order = np.lexsort((cid, dist))[:k]
-                    yield pd.DataFrame(
-                        {
-                            "qid": qid,
-                            "prk": prk,
-                            "neighbor_id": cid[order],
-                            "dist": dist[order],
-                        }
-                    )
-
-    schema = StructType(
-        [
-            StructField("qid", LongType()),
-            StructField("prk", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("dist", LongType()),
-        ]
-    )
-    partial = pruned.select("vec_id", "label", "codes").mapInPandas(scan, schema)
-    w = Window.partitionBy("qid", "prk").orderBy(
-        F.asc("dist"), F.asc("neighbor_id")
-    )
-    return (
-        partial.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= k)
-        .select("qid", "prk", "neighbor_id", "dist")
-    )
-
-
 @register(
     "q_ann_ivf_sq8_nprobe_sweep",
     _sq8_sweep_oracle(),
@@ -6336,21 +6203,11 @@ def q_ann_ivf_sq8_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "embeddings").where(F.col("vec_id") < N_QUERIES)
     )
     kmax = min(IVF_SQ8_SWEEP_MAX, len(cells))
-    # like ivf_sq8_probes but keeping PROBE RANK order (the sweep needs
-    # rank; the serving helper sorts labels for the partition filter)
-    ranked = {}
-    for qid, eq in queries:
-        dists = sorted(
-            (sum((e - c) ** 2 for e, c in zip(eq, cq)), label)
-            for label, cq in cells
-        )
-        ranked[qid] = [label for _, label in dists[:kmax]]
-    all_probed = sorted({lb for labs in ranked.values() for lb in labs})
-    pruned = coded.where(F.col("label").isin(all_probed))
+    ranked = ivf_sq8_probes(queries, cells, kmax)
 
     # ONE scan; Q * kmax * TOPK bounded partial rows
-    partials = ivf_sq8_scan_ranked_topk(
-        pruned, queries, ranked, mn, rng, TOPK
+    partials = ivf_sq8_scan(
+        coded, queries, cells, mn, rng, nprobe=kmax, per_cell=True
     ).collect()
 
     # occupancy for candidate counts: |cells| rows
@@ -6367,18 +6224,10 @@ def q_ann_ivf_sq8_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     }
 
-    # exact leg (identity grid), bounded Q*TOPK rows
-    ones = [1] * len(mn)
+    # exact leg, bounded Q*TOPK rows
     ext = {
         (int(r["qid"]), int(r["neighbor_id"]))
-        for r in sq8_topk(
-            sq8_encode(emb.select("vec_id", "embedding"), mn, ones, levels=1),
-            queries,
-            mn,
-            ones,
-            TOPK,
-            levels=1,
-        ).collect()
+        for r in grid_exact_topk(emb, queries, mn).collect()
     }
 
     by_q: dict[int, list] = {}
@@ -6698,13 +6547,7 @@ def q_ann_bq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bqt = bq_hamming_topk(coded, qdf, TOPK).select("qid", "neighbor_id")
 
-    # exact leg on the shared integer grid (identity-grid trick)
-    mn, _ = sq8_stats(emb)
-    ones = [1] * len(mn)
-    queries = _collect_query_eq(qraw)
-    ext = sq8_topk(
-        sq8_encode(emb, mn, ones, levels=1), queries, mn, ones, TOPK, levels=1
-    ).select("qid", "neighbor_id")
+    ext = grid_exact_topk(emb, _collect_query_eq(qraw)).select("qid", "neighbor_id")
     return (
         ext.join(bqt.withColumn("hit", F.lit(1)), ["qid", "neighbor_id"], "left")
         .groupBy("qid")

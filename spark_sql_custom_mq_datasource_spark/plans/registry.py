@@ -54,62 +54,63 @@ def register(
 # rounds' prefixes and plans live in git history and in their
 # CORRECTNESS_r*.json records.
 _PRIORITY: tuple[str, ...] = (
-    # -- code changed: the mqlog commit (one manifest parse, torn tail) --
-    "q_mqlog_roundtrip",
-    # -- the r12-stale records the previous prefix left out, then the
-    #    next r13-stale ones (tools/rotation_plan.py order) -------------
-    "q_unpivot_daily",
-    "q_null_semantics",
-    "q_ordered_string_agg",
-    "q_histogram_totalprice",
-    "q_zorder_point_range",
-    "q_jsonl_roundtrip",
-    "q_csv_roundtrip",
-    "q_compact_small_files",
-    "q_backfill_day_partition",
-    "q_merge_upsert_customers",
-    "q_schema_evolution_merge",
-    "q_retention_prune",
-    "q_scd2_build",
-    "q_scd2_pointintime",
-    "q_incremental_mv_merge",
-    "q_top_customers",
-    "q_full_outer_join_balance",
-    "q_text_quality",
-    "q_text_fingerprint",
-    "q_text_bpeish_tokens",
-    "q_text_lang_agg",
-    "q_text_normalize",
-    "q_text_repetition_scores",
-    "q_langid_confusion",
-    "q_bpe_train_merges",
-    "q_bpe_encode",
-    "q_dedup_rerank_cosine",
-    "q_dedup_cross_source_matrix",
-    "q_dedup_keep_longest",
-    "q_manifest_retention_prune",
-    "q_manifest_stats_skip",
-    "q_manifest_row_deletes",
-    "q_ann_ivf_pq",
-    "q_pq_persisted_probe",
-    "q_ann_ivf_pq_residual",
-    "q_ann_ivf_pq_nprobe_sweep",
-    "q_sample_weighted_per_source",
-    "q_hybrid_rrf_topk",
-    "q_mix_upsample",
-    "q_pack_sequences",
-    "q_split_leakage_free",
-    "q_udf_scalar_tokens",
-    "q_multimodal_binary_meta",
-    "q_multimodal_frame_sample",
-    "q_attribution_last_view",
-    "q_stream_pq_encode",
-    "q_semi_join_priority",
-    "q_cube_orders",
-    "q_distinct_parts_per_flag",
+    # -- code changed: the IVF-SQ8 scan kernel, the integer-grid toolkit
+    #    and the exact identity-grid leg ----------------------------------
+    "q_ann_ivf_sq8",
+    "q_ann_sq8_persisted",
+    "q_ann_ivf_sq8_residual",
+    "q_ann_sq8_residual_persisted",
+    "q_ann_ivf_sq8_nprobe_sweep",
+    "q_sq8_coarse_refresh",
+    "q_sq8_grid_refresh",
+    "q_sq8_residual_grid_refresh",
+    "q_sq8_dim_columnar_refresh",
+    "q_sq8_grid_drift",
+    "q_sq8_residual_grid_drift",
+    "q_ann_sq8_recall",
+    "q_ann_bq_recall",
+    "q_stream_sq8_index_grow",
+    "q_sq8_index_compact",
+    "q_sq8_index_health",
+    "q_ann_sq8_delete_mor",
+    "q_sq8_delete_compact",
+    "q_stream_sq8_residual_index_grow",
+    "q_sq8_residual_index_compact",
+    "q_sq8_residual_index_health",
+    "q_ann_sq8_residual_delete_mor",
+    "q_sq8_residual_delete_compact",
+    "q_bq_index_health",
+    # -- the r13-stale records no earlier prefix held, then the oldest
+    #    r14-stale ones (tools/rotation_plan.py order) ---------------------
+    "q_manifest_partition_evolution",
+    "q_embedding_dim_stats",
+    "q_hard_negative_mining",
+    "q_embedding_pq_codebooks",
+    "q_pq_adc_recall",
+    "q_stream_mv_merge",
+    "q_union_high_value",
+    "q_window_running_total",
+    "q_window_order_gaps",
+    "q_right_join_order_coverage",
+    "q_text_lang_id",
+    "q_vocab_coverage",
+    "q_source_divergence_kl",
+    "q_tokenizer_fertility",
+    "q_bpe_pair_counts",
+    "q_bpe_tokenize_corpus",
+    "q_bpe_tokenize_persisted",
+    "q_bpe_tokenize_oov_replay",
+    "q_bpe_tokenize_oov_persisted",
+    "q_dedup_exact",
+    "q_dedup_embedding_cosine",
+    "q_dedup_clusters",
+    "q_dedup_incremental_minhash",
+    "q_manifest_time_travel",
+    "q_ann_bruteforce_topk",
+    "q_ann_lsh_bucketed",
 )
 # NEXT ROTATION PLAN: lead with whatever the next change edits, then the
-# remaining r13-stale records oldest-first (tools/rotation_plan.py; it
+# remaining r14-stale records oldest-first (tools/rotation_plan.py; it
 # cannot see which stale records earlier prefixes already covered).
 
 

@@ -4272,7 +4272,7 @@ class TestIvfSq8Residual:
         from spark_sql_custom_mq_datasource_spark.operators.similarity import (
             _SQL_EQV,
             SQ8_DIM,
-            _arr_int_stats,
+            _arr_raw_minmax,
             ivf_sq8_cells,
             sq8_stats,
         )
@@ -4294,7 +4294,7 @@ class TestIvfSq8Residual:
         rem = emb.join(cells_df, "label").select(
             F.expr(f"zip_with({_SQL_EQV}, cq, (x, y) -> x - y)").alias("rv")
         )
-        _, rng_res = _arr_int_stats(rem, "rv")
+        rng_res = _arr_raw_minmax(rem, "rv").rng
         # absolute range spans the inter-cluster gap (~1.0); residual
         # range spans only the within-cluster spread (~0.004)
         assert sum(rng_res) * 10 < sum(rng_abs)

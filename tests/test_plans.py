@@ -976,11 +976,9 @@ class TestRound16Plans:
 
         from spark_sql_custom_mq_datasource_spark.operators.similarity import (
             N_QUERIES,
-            TOPK,
             _collect_query_eq,
             _sq8_tombstones,
-            ivf_sq8_probes,
-            ivf_sq8_scan_topk,
+            ivf_sq8_scan,
             sq8_index_path,
         )
         from spark_sql_custom_mq_datasource_spark.plans.util import t, tp
@@ -998,14 +996,11 @@ class TestRound16Plans:
         queries = _collect_query_eq(
             t(spark, sf_dir, "embeddings").where(F.col("vec_id") < N_QUERIES)
         )
-        probed = ivf_sq8_probes(queries, cells)
-        all_probed = sorted({lb for labs in probed.values() for lb in labs})
-        pruned = (
-            spark.read.parquet(codes_path)
-            .where(F.col("label").isin(all_probed))
-            .join(_sq8_tombstones(emb), "vec_id", "left_anti")
+        # the kernel prunes after the anti-join, as delete_mor serves
+        live = spark.read.parquet(codes_path).join(
+            _sq8_tombstones(emb), "vec_id", "left_anti"
         )
-        probe = ivf_sq8_scan_topk(pruned, queries, probed, mn, rng, TOPK)
+        probe = ivf_sq8_scan(live, queries, cells, mn, rng)
         p = df_plan(spark, probe)
         assert "CartesianProduct" not in p
         assert "BroadcastNestedLoopJoin" not in p
