@@ -4183,23 +4183,18 @@ def sq8_stats(
     return mn, rng, queries
 
 
-def sq8_encode(
-    emb: DataFrame, mn: list[int], rng: list[int], levels: int = SQ8_LEVELS
-) -> DataFrame:
+def sq8_encode(emb: DataFrame, mn: list[int], rng: list[int]) -> DataFrame:
     """(vec_id, codes array<int>): JVM-side stateless encode map.
 
     The 128 grid constants ride as two literal arrays inside ONE
     projection (no per-consumer re-inlining — the encode output feeds
-    either a parquet sink or an Arrow boundary). levels=1 with rng=1
-    degenerates to the identity grid (codes = e - mn) — the exact leg
-    of the recall read-out, kept unscaled so its 64-dim squared sums
-    stay far from int64 range."""
+    either a parquet sink or an Arrow boundary)."""
     mn_sql = "array(" + ",".join(f"{v}L" for v in mn) + ")"
     rng_sql = "array(" + ",".join(f"{v}L" for v in rng) + ")"
     codes = F.expr(
         f"transform(embedding, (x, i) -> CAST("
         f"((floor(CAST(x AS DOUBLE) * {QUANT} + 0.5D) - element_at({mn_sql}, i + 1))"
-        f" * {levels}) DIV element_at({rng_sql}, i + 1) AS INT))"
+        f" * {SQ8_LEVELS}) DIV element_at({rng_sql}, i + 1) AS INT))"
     )
     keep = [c for c in emb.columns if c != "embedding"]
     return emb.select(*keep, codes.alias("codes"))
@@ -4288,23 +4283,22 @@ def _collect_query_eq(queries: DataFrame) -> list[tuple[int, list[int]]]:
 
 
 def grid_exact_topk(
-    emb: DataFrame,
-    queries_eq: list[tuple[int, list[int]]],
-    mn: list[int] | None = None,
+    emb: DataFrame, queries_eq: list[tuple[int, list[int]]]
 ) -> DataFrame:
     """Exact integer-L2 top-k on the raw Q20 grid: the SQ8 scan on the
-    identity grid (levels=1, rng=1, so codes = e - mn and recon = e) —
-    an exact brute force sharing the quantized scan machinery. It does
-    not depend on any quantizer, so every recall leg uses it. ``mn`` is
-    emb's per-dim minimum when the caller already has it (one stats scan
-    fewer); any value keeping e - mn in int range gives the same result."""
-    vecs = emb.select("vec_id", "embedding")
-    if mn is None:
-        mn, _ = sq8_stats(vecs)
-    ones = [1] * len(mn)
-    return sq8_topk(
-        sq8_encode(vecs, mn, ones, levels=1), queries_eq, mn, ones, TOPK, levels=1
+    identity grid with a fixed origin (mn=0, rng=1, levels=1, so codes =
+    recon = e) — an exact brute force sharing the quantized scan
+    machinery, with no stats scan. It does not depend on any quantizer,
+    so every recall leg uses it. Codes are int32: an e outside int32
+    raises, whatever ``spark.sql.ansi.enabled`` says, instead of wrapping."""
+    lo, hi = -(1 << 31), (1 << 31) - 1
+    codes = F.expr(
+        f"transform(transform(embedding, x -> floor(CAST(x AS DOUBLE) * {QUANT} + 0.5D)),"
+        f" e -> CASE WHEN e BETWEEN {lo} AND {hi} THEN CAST(e AS INT)"
+        f" ELSE raise_error('grid_exact_topk: Q20 value outside int32') END)"
     )
+    coded = emb.select("vec_id", codes.alias("codes"))
+    return sq8_topk(coded, queries_eq, [0] * SQ8_DIM, [1] * SQ8_DIM, TOPK, levels=1)
 
 
 _SQL_SQ8_CTES = f"""
@@ -4393,7 +4387,7 @@ def q_ann_sq8_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "embeddings").where(F.col("vec_id") < N_QUERIES)
     )
     sq8t = sq8_topk(coded, queries, mn, rng, TOPK).select("qid", "neighbor_id")
-    ext = grid_exact_topk(emb, queries, mn).select("qid", "neighbor_id")
+    ext = grid_exact_topk(emb, queries).select("qid", "neighbor_id")
     return (
         ext.join(sq8t.withColumn("hit", F.lit(1)), ["qid", "neighbor_id"], "left")
         .groupBy("qid")
@@ -6227,7 +6221,7 @@ def q_ann_ivf_sq8_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact leg, bounded Q*TOPK rows
     ext = {
         (int(r["qid"]), int(r["neighbor_id"]))
-        for r in grid_exact_topk(emb, queries, mn).collect()
+        for r in grid_exact_topk(emb, queries).collect()
     }
 
     by_q: dict[int, list] = {}

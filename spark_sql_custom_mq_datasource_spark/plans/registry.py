@@ -54,60 +54,62 @@ def register(
 # rounds' prefixes and plans live in git history and in their
 # CORRECTNESS_r*.json records.
 _PRIORITY: tuple[str, ...] = (
-    # -- code changed: the IVF-SQ8 scan kernel, the integer-grid toolkit
-    #    and the exact identity-grid leg ----------------------------------
-    "q_ann_ivf_sq8",
-    "q_ann_sq8_persisted",
-    "q_ann_ivf_sq8_residual",
-    "q_ann_sq8_residual_persisted",
-    "q_ann_ivf_sq8_nprobe_sweep",
-    "q_sq8_coarse_refresh",
-    "q_sq8_grid_refresh",
-    "q_sq8_residual_grid_refresh",
-    "q_sq8_dim_columnar_refresh",
-    "q_sq8_grid_drift",
-    "q_sq8_residual_grid_drift",
+    # -- code changed: the mq, mqlog and mq-replay sources (zip guard in
+    #    their planner workers, MQDataSource.schema) ---------------------
+    "q_stream_mq_wordcount",
+    "q_stream_mq_replay",
+    "q_stream_mq_to_manifest",
+    "q_mqlog_roundtrip",
+    # -- code changed: the exact identity-grid leg's callers (no stats
+    #    scan, fixed grid origin) ------------------------------------------
     "q_ann_sq8_recall",
+    "q_ann_ivf_sq8_nprobe_sweep",
     "q_ann_bq_recall",
-    "q_stream_sq8_index_grow",
-    "q_sq8_index_compact",
     "q_sq8_index_health",
-    "q_ann_sq8_delete_mor",
-    "q_sq8_delete_compact",
-    "q_stream_sq8_residual_index_grow",
-    "q_sq8_residual_index_compact",
     "q_sq8_residual_index_health",
-    "q_ann_sq8_residual_delete_mor",
-    "q_sq8_residual_delete_compact",
     "q_bq_index_health",
-    # -- the r13-stale records no earlier prefix held, then the oldest
-    #    r14-stale ones (tools/rotation_plan.py order) ---------------------
-    "q_manifest_partition_evolution",
-    "q_embedding_dim_stats",
-    "q_hard_negative_mining",
-    "q_embedding_pq_codebooks",
-    "q_pq_adc_recall",
-    "q_stream_mv_merge",
-    "q_union_high_value",
-    "q_window_running_total",
-    "q_window_order_gaps",
-    "q_right_join_order_coverage",
-    "q_text_lang_id",
-    "q_vocab_coverage",
-    "q_source_divergence_kl",
-    "q_tokenizer_fertility",
-    "q_bpe_pair_counts",
-    "q_bpe_tokenize_corpus",
-    "q_bpe_tokenize_persisted",
-    "q_bpe_tokenize_oov_replay",
-    "q_bpe_tokenize_oov_persisted",
-    "q_dedup_exact",
-    "q_dedup_embedding_cosine",
-    "q_dedup_clusters",
-    "q_dedup_incremental_minhash",
-    "q_manifest_time_travel",
-    "q_ann_bruteforce_topk",
-    "q_ann_lsh_bucketed",
+    # -- then the oldest r14-stale and r15-stale records no earlier prefix
+    #    held (tools/rotation_plan.py order) ------------------------------
+    "q_ann_ivf",
+    "q_ann_recall_lsh",
+    "q_ann_lsh_persisted",
+    "q_hard_negative_ann",
+    "q_ann_ivf_pq_residual_persisted",
+    "q_ann_ivf_pq_refine",
+    "q_pq_coarse_refresh",
+    "q_ann_sq8_topk",
+    "q_pq_index_compact",
+    "q_pq_residual_index_compact",
+    "q_multimodal_frame_dedup",
+    "q_stream_manifest_ingest",
+    "q_stream_kmeans_assign",
+    "q_ab_experiment_readout",
+    "q_funnel_time_to_convert",
+    "q_event_transitions",
+    "q_stream_funnel_stateful",
+    "q_stream_split_route",
+    "q_session_paths_topk",
+    "q_events_debounce",
+    "q_stream_debounce",
+    "q_manifest_compact",
+    "q_ann_lsh_multiprobe",
+    "q_ann_sq8_refine",
+    "q_retrieval_maxsim",
+    "q_retrieval_maxsim_persisted",
+    "q_split_train_val_test",
+    "q_curation_pipeline",
+    "q_decontaminate_ngram",
+    "q_stratified_sample",
+    "q_dedup_incremental",
+    "q_token_budget_mix",
+    "q_mix_temperature",
+    "q_dedup_chunk_exact",
+    "q_shard_balanced",
+    "q_decontaminate_bloom",
+    "q_udf_grouped_user_stats",
+    "q_udf_grouped_agg_geomean",
+    "q_udtf_tokenize",
+    "q_asof_join_last_order",
 )
 # NEXT ROTATION PLAN: lead with whatever the next change edits, then the
 # remaining r14-stale records oldest-first (tools/rotation_plan.py; it

@@ -456,7 +456,7 @@ class MQDataSource(DataSource):
         return "mq"
 
     def schema(self) -> StructType:
-        if str(dict(self.options).get("includeMetadata", dict(self.options).get("includemetadata", "false"))).lower() == "true":
+        if _Options(self.options).include_metadata:
             return KAFKA_STYLE_SCHEMA
         return MINIMAL_SCHEMA
 

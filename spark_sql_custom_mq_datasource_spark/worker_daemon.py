@@ -12,8 +12,17 @@ while the engine runs.
 Run as a module, this installs a stat-guarded ``invalidate_caches`` — the
 archive is re-read only when its ``(st_mtime_ns, st_size)`` differs from the
 last read — then hands over to ``pyspark.daemon.manager()``. Workers fork from
-the daemon, so they all inherit the guard. Importing this module patches
-nothing: only the daemon process, never the driver, installs it.
+the daemon, so they all inherit the guard.
+
+Spark's data-source planner workers (``pyspark.sql.worker.*``: read planning,
+writer setup, batch and stream commits) and the stream-source runner fork from
+a hard-coded ``pyspark.daemon`` and ignore ``spark.python.daemon.module``. The
+second install site, ``sources/__init__.py``, reaches them: every such runner
+imports it when it unpickles an engine data source, and it installs the guard
+only when ``SparkFiles._is_running_on_worker`` is set (``setup_spark_files``
+sets it before any command is unpickled). A reused worker then pays the
+re-reads on its first run only. Importing this module patches nothing, and
+neither site patches the driver.
 """
 
 from __future__ import annotations
@@ -53,7 +62,9 @@ def install_zip_guard() -> bool:
     (3.13+ reads the directory lazily through ``_get_files``)."""
     if hasattr(zipimport.zipimporter, "_get_files"):
         return False
-    zipimport.zipimporter.invalidate_caches = invalidate_caches_if_changed
+    # a worker forked from this module's ``__main__`` already runs its guard
+    if zipimport.zipimporter.invalidate_caches.__name__ != invalidate_caches_if_changed.__name__:
+        zipimport.zipimporter.invalidate_caches = invalidate_caches_if_changed
     return True
 
 

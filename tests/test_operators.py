@@ -3539,6 +3539,27 @@ class TestSq8:
         top = sq8_topk(coded, queries, mn, rng, k=1).collect()
         assert len(top) == 1 and top[0]["neighbor_id"] == 100
 
+    @pytest.mark.parametrize("ansi", ["true", "false"])
+    def test_grid_exact_topk_rejects_values_outside_int32(self, spark, ansi):
+        """The exact leg's fixed-origin int32 codes never wrap: a Q20 value
+        outside int32 (4096 * 2^20 = 2^32) raises under either ANSI mode."""
+        from spark_sql_custom_mq_datasource_spark.operators.similarity import (
+            _collect_query_eq,
+            grid_exact_topk,
+        )
+
+        rows = [(0, [0.25] * 64), (1, [0.5] * 64), (2, [4096.0] + [0.0] * 63)]
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        queries = _collect_query_eq(emb.where(F.col("vec_id") == 0))
+        prev = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+        try:
+            assert grid_exact_topk(emb.where("vec_id < 2"), queries).count() == 1
+            with pytest.raises(Exception, match="outside int32"):
+                grid_exact_topk(emb, queries).collect()
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", prev)
+
     def test_recall_near_exact_on_fixture(self, spark, sf_dir):
         """8-bit per-dim at 64 dims loses almost nothing — the acceptance
         gate the read-out exists for. Floor pinned BELOW the observed
@@ -4229,12 +4250,9 @@ class TestSq8Refine:
         top-k — refine recall >= plain SQ8 recall, per query."""
         from spark_sql_custom_mq_datasource_spark.operators.similarity import (
             N_QUERIES,
-            TOPK,
             _collect_query_eq,
+            grid_exact_topk,
             q_ann_sq8_refine,
-            sq8_encode,
-            sq8_stats,
-            sq8_topk,
         )
         from spark_sql_custom_mq_datasource_spark.plans.registry import (
             get_queries,
@@ -4242,13 +4260,9 @@ class TestSq8Refine:
         from spark_sql_custom_mq_datasource_spark.plans.util import tp as _tp
 
         emb = _tp(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        mn, _ = sq8_stats(emb)
         queries = _collect_query_eq(emb.where(F.col("vec_id") < N_QUERIES))
-        ones = [1] * len(mn)
         exact = {}
-        for r in sq8_topk(
-            sq8_encode(emb, mn, ones, levels=1), queries, mn, ones, TOPK, levels=1
-        ).collect():
+        for r in grid_exact_topk(emb, queries).collect():
             exact.setdefault(r["qid"], set()).add(r["neighbor_id"])
         sq8 = {}
         for r in get_queries()["q_ann_sq8_topk"](spark, sf_dir).collect():
@@ -4687,11 +4701,8 @@ class TestBinaryQuantization:
 
         from spark_sql_custom_mq_datasource_spark.operators.similarity import (
             N_QUERIES,
-            TOPK,
             _collect_query_eq,
-            sq8_encode,
-            sq8_stats,
-            sq8_topk,
+            grid_exact_topk,
         )
         from spark_sql_custom_mq_datasource_spark.plans.registry import (
             get_queries,
@@ -4708,19 +4719,10 @@ class TestBinaryQuantization:
             for r in qs["q_ann_bq_refine"](spark, sf_dir).collect()
         }
         emb = t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        mn, _ = sq8_stats(emb)
-        ones = [1] * len(mn)
         queries = _collect_query_eq(emb.where(F.col("vec_id") < N_QUERIES))
         exact = {
             (r["qid"], r["neighbor_id"])
-            for r in sq8_topk(
-                sq8_encode(emb, mn, ones, levels=1),
-                queries,
-                mn,
-                ones,
-                TOPK,
-                levels=1,
-            ).collect()
+            for r in grid_exact_topk(emb, queries).collect()
         }
         assert len(ref & exact) >= len(raw & exact)
 
