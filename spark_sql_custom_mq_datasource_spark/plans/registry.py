@@ -54,8 +54,8 @@ def register(
 # rounds' prefixes and plans live in git history and in their
 # CORRECTNESS_r*.json records.
 _PRIORITY: tuple[str, ...] = (
-    # -- code changed: the mq, mqlog and mq-replay sources (zip guard in
-    #    their planner workers, MQDataSource.schema) ---------------------
+    # -- code changed: the mqlog and mq-replay sources move Arrow record
+    #    batches both ways (mq feeds mqlog and the wordcount stream) -----
     "q_stream_mq_wordcount",
     "q_stream_mq_replay",
     "q_stream_mq_to_manifest",

@@ -37,11 +37,15 @@ parallelism). At 100 TB the same layout holds: the manifest stays tiny
 (one line per commit), data volume lives in the segment files, and a
 real deployment swaps the local renames for an object store's
 put-if-absent — the protocol is unchanged.
+
+Data path: both directions move Arrow record batches, never Python rows.
+The writers are Spark's Arrow writers (a task's batches become one
+segment), and a read task yields each segment's batches cast to the types
+Spark reads back (sources/replay.py:_spark_batches, shared with mq-replay).
 """
 
 from __future__ import annotations
 
-import datetime
 import json
 import os
 import uuid
@@ -49,64 +53,19 @@ from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
     DataSourceStreamWriter,
     DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    BooleanType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampNTZType,
-    TimestampType,
-)
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import StructType
 
-from .replay import _arrow_to_spark as _arrow_to_spark_base
-
-
-def _arrow_to_spark(t):
-    """Like replay's mapping, but distinguishes NTZ (no-tz) timestamps."""
-    import pyarrow as pa
-
-    if pa.types.is_timestamp(t):
-        return TimestampType() if t.tz else TimestampNTZType()
-    return _arrow_to_spark_base(t)
-
-
-def _spark_to_arrow(dt):
-    import pyarrow as pa
-
-    if isinstance(dt, TimestampNTZType):
-        return pa.timestamp("us")
-    if isinstance(dt, LongType):
-        return pa.int64()
-    if isinstance(dt, IntegerType):
-        return pa.int32()
-    if isinstance(dt, DoubleType):
-        return pa.float64()
-    if isinstance(dt, FloatType):
-        return pa.float32()
-    if isinstance(dt, StringType):
-        return pa.string()
-    if isinstance(dt, BinaryType):
-        return pa.binary()
-    if isinstance(dt, BooleanType):
-        return pa.bool_()
-    if isinstance(dt, TimestampType):
-        return pa.timestamp("us", tz="UTC")
-    if isinstance(dt, ArrayType):
-        return pa.list_(_spark_to_arrow(dt.elementType))
-    raise ValueError(f"mqlog: unsupported write type {dt}")
+from .replay import _spark_batches
 
 
 # ---------------------------------------------------------------- topic dir
@@ -177,30 +136,36 @@ class _SegmentCommit(WriterCommitMessage):
     rows: int = 0
 
 
-def _write_segment(topic: _Topic, schema: StructType, iterator) -> _SegmentCommit:
+def _nullable(t):
+    """Arrow type ``t`` with every nested field nullable."""
+    import pyarrow as pa
+
+    if pa.types.is_list(t):
+        return pa.list_(_nullable(t.value_type))
+    if pa.types.is_struct(t):
+        return pa.struct([(f.name, _nullable(f.type)) for f in t])
+    return t
+
+
+def _write_segment(topic: _Topic, schema: StructType, batches) -> _SegmentCommit:
+    """Stage one parquet segment from a task's record batches. Segments are
+    nullable at every level whatever ``schema`` says (Spark marks some
+    columns not null), so a topic's read schema never depends on the query
+    that wrote it; timestamps are stored in UTC, NTZ ones without a zone."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    rows = [r.asDict(recursive=True) for r in iterator]
-    if not rows:
+    batches = list(batches)
+    if not any(b.num_rows for b in batches):
         return _SegmentCommit(files=[], rows=0)
-    utc = datetime.timezone.utc
-    ts_fields = [f.name for f in schema.fields if isinstance(f.dataType, TimestampType)]
-    for r in rows:
-        for name in ts_fields:
-            v = r.get(name)
-            if v is not None and v.tzinfo is None:
-                r[name] = v.replace(tzinfo=utc)
-    arrow_schema = pa.schema(
-        [(f.name, _spark_to_arrow(f.dataType)) for f in schema.fields]
-    )
-    table = pa.Table.from_pylist(rows, schema=arrow_schema)
+    target = pa.schema([(f.name, _nullable(f.type)) for f in to_arrow_schema(schema)])
+    table = pa.Table.from_batches(batches).cast(target)
     name = f"seg-{uuid.uuid4().hex}.parquet"
     pq.write_table(table, os.path.join(topic.staging, name))
     return _SegmentCommit(files=[name], rows=table.num_rows)
 
 
-class MQLogBatchWriter(DataSourceWriter):
+class MQLogBatchWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
         if overwrite:
             raise ValueError(
@@ -225,7 +190,7 @@ class MQLogBatchWriter(DataSourceWriter):
         )
 
 
-class MQLogStreamWriter(DataSourceStreamWriter):
+class MQLogStreamWriter(DataSourceStreamArrowWriter):
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
         self.topic = _Topic(_path_option(options))
         self.schema = schema
@@ -260,28 +225,11 @@ class MQLogPartition(InputPartition):
 def _read_segments(part: MQLogPartition):
     import pyarrow.parquet as pq
 
-    utc = datetime.timezone.utc
     for name in part.files:
         table = pq.read_table(
             os.path.join(part.path, "segments", name), columns=part.columns
         )
-        import pyarrow as pa
-
-        # only tz-AWARE columns surface as aware datetimes; NTZ stays naive
-        ts_cols = {
-            n
-            for n, typ in zip(table.schema.names, table.schema.types)
-            if pa.types.is_timestamp(typ) and typ.tz
-        }
-        for row in table.to_pylist():
-            yield tuple(
-                (
-                    row[c].replace(tzinfo=utc)
-                    if c in ts_cols and row[c] is not None and row[c].tzinfo is None
-                    else row[c]
-                )
-                for c in part.columns
-            )
+        yield from _spark_batches(table, prefer_timestamp_ntz=True)
 
 
 def _path_option(options: dict) -> str:
@@ -292,17 +240,15 @@ def _path_option(options: dict) -> str:
 
 
 def _topic_schema(topic: _Topic) -> StructType:
+    """The topic's schema, from its first segment's footer: a zone-less
+    timestamp column reads back as TimestampNTZType."""
     import pyarrow.parquet as pq
 
     entries = topic.read_manifest()
     for e in entries:
         if e["files"]:
-            s = pq.ParquetFile(
-                os.path.join(topic.segments, e["files"][0])
-            ).schema_arrow
-            return StructType(
-                [StructField(n, _arrow_to_spark(t)) for n, t in zip(s.names, s.types)]
-            )
+            s = pq.ParquetFile(os.path.join(topic.segments, e["files"][0])).schema_arrow
+            return from_arrow_schema(s, prefer_timestamp_ntz=True)
     raise ValueError(
         f"mqlog: topic '{topic.path}' has no committed segments to infer a "
         "schema from; write to it first"
@@ -315,9 +261,9 @@ def _files_between(topic: _Topic, start: int, end: int) -> list[str]:
 
 
 class MQLogBatchReader(DataSourceReader):
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, schema: StructType):
         self.topic = _Topic(_path_option(options))
-        self.columns = [f.name for f in _topic_schema(self.topic).fields]
+        self.columns = schema.fieldNames()
 
     def partitions(self):
         files = [n for e in self.topic.read_manifest() for n in e["files"]]
@@ -333,9 +279,9 @@ class MQLogBatchReader(DataSourceReader):
 class MQLogStreamReader(DataSourceStreamReader):
     """Tail the topic: offset = manifest line count (commits consumed)."""
 
-    def __init__(self, options: dict):
+    def __init__(self, options: dict, schema: StructType):
         self.topic = _Topic(_path_option(options))
-        self.columns = [f.name for f in _topic_schema(self.topic).fields]
+        self.columns = schema.fieldNames()
 
     def initialOffset(self) -> dict:
         return {"commit": 0}
@@ -371,10 +317,10 @@ class MQLogDataSource(DataSource):
         return _topic_schema(_Topic(_path_option(dict(self.options))))
 
     def reader(self, schema: StructType) -> DataSourceReader:
-        return MQLogBatchReader(dict(self.options))
+        return MQLogBatchReader(dict(self.options), schema)
 
     def streamReader(self, schema: StructType) -> DataSourceStreamReader:
-        return MQLogStreamReader(dict(self.options))
+        return MQLogStreamReader(dict(self.options), schema)
 
     def writer(self, schema: StructType, overwrite: bool) -> DataSourceWriter:
         return MQLogBatchWriter(dict(self.options), schema, overwrite)

@@ -22,9 +22,10 @@ Offset/pushdown design:
     then tasks share the decoded range and take contiguous slices, trading
     duplicate decode for parallelism, which is the right trade only at the
     small end.
-  * Executor-side reads go through pyarrow with an exact timestamp filter;
-    timestamps surface at microsecond precision (Spark's TimestampType),
-    truncating nanos exactly like the batch path (plans/util.t).
+  * Executor-side reads go through pyarrow with an exact timestamp filter
+    and hand Spark Arrow record batches, never Python rows; timestamps
+    surface at microsecond precision (Spark's TimestampType), truncating
+    nanos exactly like the batch path (plans/util.t).
 
 Options: path (required), tsColumn (default ts), numPartitions (default 4),
 minPartitions (default -1: when > numPartitions, planning targets that many
@@ -51,51 +52,27 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
-    DataType,
-    DoubleType,
-    FloatType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import StructType
 
 MS = 1_000_000  # ns per ms
+_EPOCH = datetime.datetime(1970, 1, 1)
 
 
-def _arrow_to_spark(t) -> DataType:
-    import pyarrow as pa
-
-    if pa.types.is_int64(t):
-        return LongType()
-    if pa.types.is_int32(t):
-        return IntegerType()
-    if pa.types.is_float64(t):
-        return DoubleType()
-    if pa.types.is_float32(t):
-        return FloatType()
-    if pa.types.is_string(t) or pa.types.is_large_string(t):
-        return StringType()
-    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
-        return BinaryType()
-    if pa.types.is_timestamp(t):
-        return TimestampType()
-    if pa.types.is_list(t) or pa.types.is_large_list(t):
-        return ArrayType(_arrow_to_spark(t.value_type))
-    raise ValueError(f"mq-replay: unsupported parquet type {t}")
+def _spark_batches(table, prefer_timestamp_ntz: bool = False):
+    """``table`` as an iterator of record batches in the Arrow types Spark
+    reads back for its ``from_arrow_schema`` schema: timestamps in UTC
+    microseconds (nanoseconds truncate); with ``prefer_timestamp_ntz`` a
+    zone-less timestamp stays zone-less (TimestampNTZType)."""
+    spark = from_arrow_schema(table.schema, prefer_timestamp_ntz=prefer_timestamp_ntz)
+    return iter(table.cast(to_arrow_schema(spark), safe=False).to_batches())
 
 
 def _ts_to_ms(v) -> int:
-    """Parquet timestamp statistic → epoch ms (floor)."""
+    """Parquet timestamp statistic → epoch ms (floor); naive means UTC."""
     if isinstance(v, datetime.datetime):
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=datetime.timezone.utc)
-        return int(v.timestamp() * 1000)
+        aware = v.tzinfo is not None
+        return int((v.timestamp() if aware else (v - _EPOCH).total_seconds()) * 1000)
     return int(v) // MS  # raw int64 nanos
 
 
@@ -138,14 +115,6 @@ class _ReplayMeta:
             for g, mn, mx, rows in self.groups
             if mx >= start_ms and mn < end_ms
         ]
-
-    def spark_schema(self) -> StructType:
-        return StructType(
-            [
-                StructField(n, _arrow_to_spark(t))
-                for n, t in zip(self.arrow_schema.names, self.arrow_schema.types)
-            ]
-        )
 
 
 @dataclass
@@ -225,7 +194,7 @@ def _read_replay(part: ReplayPartition):
     )
     ts = table.column(part.ts_col)
     unit_per_ms = {"ns": 1_000_000, "us": 1_000, "ms": 1}[ts.type.unit]
-    ts_int = pc.reinterpret(ts, "int64") if hasattr(pc, "reinterpret") else ts.cast("int64")
+    ts_int = ts.cast("int64")
     mask = pc.and_(
         pc.greater_equal(ts_int, part.start_ms * unit_per_ms),
         pc.less(ts_int, part.end_ms * unit_per_ms),
@@ -236,21 +205,7 @@ def _read_replay(part: ReplayPartition):
         lo = part.slice_of * n // part.n_slices
         hi = (part.slice_of + 1) * n // part.n_slices
         table = table.slice(lo, hi - lo)
-    utc = datetime.timezone.utc
-    ts_cols = {
-        name
-        for name, typ in zip(table.schema.names, table.schema.types)
-        if str(typ).startswith("timestamp")
-    }
-    for row in table.to_pylist():
-        yield tuple(
-            (
-                row[c].replace(tzinfo=utc)
-                if c in ts_cols and row[c] is not None and row[c].tzinfo is None
-                else row[c]
-            )
-            for c in part.columns
-        )
+    return _spark_batches(table)
 
 
 class _ReplayOptions:
@@ -423,7 +378,7 @@ class ReplayDataSource(DataSource):
 
     def schema(self) -> StructType:
         opts = _ReplayOptions(dict(self.options))
-        return _ReplayMeta(opts.path, opts.ts_col).spark_schema()
+        return from_arrow_schema(_ReplayMeta(opts.path, opts.ts_col).arrow_schema)
 
     def reader(self, schema: StructType) -> DataSourceReader:
         return ReplayBatchReader(dict(self.options))

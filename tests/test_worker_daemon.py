@@ -100,7 +100,6 @@ def test_sources_never_patch_the_driver(tmp_path):
 
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from pyspark.sql import Row
 
     from spark_sql_custom_mq_datasource_spark import sources
     from spark_sql_custom_mq_datasource_spark.sources.mq import MQDataSource
@@ -114,7 +113,8 @@ def test_sources_never_patch_the_driver(tmp_path):
     mqlog = MQLogDataSource({"path": str(tmp_path / "topic")})
     mqlog.streamWriter(replay.schema(), False)
     writer = mqlog.writer(replay.schema(), False)
-    writer.commit([writer.write(iter([Row(ts=datetime.datetime(2024, 1, 1))]))])
+    ts = pa.array([datetime.datetime(2024, 1, 1)], pa.timestamp("us", tz="UTC"))
+    writer.commit([writer.write(iter([pa.record_batch([ts], names=["ts"])]))])
     for src in (MQDataSource({}), replay, mqlog):
         schema = src.schema()
         src.reader(schema)
